@@ -1,5 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The driver's throughput bench: every registry query at the bench SF
+  * (`SPARK_GRAFT_SF_DIR`, default sf0.1) after an untimed warmup,
+  * printing a per-query `total_detail` line and a final `total` line.
+  *
+  * Usage: runMain graft.Bench [q1,q2,...]
+  *
+  * The optional comma-separated list runs ONLY the named queries, with
+  * the same session, warmups, store staging and timed loop — the quick
+  * before/after for one change without a full-registry run. */
 object Bench {
   /** Inter-query cache hygiene — one shared implementation
     * (SessionOps.dropCachedBlocks) so Bench, ProfileQuery and
@@ -8,6 +20,17 @@ object Bench {
     graft.ops.SessionOps.dropCachedBlocks(spark)
 
   def main(args: Array[String]): Unit = {
+    val registry = SparkEntry.queries
+    val selected: Seq[(String, (SparkSession, String) => DataFrame)] =
+      args.headOption match {
+        case None => registry.toSeq
+        case Some(list) =>
+          val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+          val unknown = names.filterNot(registry.contains)
+          require(names.nonEmpty && unknown.isEmpty,
+            s"bad query list '$list'; unknown: ${unknown.mkString(",")}")
+          names.map(n => n -> registry(n))
+      }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default to the machine's cores (capped at 32, the driver's local[32]
     // contract) so a smaller box isn't oversubscribed; the env var pins it
@@ -34,10 +57,20 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Every warmup step runs untimed and must not abort the bench, but a
+    // failure is RECORDED (warmup_errors in the detail line): a query
+    // that dies in warmup runs its timed pass cold, and that must be
+    // visible next to its number. Fatal errors are not caught.
+    val warmupErrors = scala.collection.mutable.ArrayBuffer[String]()
+    def warm(query: Option[String], phase: String)(body: => Unit): Unit =
+      try body catch { case NonFatal(e) =>
+        System.err.println(
+          s"[bench] warmup FAIL ${query.getOrElse("-")} ($phase): ${e.getMessage}")
+        warmupErrors += s"""{"query":${query.fold("null")(jsonStr)},"phase":"$phase","message":${jsonStr(String.valueOf(e.getMessage))}}"""
+      }
     // Warm the session (codegen, file-index, JIT) so the first timed query
     // doesn't absorb ~5 s of one-time startup.
-    try graft.model.Tables.events(spark, sfDir).count()
-    catch { case _: Throwable => }
+    warm(None, "session")(graft.model.Tables.events(spark, sfDir).count())
     // Per-query warmup at the smallest SF: each query compiles its codegen
     // and JITs its hot loops against sf0.001 data, so the timed sf loop
     // below measures data processing, not first-run compilation (which
@@ -47,8 +80,8 @@ object Bench {
     val warmDir = sfDir.replaceAll("sf[0-9.]+/?$", "sf0.001")
     val tw = System.nanoTime()
     if (warmDir != sfDir && new java.io.File(warmDir).isDirectory)
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => }
+      selected.foreach { case (name, fn) =>
+        warm(Some(name), "sf0.001")(fn(spark, warmDir).count())
         dropCachedBlocks(spark)
       }
     // Stage the bench SF's derived stores (pair/label/minhash/IVF/RAG/
@@ -59,8 +92,7 @@ object Bench {
     // (measured +4-7 s spikes on a cold /tmp) and the timed numbers
     // measure staging luck, not serving. Outside the warmup branch so
     // benching the smallest SF (warmDir == sfDir) stages too.
-    try SparkEntry.stageDerivedStores(spark, sfDir)
-    catch { case _: Throwable => }
+    warm(None, "stores")(SparkEntry.stageDerivedStores(spark, sfDir))
     dropCachedBlocks(spark)
     // r16 warmup extension (the late-suite inflation fix): ONE untimed
     // pass of the full registry AT THE BENCH SF, after store staging.
@@ -84,8 +116,8 @@ object Bench {
     // SPARK_GRAFT_BENCH_WARM_SF=0 reverts to the r15 warmup (the A/B dial
     // for exactly this change; default on).
     if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_SF", "1").trim != "0")
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => }
+      selected.foreach { case (name, fn) =>
+        warm(Some(name), "bench_sf")(fn(spark, sfDir).count())
         dropCachedBlocks(spark)
       }
     val warmSecs = (System.nanoTime() - tw) / 1e9
@@ -129,22 +161,20 @@ object Bench {
     // different permutation would corrupt the position-vs-query
     // diagnosis this feature exists for).
     val ShuffleSeed = """shuffle:(-?\d+)""".r
-    val (orderMode, ordered): (String, Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]) = {
-      val base = SparkEntry.queries.toSeq
+    val (orderMode, ordered): (String, Seq[(String, (SparkSession, String) => DataFrame)]) =
       orderEnv match {
-        case "registry" | "" => ("registry", base)
-        case "reverse" => ("reverse", base.reverse)
-        case "shuffle" => ("shuffle:0", new scala.util.Random(0L).shuffle(base))
+        case "registry" | "" => ("registry", selected)
+        case "reverse" => ("reverse", selected.reverse)
+        case "shuffle" => ("shuffle:0", new scala.util.Random(0L).shuffle(selected))
         case ShuffleSeed(seed) if scala.util.Try(seed.toLong).isSuccess =>
           // the guard keeps a Long-overflowing digit string (which the
           // regex accepts) on the loud-fallback path below instead of
           // crashing the run after the multi-minute warmup
-          (s"shuffle:$seed", new scala.util.Random(seed.toLong).shuffle(base))
+          (s"shuffle:$seed", new scala.util.Random(seed.toLong).shuffle(selected))
         case other =>
           System.err.println(s"[bench] bad SPARK_GRAFT_BENCH_ORDER '$other'; using registry")
-          ("registry", base)
+          ("registry", selected)
       }
-    }
     val results = ordered.map { case (name, fn) =>
       var best = Double.MaxValue
       var ok = true
@@ -190,7 +220,7 @@ object Bench {
         .forEach(g => if (g.getCollectionTime > 0) sum += g.getCollectionTime)
       sum
     }
-    val detail = s"""{"metric":"total_detail","value":$total,"unit":"sec","warmup_sec":$warmSecs,"order":"$orderMode","reps":$reps,"code_cache_peak_mb":$codePeakMb,"jit_total_ms":$jitMs,"jit_timed_ms":${jitMs - jitAtTimedStart},"gc_total_ms":$gcMs,"gc_timed_ms":${gcMs - gcAtTimedStart},"queries":$qs,"n_errors":${errored.size},"errors":$errs,"sf":"$sfDir","cpus":$cpus}"""
+    val detail = s"""{"metric":"total_detail","value":$total,"unit":"sec","warmup_sec":$warmSecs,"order":"$orderMode","reps":$reps,"code_cache_peak_mb":$codePeakMb,"jit_total_ms":$jitMs,"jit_timed_ms":${jitMs - jitAtTimedStart},"gc_total_ms":$gcMs,"gc_timed_ms":${gcMs - gcAtTimedStart},"queries":$qs,"n_errors":${errored.size},"errors":$errs,"warmup_errors":${warmupErrors.mkString("[", ",", "]")},"sf":"$sfDir","cpus":$cpus}"""
     // Full per-query artifact on disk: the driver keeps only a ~4 KB tail
     // of stdout, which hid 139 of 193 per-query times in r8 — the file
     // (repo cwd, committed with the round) carries the whole registry in
@@ -209,5 +239,17 @@ object Bench {
     println(detail)
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errored.size},"sf":"$sfDir","cpus":$cpus}""")
     spark.stop()
+  }
+
+  /** `v` as a JSON string literal. */
+  private[graft] def jsonStr(v: String): String = {
+    val b = new StringBuilder("\"")
+    v.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    b.append('"').toString
   }
 }

@@ -3,21 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The parity-critical BPE primitives shared by BOTH trainers —
-  * `MiningQueries.bpeTrainOn` (the registry's recount/delta trainer)
-  * and [[BpeIndexedTrainer]] (the LSM-indexed long-run trainer). Their
-  * contract is bit-identical greedy semantics, so the two pieces that
-  * DEFINE those semantics must exist exactly once:
-  *
-  *  - the framed non-overlapping replace that applies one merge, and
-  *  - the (cnt desc, w1, w2) winner selection off a maintained
-  *    (bg, cnt) table.
-  *
-  * Until r11 each trainer carried its own verbatim copy; an edit to one
-  * (tie-break, separator, framing) would have silently broken the
-  * cross-trainer equality the specs promise. The test oracle
-  * (BpeTestOracle) stays an INDEPENDENT implementation on purpose — it
-  * is the thing that would catch a bug here.
+/** The parity-critical BPE primitives of the distributed trainer
+  * (`MiningQueries.bpeTrainOn`): the framed non-overlapping replace that
+  * applies one merge, and the (cnt desc, w1, w2) winner selection off a
+  * maintained (bg, cnt) table — plus [[driverTrain]], the in-process
+  * twin of the same semantics for corpora under the driver gate. The
+  * test oracle (BpeTestOracle) stays an INDEPENDENT implementation on
+  * purpose — it is the thing that would catch a bug here.
   */
 object BpeOps {
 
@@ -165,97 +157,4 @@ object BpeOps {
     java.util.Arrays.compareUnsigned(
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Recount-vs-indexed trainer pick, wired to the MEASURED crossover
-    * artifacts (BPE_CROSSOVER_r12{,_sf10}.json and
-    * BPE_CROSSOVER_r13_{sf100,sf250}.json). The r12 story — indexed
-    * rounds cost a fixed ~4–7 s while recount passes grow ~0.55 s/GB,
-    * extrapolated break-even ~10 GiB — was REFUTED the first time a
-    * cell past 10 GiB was measured: at 21 GB (sf100, k=12) recount
-    * 129.9 s vs indexed 164.6 s, and at 52 GB (25× sf10 docs, k=12)
-    * recount 188.9 s vs indexed 292.3 s. Both trainers are near-linear
-    * in corpus bytes at this scale, and the indexed trainer's SLOPE is
-    * the worse one (~3.3 s/GB vs ~1.9 s/GB across the 21→52 GB
-    * segment): its "O(affected-slice)" round cost is itself linear in
-    * corpus bytes, because the merged bigram's postings slice grows
-    * with the corpus. A fixed overhead can be amortized away; a worse
-    * slope cannot — so there is NO byte crossover, measured or
-    * extrapolatable, and the threshold is the off-switch. The indexed
-    * trainer remains available via an explicit `corpusBytes` override
-    * (its LSM store is still the right shape for INCREMENTAL
-    * re-training, which no measured cell exercises).
-    * BpeIndexedTrainerSpec's gate test asserts the committed artifacts
-    * support this direction (indexed slower at every measured cell,
-    * slope ordering included) and that the auto path can never reach
-    * the dominated trainer. */
-  val TRAINER_CROSSOVER_BYTES: Long = Long.MaxValue
-
-  /** True when a k-merge training run over `corpusBytes` should take the
-    * LSM postings-indexed trainer instead of the recount/delta trainer. */
-  def pickIndexedTrainer(corpusBytes: Long): Boolean =
-    corpusBytes >= TRAINER_CROSSOVER_BYTES
-
-  /** k-merge BPE training with the execution REGIME picked by the
-    * measured crossover — the actual wiring of [[pickIndexedTrainer]],
-    * so a caller that just wants "train k merges on this corpus" never
-    * re-derives the regime choice:
-    *
-    *  - below [[TRAINER_CROSSOVER_BYTES]]: the recount/delta trainer —
-    *    cheaper at EVERY measured cell from 0.2 GB to 52 GB
-    *    (BPE_CROSSOVER_r12{,_sf10}.json, BPE_CROSSOVER_r13_{sf100,
-    *    sf250}.json), and since r13 the threshold is `Long.MaxValue`
-    *    (the 21/52 GB cells showed the indexed trainer's slope is the
-    *    worse one — no byte crossover exists);
-    *  - at/above it (reachable only via an explicit `corpusBytes`
-    *    override): [[BpeIndexedTrainer.train]] against `scratchRoot` —
-    *    kept for incremental re-training shapes, not for from-scratch
-    *    wins.
-    *
-    * `corpusBytes` < 0 (the default) derives the size from the
-    * optimizer's estimate for the corpus plan — the same estimator the
-    * LshJoin broadcast gate trusts — EXCEPT when the plan carries joins
-    * or generators: size-in-bytes estimates MULTIPLY through those
-    * nodes, so a small corpus behind a join/explode-bearing plan can be
-    * grossly overestimated and (under any finite threshold) silently
-    * misrouted to the dominated indexed trainer (bit-equal either
-    * way, but a large perf regression). For such plans the estimate is
-    * clamped to the sum of the plan's LEAF relation sizes — an upper
-    * bound on corpus bytes actually read, immune to the multiplication.
-    * Pass an explicit value when the caller knows better (a catalog
-    * stat at 100 TB). Returns
-    * (merges, final rewritten corpus). Both regimes are bit-equal
-    * (BpeTrainerSpec / BpeIndexedTrainerSpec 17-case equality); the
-    * dispatch itself is spec-pinned in both directions via forced byte
-    * counts. */
-  def trainAuto(s: org.apache.spark.sql.SparkSession, corpus0: DataFrame,
-      k: Long, scratchRoot: String, corpusBytes: Long = -1L)
-      : (DataFrame, DataFrame) = {
-    val bytes =
-      if (corpusBytes >= 0L) corpusBytes
-      else estimateBytes(corpus0)
-    if (pickIndexedTrainer(bytes)) {
-      val (m, c, _, _) = BpeIndexedTrainer.train(s, corpus0, k, scratchRoot)
-      (m, c)
-    } else {
-      val (m, c, _) = graft.queries.MiningQueries.bpeTrainOn(s, corpus0, k)
-      (m, c)
-    }
-  }
-
-  /** Corpus-byte estimate for [[trainAuto]]'s regime dispatch: the
-    * optimizer's size-in-bytes, clamped to the sum of leaf relation
-    * sizes whenever the plan contains a join or generator (see the
-    * trainAuto scaladoc for why the raw estimate misroutes there). */
-  private[graft] def estimateBytes(corpus0: DataFrame): Long = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join}
-    val plan = corpus0.queryExecution.optimizedPlan
-    val raw = plan.stats.sizeInBytes
-    val multiplicative =
-      plan.collectFirst { case j: Join => j; case g: Generate => g }.nonEmpty
-    val est =
-      if (!multiplicative) raw
-      else raw.min(
-        plan.collectLeaves().map(_.stats.sizeInBytes).foldLeft(BigInt(0))(_ + _))
-    est.min(BigInt(Long.MaxValue)).toLong
-  }
 }

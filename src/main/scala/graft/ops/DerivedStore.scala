@@ -107,10 +107,7 @@ object DerivedStore {
       .take(4).map(b => f"$b%02x").mkString
   }
 
-  /** private[ops]: also the store-swap cleanup in [[BpeIndexedTrainer]] —
-    * one implementation of filesystem-deletion semantics, not two that
-    * drift. */
-  private[ops] def deleteRecursively(f: File): Unit = {
+  private def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit
   }

@@ -128,8 +128,7 @@ object GraphOps {
     // Above the gate — the 100 TB case, where the near-dup graph is
     // terabyte-class — the distributed loop below is unchanged.
     val driverMax = math.min(
-      try sess.conf.get(CC_DRIVER_MAX_KEY, CC_DRIVER_MAX_DEFAULT.toString).toLong
-      catch { case _: Throwable => CC_DRIVER_MAX_DEFAULT },
+      SessionOps.graftConf(sess, CC_DRIVER_MAX_KEY, CC_DRIVER_MAX_DEFAULT)(_.toLong),
       SessionOps.broadcastBudget(sess, CC_DRIVER_MAX_DEFAULT))
     if (edgeCount * CC_EDGE_BYTES <= driverMax) {
       // driverComponents is orientation-agnostic (union(a,b) == union(b,a)),
@@ -255,8 +254,7 @@ object GraphOps {
         .coalesce(n))
     val edgeCount = sym.count()
     val driverMax = math.min(
-      try sess.conf.get(CC_DRIVER_MAX_KEY, CC_DRIVER_MAX_DEFAULT.toString).toLong
-      catch { case _: Throwable => CC_DRIVER_MAX_DEFAULT },
+      SessionOps.graftConf(sess, CC_DRIVER_MAX_KEY, CC_DRIVER_MAX_DEFAULT)(_.toLong),
       SessionOps.broadcastBudget(sess, CC_DRIVER_MAX_DEFAULT))
     if (edgeCount * CC_EDGE_BYTES <= driverMax) {
       val edges = sym.collect().map(r => (r.getLong(0), r.getLong(1)))

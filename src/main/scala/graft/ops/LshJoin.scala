@@ -227,17 +227,11 @@ object LshJoin {
       // session-wide broadcast disable — the payload-side gate below
       // decides as before.
       val s = ta.sparkSession
-      // the pairs-side broadcast is an r14 join contract like the rest:
-      // the A/B "no join contracts" arm must fall through to the unhinted
-      // attach below, or the toggle's wall-clock attribution is muddied
-      // wherever pairsFit holds (ADVICE r14)
-      val abOff = graft.ops.SessionOps.abFlag(
-        s, graft.ops.SessionOps.AB_NO_JOIN_CONTRACTS)
       val bcastOk = s.sessionState.conf.autoBroadcastJoinThreshold > 0
       val pairsFit = plan.estBucketPairs.exists(p =>
         p * PAIR_ID_BYTES <= graft.ops.SessionOps.broadcastBudget(
           s, PAIRS_BROADCAST_CAP).toDouble)
-      if (!abOff && bcastOk && pairsFit) {
+      if (bcastOk && pairsFit) {
         val pairs = plan.candidates
         val pa = ta.join(broadcast(pairs), "a_id")
         val pb = tb.join(broadcast(pairs), "b_id")
@@ -330,9 +324,7 @@ object LshJoin {
     * (ADVICE r13): an explicit hint must not overrule an operator who
     * turned broadcasting off for a small driver. */
   private[graft] def attachSide(t: DataFrame, bytes: BigInt): DataFrame =
-    if (graft.ops.SessionOps.abFlag(
-      t.sparkSession, graft.ops.SessionOps.AB_NO_JOIN_CONTRACTS)) t
-    else if (t.sparkSession.sessionState.conf.autoBroadcastJoinThreshold > 0 &&
+    if (t.sparkSession.sessionState.conf.autoBroadcastJoinThreshold > 0 &&
       bytes <= BigInt(graft.ops.SessionOps.broadcastBudget(
         t.sparkSession, PAYLOAD_BROADCAST_CAP))) broadcast(t)
     else t.hint("SHUFFLE_HASH")

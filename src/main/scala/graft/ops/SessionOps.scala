@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-level utilities shared by queries and the measurement tools —
@@ -13,7 +15,7 @@ object SessionOps {
   /** Best-effort release of a SUPERSEDED materialization (a localCheckpoint
     * or cache whose successor is already eagerly materialized) — the one
     * implementation of the swallow-everything unpersist the iterative
-    * operators (BPE trainers, CC loop, compaction swaps) all need, so a
+    * operators (BPE trainer, CC loop, store compaction) all need, so a
     * change to the release semantics happens in one place. Failures are
     * ignored by design: the blocks are garbage either way, and a release
     * must never fail the computation it is cleaning up after.
@@ -88,6 +90,18 @@ object SessionOps {
   private lazy val log =
     org.apache.logging.log4j.LogManager.getLogger(getClass)
 
+  /** The value of the `spark.graft.*` conf `key`, read through `parse`:
+    * an unset key yields `default`, and a set value `parse` rejects
+    * throws IllegalArgumentException naming the key and the value — a
+    * typo'd dial must fail the run, not silently take the default
+    * branch. */
+  def graftConf[T](s: SparkSession, key: String, default: T)(parse: String => T): T =
+    s.conf.getOption(key).fold(default) { v =>
+      try parse(v)
+      catch { case NonFatal(e) =>
+        throw new IllegalArgumentException(s"malformed conf $key='$v'", e) }
+    }
+
   /** Conf key: route the iterative loops' lineage-truncation checkpoints
     * through RELIABLE (directory-backed) `Dataset.checkpoint()` instead
     * of `localCheckpoint()`. */
@@ -98,7 +112,7 @@ object SessionOps {
   val RELIABLE_DIR_KEY = "spark.graft.checkpoint.dir"
 
   /** Lineage-truncation checkpoint with a conf-switched durability mode —
-    * the ONE call the iterative operators (CC loop, BPE trainers) make,
+    * the ONE call the iterative operators (CC loop, BPE trainer) make,
     * so the cluster-durability decision is a config, not a code edit.
     *
     *  - default: `localCheckpoint()` — blocks live on executors. Fast
@@ -123,9 +137,7 @@ object SessionOps {
     * checkpoint files on disk. */
   def truncate(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    val reliable =
-      try s.conf.get(RELIABLE_KEY, "false").toBoolean
-      catch { case _: Throwable => false }
+    val reliable = graftConf(s, RELIABLE_KEY, false)(_.toBoolean)
     // SERIALIZED storage: the default MEMORY_AND_DISK materializes the
     // frame as deserialized row objects (MemoryStore.putIteratorAsValues
     // unrolls per-row UnsafeRow copies) — at pair-cardinality frames the
@@ -221,34 +233,6 @@ object SessionOps {
     math.max(s.sessionState.conf.numShufflePartitions,
       math.min(4096L, n).toInt)
   }
-
-  /** A/B instrumentation flag (dev-only): `true` turns the named
-    * `spark.graft.ab.*` toggle on. The toggles exist solely so a bench
-    * session can attribute a wall-clock delta to one structural change
-    * (r13 verdict item 5: the 19% sf0.1 drift vs the scale contracts)
-    * without a git bisect; production and the driver never set them. */
-  def abFlag(s: SparkSession, key: String): Boolean =
-    try s.conf.get(key, "false").toBoolean catch { case _: Throwable => false }
-
-  /** Conf key: disable the r13 shared-subtree staging checkpoints
-    * ([[stage]] becomes identity) — one side of the bench A/B. */
-  val AB_NO_STAGE = "spark.graft.ab.noStageCheckpoint"
-
-  /** Conf key: disable the r13 verify-attach join contracts (LshJoin
-    * .attachSide / VectorQueries.attachVerify fall back to unhinted
-    * joins) — the other side of the bench A/B. */
-  val AB_NO_JOIN_CONTRACTS = "spark.graft.ab.noJoinContracts"
-
-  /** [[truncate]] for SHARED-SUBTREE STAGING (the r13 reuse-miss fixes:
-    * a narrow frame consumed by several plan branches is materialized
-    * once instead of re-executing per branch). Identical to truncate in
-    * every mode except under the [[AB_NO_STAGE]] bench toggle, which
-    * reverts these seven sites — and ONLY these; the iterative loops'
-    * correctness-bearing checkpoints (CC, BPE, kcore) and the kNN pair
-    * materialization keep truncating — to the pre-r13 recompute shape
-    * so the staging's sf0.1 price is measurable in isolation. */
-  def stage(df: DataFrame): DataFrame =
-    if (abFlag(df.sparkSession, AB_NO_STAGE)) df else truncate(df)
 
   /** Nudge Spark's ContextCleaner between bounded-disk work chunks: the
     * cleaner deletes a chunk's shuffle files only after the JVM garbage

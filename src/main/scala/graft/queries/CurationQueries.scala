@@ -109,7 +109,7 @@ object CurationQueries extends QueryPack {
     * the quality filter's predicate (3.9 s). The native kernel is a
     * microsecond loop per evaluation, so optimizer duplication is
     * harmless. */
-  private[graft] def withRepetitionStats(df: DataFrame): DataFrame = {
+  private def withRepetitionStats(df: DataFrame): DataFrame = {
     val rs = graft.expressions.TextHash.repetitionStats(col("text"))
     df.withColumn("n_tokens", rs.getField("n_tokens"))
       .withColumn("top_unigram_frac",
@@ -123,7 +123,7 @@ object CurationQueries extends QueryPack {
 
   /** Training docs sharing at least one shingle hash with the held-out
     * benchmark set — the decontamination drop list. */
-  private[graft] def contaminatedIds(s: SparkSession, dir: String): DataFrame = {
+  private def contaminatedIds(s: SparkSession, dir: String): DataFrame = {
     val sh = docs(s, dir).select(
       col("doc_id"),
       graft.expressions.TextHash.shingleHashes(col("text")).as("sh"))

@@ -587,7 +587,7 @@ object JoinQueries extends QueryPack {
       // (the r12 "cache is a no-op" A/B read unpopulated metrics; see
       // DupSubtreeGateSpec). Checkpointing the tiny frame makes one pass
       // structural rather than an optimizer bet.
-      val cells = graft.ops.SessionOps.stage(
+      val cells = graft.ops.SessionOps.truncate(
         Tables.events(s, dir)
           .groupBy((col("user_id") % 2 === 0).as("is_a"), col("event_type"))
           .agg(count(lit(1)).as("o")))

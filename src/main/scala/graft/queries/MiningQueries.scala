@@ -153,7 +153,7 @@ object MiningQueries extends QueryPack {
     // term, the same s0+s1+s2 add order (a term the doc lacks
     // contributes +0.0 exactly, as the old coalesce(null) did).
     val tk = TextOps.tokens(col("text"))
-    val f = graft.ops.SessionOps.stage(
+    val f = graft.ops.SessionOps.truncate(
       docs(s, dir).select(
         Seq(col("doc_id"), size(tk).cast("long").as("dl")) ++
           QUERY_TERMS.indices.map(i =>
@@ -257,9 +257,10 @@ object MiningQueries extends QueryPack {
     * once per round (the map-only instr prefilter — a bytes-level
     * substring test, no tokenize/explode/agg, vocab-bounded shuffle);
     * removing that scan too needs a maintained bigram→postings index
-    * probed by the winner (the incremental-LSH pattern: file-pruned
-    * keyed probe + partitioned upsert). Documented in BENCH_NOTES as
-    * the remaining step; the per-round CPU is already the cheap kind.
+    * probed by the winner. That design was built and measured SLOWER at
+    * every cell up to 52 GB (BPE_CROSSOVER_*.json): the winner's
+    * postings slice grows with the corpus too, at a worse slope. The
+    * per-round CPU here is already the cheap kind.
     *
     * Counts algebra = recount, exactly: a doc the rewrite does not
     * change contributes a zero delta, and an affected doc's new bigram
@@ -299,9 +300,8 @@ object MiningQueries extends QueryPack {
     // expansion fits (or when the compressed floor is already over);
     // only the boundary band pays the one-pass measurement.
     val driverMaxConf = math.min(
-      try s.conf.get(graft.ops.BpeOps.BPE_DRIVER_MAX_KEY,
-        graft.ops.BpeOps.BPE_DRIVER_MAX_DEFAULT.toString).toLong
-      catch { case _: Throwable => graft.ops.BpeOps.BPE_DRIVER_MAX_DEFAULT },
+      graft.ops.SessionOps.graftConf(s, graft.ops.BpeOps.BPE_DRIVER_MAX_KEY,
+        graft.ops.BpeOps.BPE_DRIVER_MAX_DEFAULT)(_.toLong),
       graft.ops.SessionOps.broadcastBudget(
         s, graft.ops.BpeOps.BPE_DRIVER_MAX_DEFAULT))
     // r16 (the r15 verdict's noted hole): driverTrain is O(k · corpus) —
@@ -370,8 +370,8 @@ object MiningQueries extends QueryPack {
       val (w1, w2, cnt) = topOpt.get
       merges += ((step, w1, w2, cnt))
       // The framed non-overlapping replace and the winner selection
-      // above are the parity-critical semantics shared with
-      // BpeIndexedTrainer — one implementation, graft.ops.BpeOps.
+      // above are the parity-critical semantics — one implementation,
+      // graft.ops.BpeOps.
       val rewritten = graft.ops.BpeOps.applyMerge(col("text"), w1, w2).as("text")
       val oldCorpus = corpus
       val oldCounts = counts
@@ -411,7 +411,7 @@ object MiningQueries extends QueryPack {
         // checkpoint always; counts either delta-checkpointed or a lazy
         // recount reading only the NEW corpus), so the previous round's
         // checkpoints are dead — release them now instead of pinning
-        // O(k) superseded block sets (BpeIndexedTrainer does the same).
+        // O(k) superseded block sets.
         liveCkpts.foreach(graft.ops.SessionOps.releaseQuiet)
         liveCkpts = Seq(corpus) ++ (if (newCountsCkpt) Seq(counts) else Nil)
       }
@@ -558,7 +558,7 @@ object MiningQueries extends QueryPack {
       // narrow columns; checkpoint it once and everything (counts, min,
       // admit) derives from the checkpoint: one corpus pass + one
       // tokenize, structural.
-      val d = graft.ops.SessionOps.stage(
+      val d = graft.ops.SessionOps.truncate(
         docs(s, dir).select(col("doc_id"), col("source"),
           size(TextOps.tokens(col("text"))).cast("long").as("n_tokens")))
       val counts = d.groupBy(col("source")).agg(sum(col("n_tokens")).as("n_src"))
@@ -753,7 +753,7 @@ object MiningQueries extends QueryPack {
       // itself stays separate from `bi` deliberately: unigram counts
       // include each doc's final token, which no bigram-left position
       // covers, so the two passes are algorithmically distinct.
-      val uni = graft.ops.SessionOps.stage(
+      val uni = graft.ops.SessionOps.truncate(
         docs(s, dir)
           .select(explode(toks).as("w1"))
           .select(xxhash64(col("w1")).as("w1h"))
@@ -848,7 +848,7 @@ object MiningQueries extends QueryPack {
       // NOT widened (r15 measured negative, reverted): spreadIfNarrow on
       // this token checkpoint regressed 0.60 → 1.04 s in a 6-rep A/B —
       // same verdict as quality_lm_score's bigram checkpoint above.
-      val toks = graft.ops.SessionOps.stage(
+      val toks = graft.ops.SessionOps.truncate(
         docs(s, dir)
           .select(col("doc_id"),
             explode(TextOps.distinctTokens(col("text"))).as("t")))

@@ -107,7 +107,7 @@ object SeriesQueries extends QueryPack {
       // passes measured, r13 gate). Checkpoint the (user, day) frame —
       // bounded by users × days, the standard scaffold staging — so one
       // pass is structural.
-      val daily = graft.ops.SessionOps.stage(
+      val daily = graft.ops.SessionOps.truncate(
         events(s, dir)
           .groupBy(col("user_id"), to_date(col("ts")).as("day"))
           .agg(max_by(col("value"), struct(col("ts"), col("event_id"))).as("close")))

@@ -1024,7 +1024,7 @@ object TextQueries extends QueryPack {
       // inverted-index build every IR stack materializes — so the corpus
       // pass is structural. n_docs stays its own count-only scan (not
       // derivable from tf: zero-token docs carry no tf rows).
-      val tf = graft.ops.SessionOps.stage(
+      val tf = graft.ops.SessionOps.truncate(
         docs(s, dir)
           .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("term"))
           .groupBy(col("doc_id"), col("term"))
@@ -1197,8 +1197,8 @@ object TextQueries extends QueryPack {
     * bucket), one row per document per band: char-4-grams hashed, the
     * l·r-member minhash family evaluated per document, each band's r
     * minhashes concatenated into its bucket key. Split out so the
-    * bucket-population diagnostics (tools.FuzzyBucketDiag) can measure
-    * candidate volume without building a single pair. */
+    * pair-work accounting (tools.PairWork) can measure candidate volume
+    * without building a single pair. */
   private[graft] def fuzzyBandsFrame(
       s: SparkSession, d0: DataFrame, r: Int, l: Int): DataFrame = {
     // spreadIfNarrow (r15): the L·r-minhash signature pass is the

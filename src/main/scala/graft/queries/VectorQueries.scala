@@ -275,10 +275,8 @@ object VectorQueries extends QueryPack {
     * driver tests stays single-chunk (sf0.1's estimate is ~90 MB); the
     * fourth probe decade (26 GB of designed pairs) splits into ~7. */
   private[graft] def knnChunks(s: SparkSession, estPairBytes: Long, l: Int): Int = {
-    val per =
-      try s.conf.get("spark.graft.knn.chunkPairBytes",
-        (4L * 1024 * 1024 * 1024).toString).toLong
-      catch { case _: Throwable => 4L * 1024 * 1024 * 1024 }
+    val per = graft.ops.SessionOps.graftConf(
+      s, "spark.graft.knn.chunkPairBytes", 4L * 1024 * 1024 * 1024)(_.toLong)
     math.min(l.toLong, math.max(1L, (estPairBytes + per - 1) / per)).toInt
   }
 
@@ -321,11 +319,6 @@ object VectorQueries extends QueryPack {
     // EnsureRequirements would add at session width — same shuffle
     // count, pair-proportional parallelism (the output, and with it the
     // downstream checkpoint/top-k partitioning, inherits nPart)
-    if (graft.ops.SessionOps.abFlag(
-      e.sparkSession, graft.ops.SessionOps.AB_NO_JOIN_CONTRACTS))
-      return cand.join(ea, "a_id").join(eb, "b_id")
-        .select(col("a_id"), col("b_id"),
-          cosineSim(col("a_emb"), col("b_emb")).as("sim"))
     val bcastOk =
       e.sparkSession.sessionState.conf.autoBroadcastJoinThreshold > 0
     val pairsFit = estPairBytes <= graft.ops.SessionOps.broadcastBudget(

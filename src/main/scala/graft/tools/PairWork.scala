@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * An adaptive-LSH operator's designed cost is Θ(pairs), and pairs =
   * Σ_buckets sz·(sz−1)/2 over the banded frame — computable with ONE
   * narrow aggregation over the band keys, no pair ever materialized
-  * (the FuzzyBucketDiag trick, shared here so the ScalingProbe and the
-  * diagnostics use the same arithmetic). Judging such an operator's
+  * (shared here so every ScalingProbe row uses the same arithmetic).
+  * Judging such an operator's
   * wall-clock growth against the RAW data ratio flags its own design
   * law: at s* = 0.9 the band count L grows ~n^0.22, so a PERFECT
   * execution grows ~16.6× per 10× data, over the probe's 1.6 × 10

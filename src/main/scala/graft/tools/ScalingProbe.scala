@@ -321,7 +321,7 @@ object ScalingProbe {
       } catch {
         case e: Throwable =>
           println(f"$q%-28s ERROR ${String.valueOf(e.getMessage).take(60)}")
-          jsonRows += s"""{"query":"$q","error":${ujsonStr(String.valueOf(e.getMessage).take(200))}}"""
+          jsonRows += s"""{"query":"$q","error":${graft.Bench.jsonStr(String.valueOf(e.getMessage).take(200))}}"""
       }
     }
     if (flagged.nonEmpty)
@@ -339,8 +339,4 @@ object ScalingProbe {
     spark.stop()
     if (flagged.nonEmpty) sys.exit(1)
   }
-
-  private def ujsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\n\\r\\t]", " ") + "\""
 }

@@ -9,10 +9,9 @@ import graft.ops.TextOps
   * from-scratch RECOUNT trainer (each round recounts ALL bigrams of the
   * full corpus, picks (cnt desc, w1, w2) top-1, applies the framed
   * non-overlapping replace) — the shape the registry ran through r10.
-  * The maintained (BpeTrainerSpec), indexed (BpeIndexedTrainerSpec),
-  * and randomized (BpePropertySpec) suites all assert bit-equality
-  * against this one definition, so the contract cannot drift between
-  * copies. */
+  * The fixture (BpeTrainerSpec) and randomized (BpePropertySpec)
+  * suites both assert bit-equality against this one definition, so the
+  * contract cannot drift between copies. */
 object BpeTestOracle {
 
   def corpusDF(spark: SparkSession, texts: Seq[String]): DataFrame = {

@@ -88,6 +88,18 @@ class DedupGraphSpec extends AnyFunSuite {
       "per-doc triangle participation must match the standalone query")
   }
 
+  test("minhashPairsStore holds DISTINCT (a_id, b_id) pairs at sf0.01") {
+    // lsh_recall_eval counts hits with ONE left join of the truth pairs
+    // against this store: a duplicated store pair would fan out and
+    // inflate both n_truth and n_hit, so the first-collision-band dedup
+    // that keeps the store distinct is pinned here.
+    val pairs = TextQueries.minhashPairsStore(spark, "/root/testdata/sf0.01")
+    val n = pairs.count()
+    assert(n > 0, "sf0.01 must yield minhash pairs for this pin to bite")
+    assert(n == pairs.select("a_id", "b_id").distinct().count(),
+      "minhash pair store carries duplicate (a_id, b_id) rows")
+  }
+
   test("graph_kcore: equals the exact converged 3-core with its degrees") {
     val got = q("graph_kcore").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

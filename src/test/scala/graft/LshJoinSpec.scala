@@ -293,7 +293,7 @@ class LshJoinSpec extends AnyFunSuite {
       s"meet width must scale past the session constant ($session): $widths")
   }
 
-  test("pairs-side broadcast honors the AB no-join-contracts arm (ADVICE r14)") {
+  test("pairs-side broadcast: an in-cap pair set takes the broadcast hint") {
     import org.apache.spark.sql.functions._
     val cand = spark.range(5).select(
       col("id").as("a_id"), (col("id") + 100L).as("b_id"))
@@ -308,15 +308,8 @@ class LshJoinSpec extends AnyFunSuite {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
           h.hints.strategy.map(_.toString).getOrElse("")
       }
-    val on = hints(graft.ops.LshJoin.verifyJoin(plan, ta, tb))
-    assert(on.exists(_.toUpperCase.contains("BROADCAST")),
-      s"in-cap pair set must take the pairs-side broadcast: $on")
-    val key = graft.ops.SessionOps.AB_NO_JOIN_CONTRACTS
-    spark.conf.set(key, "true")
-    try {
-      val off = hints(graft.ops.LshJoin.verifyJoin(plan, ta, tb))
-      assert(!off.exists(_.toUpperCase.contains("BROADCAST")),
-        s"AB no-join-contracts arm must fall through to the unhinted attach: $off")
-    } finally spark.conf.set(key, "false")
+    val got = hints(graft.ops.LshJoin.verifyJoin(plan, ta, tb))
+    assert(got.exists(_.toUpperCase.contains("BROADCAST")),
+      s"in-cap pair set must take the pairs-side broadcast: $got")
   }
 }

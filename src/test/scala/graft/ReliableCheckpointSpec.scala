@@ -7,7 +7,7 @@ import graft.ops.SessionOps
 
 /** The conf-switched reliable-checkpoint mode (SessionOps.truncate):
   * `spark.graft.checkpoint.reliable=true` routes every iterative-loop
-  * lineage truncation (CC loop, both BPE trainers) through a
+  * lineage truncation (CC loop, the BPE trainer) through a
   * directory-backed `Dataset.checkpoint()` — the executor-loss-safe
   * plan for a real cluster, where localCheckpoint's executor-resident
   * blocks die with the executor and kill the job. Asserted, not

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.SessionOps
 
 /** `SessionOps.releaseQuiet` is the one release implementation every
-  * iterative operator (BPE trainers, CC loop, compaction swaps) leans
+  * iterative operator (BPE trainer, CC loop, store compaction) leans
   * on for its per-round heap-pressure story — so the release must be
   * PROVEN against `sc.getPersistentRDDs`, not assumed. r11 shipped
   * `Dataset.unpersist` alone, which is a no-op for `localCheckpoint`
@@ -18,6 +18,16 @@ class SessionOpsSpec extends AnyFunSuite {
 
   private def persistentIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("a malformed spark.graft.* value fails loudly, naming key and value") {
+    spark.conf.set(SessionOps.RELIABLE_KEY, "yes")
+    val e =
+      try intercept[IllegalArgumentException](
+        SessionOps.truncate(spark.range(10).toDF("x")))
+      finally spark.conf.unset(SessionOps.RELIABLE_KEY)
+    assert(e.getMessage.contains(SessionOps.RELIABLE_KEY) &&
+      e.getMessage.contains("yes"), e.getMessage)
+  }
 
   test("releaseQuiet frees a localCheckpoint's persisted RDD") {
     val before = persistentIds
