@@ -179,9 +179,17 @@ case class JaccardSimilarity(left: Expression, right: Expression,
   * `inter + min(remaining_a, remaining_b) < needed`, i.e. when even a
   * full match of every remaining element of the shorter side cannot
   * reach `needed` — no false aborts. Empty-union pairs take the scalar
-  * definition jac = 0.0 (so the predicate is `0.0 >= t`). */
+  * definition jac = 0.0 (so the predicate is `0.0 >= t`).
+  *
+  * `t` must be a finite value in [0, 1]: a NaN threshold fails every
+  * comparison inside [[JaccardGeqSorted.neededInter]], so `needed`
+  * would come out as 0 and the predicate would silently hold for every
+  * non-empty pair, while `jaccard_sim_sorted(a, b) >= NaN` holds for
+  * none. */
 case class JaccardGeqSorted(left: Expression, right: Expression, t: Double)
     extends BinaryExpression {
+  require(t >= 0.0 && t <= 1.0,
+    s"jaccard_geq_sorted threshold must be a finite value in [0, 1], got $t")
 
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = left.nullable || right.nullable

@@ -33,24 +33,12 @@ object Tables {
     * builds a fresh file index and re-reads footers for schema inference on
     * every call, which a 95-query batch pays 95 times over. Reusing the
     * resolved `DataFrame` shares the listed `FileIndex` inside its
-    * `LogicalRelation` across all downstream plans. Keyed WEAKLY by session
-    * so stopped test sessions (and their file indexes) stay collectable. */
-  private val scanCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
+    * `LogicalRelation` across all downstream plans. */
+  private val scanCache = new graft.ops.SessionOps.PerSession[(String, String), DataFrame]
 
   private def cached(spark: SparkSession, dir: String, key: String)(
-      build: => DataFrame): DataFrame = {
-    val perSession = scanCache.synchronized {
-      var m = scanCache.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty
-        scanCache.put(spark, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate((dir, key), build)
-  }
+      build: => DataFrame): DataFrame =
+    scanCache(spark).getOrElseUpdate((dir, key), build)
 
   /** Maximum |value| over a bounded SAMPLE of a numeric column (the first
     * 1024 non-null values), None when the column holds no non-null rows.

@@ -1,6 +1,12 @@
 package graft.ops
 
 import java.io.File
+import java.nio.file.{Files, NoSuchFileException}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once/serve-many staging for DERIVED parquet tables (near-dup
   * pair graph, cluster labels, IVF+PQ index, BM25 score table): the
@@ -35,6 +41,21 @@ import java.io.File
   * a pure existence check and a published version is immutable.
   * Superseded versions are garbage-collected best-effort (open handles
   * keep a concurrent reader safe on POSIX).
+  *
+  * '''Relation cache.''' [[load]] returns the RESOLVED relation of the
+  * published version and reuses it across a session's queries: a fresh
+  * `read.parquet` re-lists every partition directory and runs a
+  * schema-inference job, which on the RAG point lookup cost about a
+  * quarter of the request. The cache follows `Tables.scanCache`: weakly
+  * keyed by session, one entry per (store root, SF) holding only the
+  * latest version. An entry is reused only while its version path AND
+  * the stamp of the version's marker files — `fileKey` plus mtime of
+  * `_SUCCESS`, and of `_MAINT` when present — still match. A
+  * delete-and-rebuild at the same version path writes a new `_SUCCESS`;
+  * in-place `StreamOps.ivfMaintainBatch` maintenance renames a new
+  * `_MAINT` into place. Either changes the stamp, so the next `load`
+  * re-resolves instead of serving a stale file listing. A build in this
+  * process always replaces the entry.
   */
 object DerivedStore {
 
@@ -112,6 +133,46 @@ object DerivedStore {
     f.delete(): Unit
   }
 
+  /** A resolved relation of one published version, with the marker
+    * stamp it was resolved under. */
+  private final case class Resolved(version: String,
+                                    stamp: Seq[(String, AnyRef, FileTime)],
+                                    df: DataFrame)
+
+  /** The latest resolved relation per (session, SF store directory). */
+  private val relationCache = new SessionOps.PerSession[String, Resolved]
+
+  /** What a reader can tell of a version's contents without listing it:
+    * (`fileKey`, mtime) of each marker file present. */
+  private def stamp(version: File): Seq[(String, AnyRef, FileTime)] =
+    Seq("_SUCCESS", "_MAINT").flatMap { m =>
+      try {
+        val a = Files.readAttributes(new File(version, m).toPath,
+          classOf[BasicFileAttributes])
+        Some((m, a.fileKey(), a.lastModifiedTime()))
+      } catch { case _: NoSuchFileException => None }
+    }
+
+  /** [[serve]], then the published version as a relation resolved once
+    * per session (see "Relation cache" above). Parameters as [[serve]]. */
+  def load(spark: SparkSession, storeRoot: String, dir: String,
+           sourceTable: String, fingerprint: String)(
+      build: String => Unit): DataFrame = {
+    val (path, built) = publish(storeRoot, dir, sourceTable, fingerprint)(build)
+    val sfRoot = new File(path).getParent
+    val perSession = relationCache(spark)
+    // Stamp BEFORE resolving: a marker that changes in between leaves the
+    // entry with the older stamp, so the next load re-resolves.
+    val st = stamp(new File(path))
+    perSession.get(sfRoot) match {
+      case Some(r) if !built && r.version == path && r.stamp == st => r.df
+      case _ =>
+        val df = spark.read.parquet(path)
+        perSession.put(sfRoot, Resolved(path, st, df))
+        df
+    }
+  }
+
   /** Serve the derived table rooted at `storeRoot/<sf>/`, building it
     * first if no published version matches (fingerprint, source mtime).
     * `build` writes the table to the temp path it is given (caller
@@ -128,12 +189,20 @@ object DerivedStore {
     *                    keys the logic-staleness component
     */
   def serve(storeRoot: String, dir: String, sourceTable: String,
-            fingerprint: String)(build: String => Unit): String = {
+            fingerprint: String)(build: String => Unit): String =
+    publish(storeRoot, dir, sourceTable, fingerprint)(build)._1
+
+  /** [[serve]]'s body: the published version path, and whether this call
+    * built it. */
+  private def publish(storeRoot: String, dir: String, sourceTable: String,
+                      fingerprint: String)(
+      build: String => Unit): (String, Boolean) = {
     val sfRoot = new File(s"$storeRoot/${dir.split('/').last}")
     val src = new File(s"$dir/$sourceTable")
     val version = s"v_${digest(fingerprint)}_m${sourceMtime(src)}"
     val published = new File(sfRoot, version)
-    if (!new File(published, "_SUCCESS").exists()) {
+    val built = !new File(published, "_SUCCESS").exists()
+    if (built) {
       sfRoot.mkdirs()
       val tmp = new File(sfRoot, s".tmp_${version}_${java.util.UUID.randomUUID().toString.take(8)}")
       build(tmp.getAbsolutePath)
@@ -144,7 +213,7 @@ object DerivedStore {
         require(new File(published, "_SUCCESS").exists(),
           s"store publish failed and no concurrent winner at $published")
       }
-      // GC, best-effort (failures ignored):
+      // GC, best-effort (non-fatal failures ignored; fatal ones propagate):
       //  - superseded versions: keep the single most RECENT one as a
       //    grace window — Spark plans lazily and opens no file handle
       //    until action time, so a DataFrame built against the old
@@ -160,12 +229,12 @@ object DerivedStore {
         .filter(f => f.getName.startsWith("v_") && f.getName != version)
         .sortBy(-_.lastModified())
         .drop(1)
-        .foreach(f => try deleteRecursively(f) catch { case _: Throwable => })
+        .foreach(f => try deleteRecursively(f) catch { case NonFatal(_) => })
       entries
         .filter(f => f.getName.startsWith(".tmp_") &&
           f.lastModified() < System.currentTimeMillis() - 3600000L)
-        .foreach(f => try deleteRecursively(f) catch { case _: Throwable => })
+        .foreach(f => try deleteRecursively(f) catch { case NonFatal(_) => })
     }
-    published.getAbsolutePath
+    (published.getAbsolutePath, built)
   }
 }

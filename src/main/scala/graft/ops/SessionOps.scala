@@ -199,6 +199,25 @@ object SessionOps {
     catch { case _: Throwable => }
   }
 
+  /** One concurrent map per session, for state a session reuses across
+    * queries (resolved scans, store relations, fitted bases). Keyed
+    * WEAKLY by session: a map goes with its session once nothing else
+    * holds the session — a cached `DataFrame` value does hold it, so
+    * maps of frames live as long as the process. */
+  final class PerSession[K, V] {
+    private val maps = new java.util.WeakHashMap[SparkSession,
+      scala.collection.concurrent.TrieMap[K, V]]()
+    def apply(spark: SparkSession): scala.collection.concurrent.TrieMap[K, V] =
+      maps.synchronized {
+        var m = maps.get(spark)
+        if (m == null) {
+          m = scala.collection.concurrent.TrieMap.empty
+          maps.put(spark, m)
+        }
+        m
+      }
+  }
+
   /** [[spreadIfNarrow]] with an explicit target — for the sites whose
     * compensation width is a measured constant (the PQ build's 8-way,
     * the skew demo's 8 mappers) rather than the session parallelism.

@@ -191,13 +191,11 @@ object MiningQueries extends QueryPack {
   private val BM25_DIR = "/tmp/graft_bm25_scores"
   private val BM25_FINGERPRINT =
     s"bm25:k1=$K1:b=$B:terms=${QUERY_TERMS.mkString(",")}:round=r6"
-  private[graft] def bm25Store(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.ops.DerivedStore.serve(
-      BM25_DIR, dir, "documents.parquet", BM25_FINGERPRINT) { tmp =>
+  private[graft] def bm25Store(s: SparkSession, dir: String): DataFrame =
+    graft.ops.DerivedStore.load(
+      s, BM25_DIR, dir, "documents.parquet", BM25_FINGERPRINT) { tmp =>
       graft.ops.DerivedStore.compactWrite(bm25Scores(s, dir), tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** 3-round BPE-style merge trainer, shared by `phrase_merges_bpe` (the
     * learned merges) and `bpe_encode` (the round-3 corpus, which IS the

@@ -56,14 +56,12 @@ object PipelineQueries extends QueryPack {
   private val RAG_STORE_DIR = "/tmp/graft_rag_store"
   private val RAG_STORE_FINGERPRINT =
     s"ragstore:now=$NOW0:batch=5x60s:ticker=T+label:layout=partition-ticker"
-  private[graft] def vectorStoreServed(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.ops.DerivedStore.serve(
-      RAG_STORE_DIR, dir, "embeddings.parquet", RAG_STORE_FINGERPRINT) { tmp =>
+  private[graft] def vectorStoreServed(s: SparkSession, dir: String): DataFrame =
+    graft.ops.DerivedStore.load(
+      s, RAG_STORE_DIR, dir, "embeddings.parquet", RAG_STORE_FINGERPRINT) { tmp =>
       graft.ops.DerivedStore.writePartitioned(
         vectorStore(s, dir), tmp, Seq("ticker"))
     }
-    s.read.parquet(path)
-  }
 
   /** Oracle fragment of [[vectorStore]]. */
   private val STORE_SQL: String =

@@ -239,13 +239,11 @@ object TextQueries extends QueryPack {
     * [[graft.ops.DerivedStore]] folds this into the version path. */
   private val PAIRS_FINGERPRINT =
     s"jaccardPairs:tok=ws-poly31:P=$P:T=$JACCARD_T:cand=prefix-filter-df:prune=19/20"
-  private[graft] def clusterLabelsStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.ops.DerivedStore.serve(
-      LABELS_DIR, dir, "documents.parquet", s"$PAIRS_FINGERPRINT|cc=minlabel-v1") {
+  private[graft] def clusterLabelsStore(s: SparkSession, dir: String): DataFrame =
+    graft.ops.DerivedStore.load(
+      s, LABELS_DIR, dir, "documents.parquet", s"$PAIRS_FINGERPRINT|cc=minlabel-v1") {
       tmp => graft.ops.DerivedStore.compactWrite(clusterLabels(s, dir), tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** The near-dup PAIR table `(a_id, b_id)` as a persisted derived table —
     * the same staging pattern as [[clusterLabelsStore]], one level lower:
@@ -256,14 +254,12 @@ object TextQueries extends QueryPack {
     * build (its bench time is the honest enumeration cost);
     * `pagerank_canonical` is a consumer. */
   private val PAIRS_DIR = "/tmp/graft_neardup_pairs"
-  private[graft] def jaccardPairsStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.ops.DerivedStore.serve(
-      PAIRS_DIR, dir, "documents.parquet", PAIRS_FINGERPRINT) { tmp =>
+  private[graft] def jaccardPairsStore(s: SparkSession, dir: String): DataFrame =
+    graft.ops.DerivedStore.load(
+      s, PAIRS_DIR, dir, "documents.parquet", PAIRS_FINGERPRINT) { tmp =>
       graft.ops.DerivedStore.compactWrite(
         jaccardPairs(s, dir).select(col("a_id"), col("b_id")), tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** The MINHASH pair table `(a_id, b_id)` as a persisted derived table —
     * the third member of the staging family. `dedup_minhash_lsh` stays
@@ -277,14 +273,12 @@ object TextQueries extends QueryPack {
   private val MINHASH_FINGERPRINT =
     s"minhashPairs:tok=ws-poly31:P=$P:mh=${MINHASH_A.mkString(",")}/${MINHASH_B.mkString(",")}:" +
       s"bands=2x4:T=$MINHASH_VERIFY_T:prune=4/5"
-  private[graft] def minhashPairsStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.ops.DerivedStore.serve(
-      MINHASH_PAIRS_DIR, dir, "documents.parquet", MINHASH_FINGERPRINT) { tmp =>
+  private[graft] def minhashPairsStore(s: SparkSession, dir: String): DataFrame =
+    graft.ops.DerivedStore.load(
+      s, MINHASH_PAIRS_DIR, dir, "documents.parquet", MINHASH_FINGERPRINT) { tmp =>
       graft.ops.DerivedStore.compactWrite(
         minhashPairs(s, dir).select(col("a_id"), col("b_id")), tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** The split_leakage_safe bucket rule — ONE definition of how a cluster
     * representative maps to train/valid/test, shared with

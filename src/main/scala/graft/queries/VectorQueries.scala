@@ -1113,12 +1113,11 @@ object VectorQueries extends QueryPack {
     * partition column and prunes directories statically). */
   private[graft] def ivfIndexStore(s: SparkSession, dir: String,
                                    cells: Seq[Long] = Nil): DataFrame = {
-    val path = graft.ops.DerivedStore.serve(
-      INDEX_DIR, dir, "embeddings.parquet", INDEX_FINGERPRINT) { tmp =>
+    val raw = graft.ops.DerivedStore.load(
+      s, INDEX_DIR, dir, "embeddings.parquet", INDEX_FINGERPRINT) { tmp =>
       graft.ops.DerivedStore.writePartitioned(
         ivfPqIndex(s, dir), tmp, Seq("c_id"))
     }
-    val raw = s.read.parquet(path)
     val pruned =
       if (cells.isEmpty) raw
       // Long literals, NOT .toInt: centroid ids are vec_ids (int64), and
@@ -1175,9 +1174,9 @@ object VectorQueries extends QueryPack {
     s"pcaBasis:d=$DIMS:mu=r6+dsum6:cov=r6+dsum6:eig=3xpower-e0:" +
       "deflate=rayleigh:u=3xpower-e1:n=countstar:v2"
 
-  private def pcaBasisStore(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.ops.DerivedStore.serve(
-      PCA_DIR, dir, "embeddings.parquet", PCA_FP) { tmp =>
+  private def pcaBasisStore(s: SparkSession, dir: String): DataFrame =
+    graft.ops.DerivedStore.load(
+      s, PCA_DIR, dir, "embeddings.parquet", PCA_FP) { tmp =>
       val (mu, v, cov) = pcaMomentsBuild(s, dir)
       val d = DIMS
       // λ = vᵀ C v, folded i-ascending over w4 = C·v — then deflation
@@ -1197,30 +1196,17 @@ object VectorQueries extends QueryPack {
         (0 until d).map(j => (j, mu(j), v(j), u(j)))
           .toDF("j", "mu", "v1", "v2"), tmp)
     }
-    s.read.parquet(path)
-  }
 
   /** Session-scoped memo of the store-read basis: the store round-trip
     * runs ONCE per (session, dir); the cached state is O(d) doubles —
-    * bounded by DIMENSIONALITY, never corpus size. Keyed WEAKLY by
-    * session so stopped test sessions stay collectable. */
-  private val pcaCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        (org.apache.spark.sql.Column, Array[Double], Array[Double])]]()
+    * bounded by DIMENSIONALITY, never corpus size. */
+  private val pcaCache = new graft.ops.SessionOps.PerSession[String,
+    (org.apache.spark.sql.Column, Array[Double], Array[Double])]
 
   /** (centered-array column, v1, v2) served from [[pcaBasisStore]]. */
   private def pcaBasis(s: SparkSession, dir: String)
       : (org.apache.spark.sql.Column, Array[Double], Array[Double]) = {
-    val perSession = pcaCache.synchronized {
-      var m = pcaCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty
-        pcaCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
+    pcaCache(s).getOrElseUpdate(dir, {
       val d = DIMS
       val mu = new Array[Double](d)
       val v1 = new Array[Double](d)

@@ -53,6 +53,10 @@ object ServeLatency {
 
     // Ensure stores are PUBLISHED before timing (build is index-time
     // cost; a stale store would otherwise bill its rebuild to rep 1).
+    // Staging also resolves each store's relation, which DerivedStore.load
+    // caches for this session: rep 1 ("cold") reuses it and no longer
+    // pays the store's listing and schema-inference job, so cold
+    // numbers from before that cache are not comparable.
     graft.queries.VectorQueries.ivfIndexStore(spark, sfDir).count()
     graft.queries.PipelineQueries.vectorStoreServed(spark, sfDir).count()
     spark.catalog.clearCache()

@@ -245,6 +245,20 @@ class CustomExprSpec extends AnyFunSuite {
     assert(ge.copy(t = 0.5).eval(null) == true) // 4/6 >= 0.5
   }
 
+  test("JaccardGeqSorted: a threshold outside [0, 1] or NaN is rejected") {
+    import graft.expressions.JaccardGeqSorted.jaccardGeqSorted
+    // NaN would make `needed` 0, so every non-empty pair would pass,
+    // while jaccardSimSorted >= NaN passes none
+    for (t <- Seq(Double.NaN, -0.1, 1.5, Double.PositiveInfinity)) {
+      val e = intercept[IllegalArgumentException](
+        jaccardGeqSorted(col("a"), col("b"), t))
+      assert(e.getMessage.contains("threshold"), e.getMessage)
+    }
+    // both ends stay legal
+    jaccardGeqSorted(col("a"), col("b"), 0.0)
+    jaccardGeqSorted(col("a"), col("b"), 1.0)
+  }
+
   test("InterCountSorted/ContainGeqSorted: == composed array_intersect forms") {
     import graft.expressions.InterCountSorted.interCountSorted
     import graft.expressions.ContainGeqSorted.containGeqSorted

@@ -3,6 +3,8 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.DerivedStore
@@ -15,7 +17,9 @@ import graft.ops.DerivedStore
   *     the data is byte-identical — the failure mode a pure
   *     mtime-keyed store gets wrong;
   *   - publishing is rename-based: no partially-written version is
-  *     ever served, and superseded versions are garbage-collected.
+  *     ever served, and superseded versions are garbage-collected;
+  *   - `load` resolves a published version once per session and
+  *     re-resolves it whenever its marker files change.
   */
 class DerivedStoreSpec extends AnyFunSuite {
 
@@ -109,5 +113,107 @@ class DerivedStoreSpec extends AnyFunSuite {
     assert(threeParts == 3, s"250 rows at 100/file must write 3 files, got $threeParts")
     // round trip: compaction must not lose or duplicate rows
     assert(spark.read.parquet(s"$out/small").count() == 5000L)
+  }
+
+  private def parquetBuild(spark: SparkSession, rows: Long)(tmp: String): Unit =
+    spark.range(rows).toDF("id").write.parquet(tmp)
+
+  private def noRebuild(tmp: String): Unit =
+    fail(s"a published version must not be rebuilt (asked to build $tmp)")
+
+  private def deleteTree(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete(): Unit
+  }
+
+  test("load: a second load of one version reuses the relation and starts no Spark job") {
+    val spark = SparkTest.session
+    val (store, sf) = freshDirs()
+    val first = DerivedStore.load(spark, store, sf, "src.parquet", "fp-v1")(
+      parquetBuild(spark, 10))
+    assert(first.count() == 10L)
+    // the cost the cache removes: resolving a parquet path lists it and
+    // runs a schema-inference job
+    val path = DerivedStore.serve(store, sf, "src.parquet", "fp-v1")(noRebuild)
+    assert(SparkTest.jobsDuring(spark.read.parquet(path))._2 >= 1,
+      "a fresh read.parquet is expected to run a schema-inference job")
+    val (second, jobs) = SparkTest.jobsDuring(
+      DerivedStore.load(spark, store, sf, "src.parquet", "fp-v1")(noRebuild))
+    assert(second eq first, "the second load must return the cached relation")
+    assert(jobs == 0, s"a warm load started $jobs Spark job(s)")
+  }
+
+  test("load: delete-and-rebuild at the same version path reads the new rows") {
+    val spark = SparkTest.session
+    val (store, sf) = freshDirs()
+    val first = DerivedStore.load(spark, store, sf, "src.parquet", "fp-v1")(
+      parquetBuild(spark, 10))
+    assert(first.count() == 10L)
+    val path = DerivedStore.serve(store, sf, "src.parquet", "fp-v1")(noRebuild)
+    // another writer drops the store and publishes the same version anew
+    deleteTree(new File(store))
+    assert(DerivedStore.serve(store, sf, "src.parquet", "fp-v1")(
+      parquetBuild(spark, 25)) == path)
+    val second = DerivedStore.load(spark, store, sf, "src.parquet", "fp-v1")(noRebuild)
+    assert(second ne first, "a new _SUCCESS must invalidate the cached relation")
+    assert(second.count() == 25L) // the stale listing would fail: file not found
+    // a rebuild by load itself replaces the entry too
+    deleteTree(new File(store))
+    val third = DerivedStore.load(spark, store, sf, "src.parquet", "fp-v1")(
+      parquetBuild(spark, 7))
+    assert(third.count() == 7L)
+    assert(DerivedStore.load(spark, store, sf, "src.parquet", "fp-v1")(noRebuild) eq third)
+  }
+
+  test("load: ivfIndexStore after in-place ivfMaintainBatch returns the maintained rows") {
+    val spark = SparkTest.session
+    import spark.implicits._
+    // A private SF dir (a copy of sf0.001's embeddings) gives the index
+    // its own store directory, so the shared published index is never
+    // mutated.
+    val sf = Files.createTempDirectory("graft_ivf_load").toFile
+    val storeDir = new File("/tmp/graft_ann_index", sf.getName)
+    try {
+      Files.copy(new File("/root/testdata/sf0.001/embeddings.parquet").toPath,
+        new File(sf, "embeddings.parquet").toPath)
+      def rows(df: DataFrame): Set[(Long, Int, Long, Long)] =
+        df.select(col("vec_id"), col("s"), col("code").cast("long"), col("c_id"))
+          .as[(Long, Int, Long, Long)].collect().toSet
+      val served = graft.queries.VectorQueries.ivfIndexStore(spark, sf.getPath)
+      val before = rows(served)
+      val versionPath = new File(new java.net.URI(served.inputFiles.head))
+        .getParentFile.getParentFile.getPath
+      // move one vector to another cell with a new code, add a new cell
+      val (vMove, cellMove) = before.head match { case (v, _, _, c) => (v, c) }
+      val target = before.map(_._4).find(_ != cellMove).get
+      val newCell = before.map(_._4).max + 50
+      val batch = Seq.tabulate(4)(s => (vMove, s, 7L, target)) ++
+        Seq.tabulate(4)(s => (999999L, s, 1L, newCell))
+      assert(graft.streaming.StreamOps.ivfMaintainBatch(
+        spark, versionPath, batch.toDF("vec_id", "s", "code", "c_id"), batchId = 1L))
+      val want = before.filterNot(_._1 == vMove) ++ batch
+      assert(rows(graft.queries.VectorQueries.ivfIndexStore(spark, sf.getPath)) == want,
+        "the served index must show the maintained rows")
+      assert(rows(graft.queries.VectorQueries.ivfIndexStore(spark, sf.getPath, Seq(newCell))) ==
+        batch.filter(_._4 == newCell).toSet, "a new cell must be visible to a pruned read")
+    } finally {
+      deleteTree(sf)
+      deleteTree(storeDir)
+    }
+  }
+
+  test("load: two sessions never share a cached relation") {
+    val spark = SparkTest.session
+    val other = spark.newSession()
+    val (store, sf) = freshDirs()
+    val a = DerivedStore.load(spark, store, sf, "src.parquet", "fp-v1")(
+      parquetBuild(spark, 10))
+    val b = DerivedStore.load(other, store, sf, "src.parquet", "fp-v1")(noRebuild)
+    assert(a ne b)
+    assert(a.sparkSession eq spark)
+    assert(b.sparkSession eq other)
+    assert(DerivedStore.load(spark, store, sf, "src.parquet", "fp-v1")(noRebuild) eq a)
+    assert(DerivedStore.load(other, store, sf, "src.parquet", "fp-v1")(noRebuild) eq b)
+    assert(b.count() == 10L)
   }
 }

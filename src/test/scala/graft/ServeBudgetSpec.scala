@@ -43,4 +43,15 @@ class ServeBudgetSpec extends AnyFunSuite {
     info(f"warm p50: $p50%.3f s (budget 0.6 s; SERVE_r11 local[32] p50 0.184 s)")
     assert(p50 <= 0.6, f"serve p50 regressed: $p50%.3f s > 0.6 s budget")
   }
+
+  // Structural, so deterministic where the budgets above are not: once the
+  // store is published and its relation resolved, building the request's
+  // DataFrame is pure plan construction. A job here means a per-request
+  // store re-resolve (listing + schema inference) or another eager probe.
+  test("rag_query_spec: building a warm DataFrame starts no Spark job") {
+    val fn = SparkEntry.queries("rag_query_spec")
+    fn(spark, sf).count()
+    val (_, jobs) = SparkTest.jobsDuring(fn(spark, sf))
+    assert(jobs == 0, s"building a warm rag_query_spec started $jobs Spark job(s)")
+  }
 }

@@ -32,14 +32,46 @@ object SparkTest {
       // flag flips back.
       try f finally { drainBus(); allowed.set(false) }
     }
-    private def drainBus(): Unit =
-      try {
-        val sc = session.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-          .invoke(bus, java.lang.Long.valueOf(5000L))
-        ()
-      } catch { case _: Throwable => Thread.sleep(1000) }
+  }
+
+  /** Waits until the (async) listener bus has delivered every queued
+    * event. `waitUntilEmpty` is `private[spark]` (public in bytecode),
+    * hence the reflective call; on failure, a one-second sleep. */
+  def drainBus(): Unit =
+    try {
+      val sc = session.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+        .invoke(bus, java.lang.Long.valueOf(5000L))
+      ()
+    } catch { case _: Throwable => Thread.sleep(1000) }
+
+  private val JobTag = "graft.test.jobTag"
+
+  /** Runs `f` and counts the Spark jobs it starts. Jobs are matched by a
+    * local property of the calling thread, so a job another thread
+    * starts meanwhile (a streaming query an earlier suite left running)
+    * is not counted. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = session.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(JobTag) == tag)
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(counter)
+    sc.setLocalProperty(JobTag, tag)
+    try {
+      val r = f
+      drainBus()
+      (r, jobs.get())
+    } finally {
+      sc.setLocalProperty(JobTag, null)
+      sc.removeSparkListener(counter)
+    }
   }
 
   lazy val session: SparkSession = {
