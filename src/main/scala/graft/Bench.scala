@@ -1,4 +1,5 @@
 package graft
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,11 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the same session, warmups, store staging and timed loop — the quick
   * before/after for one change without a full-registry run. */
 object Bench {
-  /** Inter-query cache hygiene — one shared implementation
-    * (SessionOps.dropCachedBlocks) so Bench, ProfileQuery and
-    * ScalingProbe always measure under the same cache regime. */
-  private def dropCachedBlocks(spark: SparkSession): Unit =
-    graft.ops.SessionOps.dropCachedBlocks(spark)
+  import graft.ops.SessionOps.dropCachedBlocks
 
   def main(args: Array[String]): Unit = {
     val registry = SparkEntry.queries
@@ -31,32 +28,33 @@ object Bench {
             s"bad query list '$list'; unknown: ${unknown.mkString(",")}")
           names.map(n => n -> registry(n))
       }
+    // Optional min-of-N per query (SPARK_GRAFT_BENCH_REPS, default 1 so
+    // the driver contract is unchanged): single-shot totals on a shared
+    // box swing ±30% with contention; the per-query MINIMUM over a few
+    // reps is the stable-floor estimator the ScalingProbe already uses,
+    // and is the basis for BENCH_NOTES cross-round comparisons.
+    val reps = envOr("SPARK_GRAFT_BENCH_REPS", "1")(_.toIntOption.filter(_ > 0))
+    // Opt-in suite-order override (default: registry order, the driver
+    // contract) — the position-vs-query A/B for the r8 late-suite
+    // inflation: if per-query times follow POSITION when the order is
+    // reversed/shuffled, the inflation is a run-scoped environment effect
+    // (JIT churn, heap aging, box contention), not any query's plan.
+    //   SPARK_GRAFT_BENCH_ORDER = registry | reverse | shuffle[:<seed>]
+    // Only the exact forms are accepted: an A/B run against a silently
+    // different permutation would corrupt the position-vs-query
+    // diagnosis this feature exists for.
+    val ShuffleSeed = """shuffle:(-?\d+)""".r
+    val (orderMode, ordered) = envOr("SPARK_GRAFT_BENCH_ORDER", "registry") {
+      case "registry" | "" => Some(("registry", selected))
+      case "reverse" => Some(("reverse", selected.reverse))
+      case "shuffle" => Some(("shuffle:0", new scala.util.Random(0L).shuffle(selected)))
+      case ShuffleSeed(seed) => seed.toLongOption.map(n =>
+        (s"shuffle:$seed", new scala.util.Random(n).shuffle(selected)))
+      case _ => None
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the machine's cores (capped at 32, the driver's local[32]
-    // contract) so a smaller box isn't oversubscribed; the env var pins it
-    // for reproducible cross-round comparisons and the value is emitted in
-    // the JSON either way.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing stays parallelism-first (the default): an A/B run
-      // with size-based coalescing (parallelismFirst=false) cut the suite
-      // total ~6% but serialized every compute-dense, byte-light stage —
-      // dedup_substring_spans/apply 3×, asof_join_native 2.4× — because
-      // token-level windows shuffle few bytes per unit of CPU. Bytes are
-      // the wrong proxy for work here; rejected (BENCH_NOTES.md r6).
-      .config("spark.ui.enabled", "false")
-      // The generated-code cache defaults to 100 entries; 169 queries ×
-      // several codegen units each means the warmup pass's Janino
-      // compilations are evicted before the timed pass reuses them, and
-      // every timed query pays 0.5-3 s of recompilation — the measured
-      // cold-rep1/warm-rep2 gap on unchanged plans. Sized to hold the
-      // whole registry's units so warmup actually warms.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.ops.SessionOps.cpus
+    val spark = graft.ops.SessionOps.localSession()
     // Every warmup step runs untimed and must not abort the bench, but a
     // failure is RECORDED (warmup_errors in the detail line): a query
     // that dies in warmup runs its timed pass cold, and that must be
@@ -123,65 +121,19 @@ object Bench {
     val warmSecs = (System.nanoTime() - tw) / 1e9
     val jitAtTimedStart = java.lang.management.ManagementFactory
       .getCompilationMXBean.getTotalCompilationTime
-    val gcAtTimedStart = {
-      var sum = 0L
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .forEach(g => if (g.getCollectionTime > 0) sum += g.getCollectionTime)
-      sum
-    }
+    val gcAtTimedStart = gcTotalMs()
     // Fail closed on errors: a query that throws is recorded at -1.0 (an
     // impossible duration) and named in the errors list — it must not
     // appear as a legitimate ~4 ms instant-analysis-error entry (the r7
     // failure mode: 3 broken queries "ran" at 0.004 s).
     val errored = scala.collection.mutable.ArrayBuffer[String]()
-    // Optional min-of-N per query (SPARK_GRAFT_BENCH_REPS, default 1 so
-    // the driver contract is unchanged): single-shot totals on a shared
-    // box swing ±30% with contention; the per-query MINIMUM over a few
-    // reps is the stable-floor estimator the ScalingProbe already uses,
-    // and is the basis for BENCH_NOTES cross-round comparisons. Parsed
-    // leniently (trim + Try): a malformed value must not crash the run
-    // AFTER the multi-minute warmup it sits behind.
-    val reps = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").trim.toInt)
-      .getOrElse {
-        System.err.println("[bench] bad SPARK_GRAFT_BENCH_REPS; using 1")
-        1
-      }.max(1)
-    // Opt-in suite-order override (default: registry order, the driver
-    // contract) — the position-vs-query A/B for the r8 late-suite
-    // inflation: if per-query times follow POSITION when the order is
-    // reversed/shuffled, the inflation is a run-scoped environment effect
-    // (JIT churn, heap aging, box contention), not any query's plan.
-    //   SPARK_GRAFT_BENCH_ORDER = registry | reverse | shuffle:<seed>
-    val orderEnv = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "registry").trim
-    // Strict parse: only the exact forms are accepted; anything else —
-    // 'shuffled', 'shuffle-42', a typo'd seed — falls back LOUDLY to
-    // registry order, and the JSON 'order' field reports the EFFECTIVE
-    // order, never the invalid input (an A/B run against a silently
-    // different permutation would corrupt the position-vs-query
-    // diagnosis this feature exists for).
-    val ShuffleSeed = """shuffle:(-?\d+)""".r
-    val (orderMode, ordered): (String, Seq[(String, (SparkSession, String) => DataFrame)]) =
-      orderEnv match {
-        case "registry" | "" => ("registry", selected)
-        case "reverse" => ("reverse", selected.reverse)
-        case "shuffle" => ("shuffle:0", new scala.util.Random(0L).shuffle(selected))
-        case ShuffleSeed(seed) if scala.util.Try(seed.toLong).isSuccess =>
-          // the guard keeps a Long-overflowing digit string (which the
-          // regex accepts) on the loud-fallback path below instead of
-          // crashing the run after the multi-minute warmup
-          (s"shuffle:$seed", new scala.util.Random(seed.toLong).shuffle(selected))
-        case other =>
-          System.err.println(s"[bench] bad SPARK_GRAFT_BENCH_ORDER '$other'; using registry")
-          ("registry", selected)
-      }
     val results = ordered.map { case (name, fn) =>
       var best = Double.MaxValue
       var ok = true
       for (_ <- 1 to reps if ok) {
         val t0 = System.nanoTime()
         ok = try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] FAIL $name: ${e.getMessage}")
             errored += name; false }
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
@@ -214,12 +166,7 @@ object Bench {
     // interpreted" from "the tail paid old-gen collections that grew over
     // the run" — both are positional. Cumulative GC time (all collectors)
     // makes the two distinguishable from one run's detail line.
-    val gcMs = {
-      var sum = 0L
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .forEach(g => if (g.getCollectionTime > 0) sum += g.getCollectionTime)
-      sum
-    }
+    val gcMs = gcTotalMs()
     val detail = s"""{"metric":"total_detail","value":$total,"unit":"sec","warmup_sec":$warmSecs,"order":"$orderMode","reps":$reps,"code_cache_peak_mb":$codePeakMb,"jit_total_ms":$jitMs,"jit_timed_ms":${jitMs - jitAtTimedStart},"gc_total_ms":$gcMs,"gc_timed_ms":${gcMs - gcAtTimedStart},"queries":$qs,"n_errors":${errored.size},"errors":$errs,"warmup_errors":${warmupErrors.mkString("[", ",", "]")},"sf":"$sfDir","cpus":$cpus}"""
     // Full per-query artifact on disk: the driver keeps only a ~4 KB tail
     // of stdout, which hid 139 of 193 per-query times in r8 — the file
@@ -230,7 +177,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(new java.io.File(detailPath), "UTF-8")
       try w.println(detail) finally w.close()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $detailPath: ${e.getMessage}")
     }
     // Per-query detail first (a ~4 KB line), then a short total-only line
@@ -240,6 +187,23 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_errors":${errored.size},"sf":"$sfDir","cpus":$cpus}""")
     spark.stop()
   }
+
+  /** The env var `name` (default `default`), trimmed and read through
+    * `parse`; a value `parse` rejects throws IllegalArgumentException
+    * naming the variable and the value — checked before the session
+    * starts, so a typo fails the run instead of a multi-minute warmup
+    * later. */
+  private def envOr[T](name: String, default: String)(parse: String => Option[T]): T = {
+    val raw = sys.env.getOrElse(name, default)
+    parse(raw.trim).getOrElse(
+      throw new IllegalArgumentException(s"malformed $name='$raw'"))
+  }
+
+  /** Cumulative GC time of all collectors (one that reports no time
+    * returns -1 and is skipped). */
+  private def gcTotalMs(): Long =
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime).filter(_ > 0).sum
 
   /** `v` as a JSON string literal. */
   private[graft] def jsonStr(v: String): String = {

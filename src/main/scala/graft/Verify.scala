@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
+
+import graft.Bench.jsonStr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,17 +11,7 @@ object Verify {
     // Optional extra args: restrict the dump to these query names (fast
     // re-verify of just-touched queries; the driver passes none).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Hold the whole registry's generated-code units (default cache is
-      // 100 entries — see Bench.scala for the measured eviction cost).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.ops.SessionOps.localSession()
     new java.io.File(outDir).mkdirs()
     // Fail-closed bookkeeping: a query that throws must leave a loud
     // artifact, not silently vanish from the correctness report (r7's
@@ -48,7 +40,7 @@ object Verify {
           else d
         }
         ntz.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
         failures(name) = msg
         System.err.println(s"[verify] FAIL $name: $msg")
@@ -56,34 +48,25 @@ object Verify {
           import spark.implicits._
           Seq(msg).toDF("__graft_error")
             .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e2: Throwable =>
+        } catch { case NonFatal(e2) =>
           System.err.println(s"[verify] could not write error row for $name: ${e2.getMessage}")
         }
       }
       // Queries cache intermediate frames for their own multi-use plans;
       // drop them so one query's working set doesn't squat on executor
       // memory for the rest of the run.
-      spark.catalog.clearCache()
+      graft.ops.SessionOps.dropCachedBlocks(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Bench.jsonStr escapes ALL control chars (<0x20): a tab or CR in
+    // builder-authored SQL would otherwise make the driver's json.load
+    // fail and silently zero the round's correctness.
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/registry.json"),
-      ran.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      ran.keys.toSeq.sorted.map(jsonStr).mkString("[", ",", "]"))
     Files.writeString(Paths.get(s"$outDir/_errors.json"),
-      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      failures.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}"))
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size}/${ran.size} queries FAILED: " +
         failures.keys.mkString(", "))

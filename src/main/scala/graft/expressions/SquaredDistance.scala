@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * codegen lambdas, so the PQ code-assignment stages — |vectors| ×
   * |codebook| × subspaces evaluations — pay closure dispatch, lambda
   * variable binding and Double boxing per ELEMENT. Profiled on the inline
-  * IVF+PQ build (ProfileQuery, sf0.1) those two stages were 35+ CPU-
+  * IVF+PQ build (stage profile, sf0.1) those two stages were 35+ CPU-
   * seconds for ~3M pair evaluations of 16-float subvectors; this fused
   * single-pass loop participates in whole-stage codegen like
   * [[CosineSimilarity]].

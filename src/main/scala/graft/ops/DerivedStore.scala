@@ -84,8 +84,8 @@ object DerivedStore {
       // The checkpoint exists only to bridge count → write; left persisted
       // it would pin the whole derived table in executor storage for the
       // session's lifetime (the leaked-cache heap-pressure class Bench's
-      // dropCachedBlocks exists to clear — but Verify and ad hoc sessions
-      // never call that). releaseQuiet, not Dataset.unpersist: the
+      // dropCachedBlocks exists to clear — but a session outside the
+      // harnesses never calls that). releaseQuiet, not Dataset.unpersist: the
       // latter is a no-op for a localCheckpoint (see SessionOps).
       SessionOps.releaseQuiet(out)
     }

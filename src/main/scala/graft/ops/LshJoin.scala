@@ -219,7 +219,7 @@ object LshJoin {
       // PAIRS and probing with the payload SCANS is the shape that
       // survives any corpus size: the payload is never collected (the
       // r13 payload broadcast was one single-threaded multi-GB
-      // hash-relation build at the fourth decade — ProfileQuery) and
+      // hash-relation build at the fourth decade — stage profile) and
       // never shuffled; each side is one map-side pass over its scan,
       // and the two pairs-sized enriched frames meet in a small
       // hash join (SHUFFLE_HASH: pair-cardinality streams are never

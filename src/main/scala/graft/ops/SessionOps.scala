@@ -5,12 +5,51 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-level utilities shared by queries and the measurement tools —
-  * one implementation so a fix applies everywhere at once (Bench,
-  * ProfileQuery and ScalingProbe previously carried three identical
-  * copies of the cache-release logic, and the scan-spread sites each
-  * repeated an unconditional repartition).
+  * one implementation so a fix applies everywhere at once (the session
+  * every entry point runs on, the cache release between queries, the
+  * scan-spread compensation).
   */
 object SessionOps {
+
+  /** Cores of [[localSession]]: `SPARK_GRAFT_CPUS`, or the machine's
+    * cores capped at 32 (the driver's local[32] contract) so a smaller
+    * box isn't oversubscribed. The env var pins it for reproducible
+    * cross-round comparisons; entry points report it in their JSON. */
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def parseCpus(v: Option[String]): Int =
+    v.fold(math.min(32, Runtime.getRuntime.availableProcessors())) { raw =>
+      raw.trim.toIntOption.filter(_ > 0).getOrElse(throw
+        new IllegalArgumentException(s"malformed SPARK_GRAFT_CPUS='$raw'"))
+    }
+
+  /** The one session every entry point (Bench, Verify, Explain, the dev
+    * tools) runs on, so a profile or plan dump takes the same size-gated
+    * branches the bench does. Deployment settings such as
+    * `spark.driver.maxResultSize` come from the JVM (`-Dspark.*`). */
+  def localSession(): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      // AQE coalescing stays parallelism-first (the default): an A/B run
+      // with size-based coalescing (parallelismFirst=false) cut the suite
+      // total ~6% but serialized every compute-dense, byte-light stage —
+      // dedup_substring_spans/apply 3×, asof_join_native 2.4× — because
+      // token-level windows shuffle few bytes per unit of CPU. Bytes are
+      // the wrong proxy for work here; rejected (BENCH_NOTES.md r6).
+      .config("spark.ui.enabled", "false")
+      // The generated-code cache defaults to 100 entries; 169 queries ×
+      // several codegen units each means the warmup pass's Janino
+      // compilations are evicted before the timed pass reuses them, and
+      // every timed query pays 0.5-3 s of recompilation — the measured
+      // cold-rep1/warm-rep2 gap on unchanged plans. Sized to hold the
+      // whole registry's units so warmup actually warms.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** Best-effort release of a SUPERSEDED materialization (a localCheckpoint
     * or cache whose successor is already eagerly materialized) — the one
@@ -57,7 +96,7 @@ object SessionOps {
     * diagnostic trail where the r12 version escalated silently. */
   def releaseQuiet(df: DataFrame): Unit = {
     silenceTruncationWarn
-    try df.unpersist(blocking = false) catch { case _: Throwable => () }
+    try df.unpersist(blocking = false) catch { case NonFatal(_) => () }
     try df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
@@ -75,7 +114,7 @@ object SessionOps {
             try {
               fs.delete(new org.apache.hadoop.fs.Path(p), true); ()
             } catch {
-              case e: Throwable =>
+              case NonFatal(e) =>
                 log.warn(s"checkpoint delete failed (leaked): $p", e)
             }
           } else
@@ -84,7 +123,7 @@ object SessionOps {
                 s"(${ckptRoot.getOrElse("<unset>")}): $p")
         }
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 
   private lazy val log =
@@ -150,11 +189,9 @@ object SessionOps {
       eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     else {
       if (s.sparkContext.getCheckpointDir.isEmpty) {
-        val dir = try s.conf.get(RELIABLE_DIR_KEY) catch {
-          case _: Throwable =>
-            new java.io.File(
-              System.getProperty("java.io.tmpdir"), "graft-ckpt").toString
-        }
+        val dir = s.conf.getOption(RELIABLE_DIR_KEY).getOrElse(
+          new java.io.File(
+            System.getProperty("java.io.tmpdir"), "graft-ckpt").toString)
         s.sparkContext.setCheckpointDir(dir)
       }
       df.checkpoint()
@@ -173,7 +210,7 @@ object SessionOps {
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
   /** Round-robin `df` to the session's shuffle parallelism ONLY when its
     * current plan yields fewer partitions — the single-split local-scan
@@ -193,11 +230,24 @@ object SessionOps {
     * blocking = true so the release lands HERE (in an untimed gap) rather
     * than asynchronously inside the next measurement. */
   def dropCachedBlocks(spark: SparkSession): Unit = {
-    try spark.catalog.clearCache() catch { case _: Throwable => }
+    try spark.catalog.clearCache() catch { case NonFatal(_) => }
     try spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
   }
+
+  /** Waits up to `millis` until the asynchronous listener bus has
+    * delivered every queued event, so a listener's counts are complete;
+    * false when the bus did not drain. `waitUntilEmpty` is
+    * `private[spark]` (public in bytecode), hence the reflective call. */
+  def drainListenerBus(spark: SparkSession, millis: Long): Boolean =
+    try {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+        .invoke(bus, java.lang.Long.valueOf(millis))
+      true
+    } catch { case NonFatal(_) => false }
 
   /** One concurrent map per session, for state a session reuses across
     * queries (resolved scans, store relations, fitted bases). Keyed
@@ -356,8 +406,9 @@ object SessionOps {
     * 1g default mid-collect). Under the clamp the gate falls back to
     * the shuffled-hash branch instead — slower, never fatal; a cluster
     * that wants the broadcast branch at big payloads raises
-    * maxResultSize exactly as it provisions shuffle capacity (the
-    * measurement tools set 8g for this reason). maxResultSize = 0 means
+    * maxResultSize exactly as it provisions shuffle capacity (a
+    * big-decade ScalingProbe run passes -Dspark.driver.maxResultSize=8g
+    * for this reason). maxResultSize = 0 means
     * unlimited, so only the design cap applies there. */
   def broadcastBudget(s: SparkSession, designCap: Long): Long = {
     val maxResult = s.sparkContext.getConf

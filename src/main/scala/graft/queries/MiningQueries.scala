@@ -311,6 +311,7 @@ object MiningQueries extends QueryPack {
     // k/8 grows, leaving every small-k call (the registry's k = 3)
     // byte-identical while a large-k trainer at the boundary takes the
     // distributed loop.
+    // 8L * driverMaxConf cannot overflow: it is <= broadcastBudget(s, 64 MiB) <= 64 MiB.
     val driverMax =
       math.min(driverMaxConf, 8L * driverMaxConf / math.max(1L, k.toLong))
     if (driverMax > 0) {

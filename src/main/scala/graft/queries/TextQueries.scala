@@ -1164,7 +1164,7 @@ object TextQueries extends QueryPack {
     // stageBands (r14): candidateJoin consumes the banded frame as BOTH
     // join sides, and each side re-runs the full L·r-minhash signature
     // pass — at the fourth decade that is two 133-hash scans of 5M docs,
-    // measured (ProfileQuery, sf10) as the top-2 stages of the query.
+    // measured (stage profile, sf10) as the top-2 stages of the query.
     // Above FUZZY_STAGE_MIN_DOCS the frame is checkpointed once
     // (~40 B/row · n·L) so both sides read the materialization; below
     // it the plan is untouched (the recompute is cheaper than the
@@ -1219,7 +1219,7 @@ object TextQueries extends QueryPack {
     // Band key: xxhash64 over (band index, the band's r minhashes) — an
     // 8-byte long where the r13 concat_ws key was a ~45-char string. At
     // r = 19 the string keys were most of the candidate shuffle's bytes
-    // (ProfileQuery, sf10: 2.2 GB for 22.5M salted band rows) and every
+    // (stage profile, sf10: 2.2 GB for 22.5M salted band rows) and every
     // join compare re-hashed them. Collision safety is structural, not
     // probabilistic hope: a 64-bit collision can only ADD a candidate
     // pair, and every candidate passes the EXACT verify (length prune +

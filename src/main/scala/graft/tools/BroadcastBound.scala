@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.BooleanType
+import scala.util.control.NonFatal
 
 /** Static row-count BOUND estimator for broadcast-hinted subtrees — the
   * PlanAudit extension behind the r10 hint discipline: an explicit
@@ -528,7 +529,7 @@ object BroadcastBound {
       try {
         (audit(qe.analyzed).map(_._2) ++ nonEquiJoinAudit(qe.analyzed))
           .foreach(off => if (off.nonEmpty) hits.add((labelRef.get(), off)))
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     override def onFailure(funcName: String,
         qe: org.apache.spark.sql.execution.QueryExecution,
         error: Exception): Unit = ()
@@ -537,27 +538,18 @@ object BroadcastBound {
   /** Deterministic bus drain: QueryExecutionListener events ride the
     * listener bus's shared queue, so `LiveListenerBus.waitUntilEmpty`
     * is the real handshake — once it returns, every queued onSuccess
-    * callback has run and [[ExecutionAuditListener.hits]] is complete.
-    * The method is `private[spark]` (public in bytecode), hence the
-    * reflective call; if either reflection step or the wait itself
-    * fails (timeout on a pathologically backlogged bus, no active
+    * callback has run and [[ExecutionAuditListener.hits]] is complete
+    * ([[graft.ops.SessionOps.drainListenerBus]]). If the wait fails
+    * (timeout on a pathologically backlogged bus, no active
     * session), fall back to the previous wall-clock heuristic — sleep
     * in slices until the hit count has been stable for 3 consecutive
     * polls AND a minimum wall floor has passed (the floor matters
     * because a backlogged bus can deliver its first event hundreds of
     * ms after the last execution). */
   def drainWait(l: ExecutionAuditListener, millis: Long = 3000L): Unit = {
-    val drained =
-      try {
-        val spark = org.apache.spark.sql.SparkSession.getActiveSession
-          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-          .getOrElse(throw new IllegalStateException("no session"))
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-          .invoke(bus, java.lang.Long.valueOf(millis))
-        true
-      } catch { case _: Throwable => false }
+    val drained = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .exists(graft.ops.SessionOps.drainListenerBus(_, millis))
     if (!drained) {
       val start = System.currentTimeMillis()
       val floor = math.min(1000L, millis)

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+import scala.util.control.NonFatal
 
 /** Report-only probe (dev tool): queries whose ANALYZED plan contains the
   * same expensive subtree (a Join or Aggregate, canonicalized) two or more
@@ -118,13 +118,7 @@ object DupSubtreeProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.ops.SessionOps.localSession()
     val only = if (args.nonEmpty) args.flatMap(_.split(',')).toSet else Set.empty[String]
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
@@ -148,7 +142,7 @@ object DupSubtreeProbe {
                else "  [EXECUTED PASSES: " +
                  passes.map { case (t, r) => f"$t $r%.1fx" }.mkString(", ") + "]"))
           }
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           println(s"ERR $name: ${e.getClass.getSimpleName}")
         }
       }

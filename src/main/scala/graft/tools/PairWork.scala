@@ -109,13 +109,7 @@ object PairWork {
   /** CLI: print both families' work profiles for each dir.
     * Usage: runMain graft.tools.PairWork <sfDir> [<sfDir2> ...] */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.ops.SessionOps.localSession()
     args.foreach { dir =>
       val t0 = System.nanoTime()
       val a = annStats(spark, dir)

@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import scala.util.control.NonFatal
 
 /** Whole-registry plan audit (dev tool): walks every registered query's
   * physical plan and counts the structures the 100-TB checklist cares
@@ -226,7 +226,7 @@ object PlanAudit {
     "tpch_q5_local_supplier" -> Map("lineitem" -> 4),
     // r10: pinned for the whole remaining TPC-H archetype set after the
     // hint purge (max observed width per table across the query's scans
-    // — ScanWidths prints them). A future edit that widens any of these
+    // — Explain prints them). A future edit that widens any of these
     // scans fails the audit instead of silently paying full-width I/O.
     // (supplier has only 4 columns; q2/q20 legitimately need 3-4.)
     "tpch_q2_mincost" -> Map("lineitem" -> 4, "part" -> 4, "supplier" -> 4,
@@ -320,13 +320,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.ops.SessionOps.localSession()
     val only = if (args.nonEmpty) args.flatMap(_.split(',')).toSet else Set.empty[String]
     var cartesians = 0
     val violations = scala.collection.mutable.ArrayBuffer[String]()
@@ -338,7 +332,7 @@ object PlanAudit {
     // deterministic cold-vs-warm. localCheckpoint segments re-execute
     // on every construction, so the audited pass still sees them.
     selected.foreach { case (_, fn) =>
-      try { fn(spark, sfDir); () } catch { case _: Throwable => () }
+      try { fn(spark, sfDir); () } catch { case NonFatal(_) => () }
     }
     // Sub-execution audit (the localCheckpoint blind spot): every query
     // the session executes during construction gets its analyzed plan
@@ -399,10 +393,10 @@ object PlanAudit {
                     s"reads all ${st.totalCols} cols with no expectation"
             }
           }
-          spark.catalog.clearCache()
+          graft.ops.SessionOps.dropCachedBlocks(spark)
           Some((name, cart, bnlj, exch))
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             println(f"$name%-28s AUDIT ERROR: ${e.getMessage.take(80)}")
             None
         }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Shared machinery for the registry robustness sweeps (EmptyInputProbe,
   * NullFuzzProbe, TextFuzzProbe): stage a transformed twin of a testdata
@@ -51,7 +52,7 @@ object RegistrySweep {
         try {
           val n = fn(spark, dir).count()
           if (verbose) println(f"ok   $name%-34s rows=$n")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           // nextOption: an exception whose message is the EMPTY string
           // has an empty linesIterator, and a bare next() would throw
           // from inside this handler, aborting the whole sweep.
@@ -78,12 +79,7 @@ object RegistrySweep {
     // runs nothing, and would otherwise be REPORTED as passing.
     val unknown = only.diff(graft.SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.ops.SessionOps.localSession()
     stage(spark, srcSf, dst)
     val failed = sweep(spark, dst, only, verbose = true)
     val n = (if (only.isEmpty) graft.SparkEntry.queries.size else only.size) - failed.size

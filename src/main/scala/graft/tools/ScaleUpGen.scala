@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dev-tool generator for a LARGER scaling-probe dataset (default 10× =
@@ -189,14 +189,8 @@ object ScaleUpGen {
     val only: Set[String] =
       if (args.length > 4) args(4).split(",").map(_.trim).toSet else Set.empty
     def wanted(t: String): Boolean = only.isEmpty || only(t)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.ops.SessionOps.localSession()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def explodeCopies(df: DataFrame): DataFrame =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Scaling-curve probe (dev tool, not part of the driver contract): runs
   * registry queries at two scale factors and checks that wall time grows
@@ -167,19 +167,12 @@ object ScalingProbe {
     // degrades to a single sample; the r12 fuzzymh sf10 probe already
     // recorded n:1 this way).
     val reps = sys.env.get("SCALING_REPS").map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // big-decade probes hit the size-gated payload broadcasts; the
-      // gate clamps to 60% of this (SessionOps.broadcastBudget), so an
-      // untuned 1g driver would silently fall back to the shuffled
-      // branch and the probe would measure the wrong plan
-      .config("spark.driver.maxResultSize", "8g")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Big-decade probes hit the size-gated payload broadcasts, whose
+    // gate clamps to 60% of spark.driver.maxResultSize
+    // (SessionOps.broadcastBudget): run them with
+    // -Dspark.driver.maxResultSize=8g, or an untuned 1g driver silently
+    // takes the shuffled branch and the probe measures the wrong plan.
+    val spark = graft.ops.SessionOps.localSession()
 
     def release(): Unit = {
       graft.ops.SessionOps.dropCachedBlocks(spark)
@@ -209,7 +202,7 @@ object ScalingProbe {
     // the whole probe before any query has run.
     val sizeRatio: Map[String, Double] = Tables.flatMap { t =>
       try Some(t -> rows(big, t).toDouble / rows(small, t).toDouble)
-      catch { case _: Throwable =>
+      catch { case NonFatal(_) =>
         System.err.println(s"[probe] WARNING: cannot count '$t' in both dirs; skipping its ratio")
         None
       }
@@ -255,7 +248,7 @@ object ScalingProbe {
         // flag is never an artifact of an under-estimated denominator.
         val (inputs, sawUnknown) =
           try inputTables(graft.SparkEntry.queries(q)(spark, big))
-          catch { case _: Throwable => (Set.empty[String], true) }
+          catch { case NonFatal(_) => (Set.empty[String], true) }
         val candidates =
           inputs.flatMap(sizeRatio.get) ++ fallback.get(q).flatMap(sizeRatio.get)
         val dr =
@@ -319,7 +312,7 @@ object ScalingProbe {
             else if (tb < MIN_SECS) "noise_floor" else "ok"}",""" +
           s""""verdict_detail":"$verdict"}"""
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           println(f"$q%-28s ERROR ${String.valueOf(e.getMessage).take(60)}")
           jsonRows += s"""{"query":"$q","error":${graft.Bench.jsonStr(String.valueOf(e.getMessage).take(200))}}"""
       }
@@ -329,6 +322,7 @@ object ScalingProbe {
     else println("SUPERLINEAR: none")
     sys.env.get("SCALING_JSON_OUT").foreach { out =>
       val body = s"""{"small":"$small","big":"$big","slack":$SLACK,""" +
+        s""""cpus":${graft.ops.SessionOps.cpus},""" +
         s""""min_secs":$MIN_SECS,"n":${jsonRows.size},""" +
         s""""superlinear":[${flagged.reverse.map("\"" + _ + "\"").mkString(",")}],""" +
         s""""rows":[${jsonRows.mkString(",")}]}"""

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.io.File
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
 /** Cold serve-path latency probe (dev tool): the engine's point-lookup
@@ -23,10 +22,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
   * Usage: runMain graft.tools.ServeLatency [sfDir]
   */
 object ServeLatency {
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = PlanAudit.allNodes(p)
-
   private def scanMetrics(plan: SparkPlan, pathFrag: String): Seq[(Long, Long)] =
-    allNodes(plan).collect {
+    PlanAudit.allNodes(plan).collect {
       case s: FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.toString.contains(pathFrag)) =>
         (s.metrics.get("numFiles").map(_.value).getOrElse(-1L),
@@ -43,13 +40,7 @@ object ServeLatency {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.ops.SessionOps.localSession()
 
     // Ensure stores are PUBLISHED before timing (build is index-time
     // cost; a stale store would otherwise bill its rebuild to rep 1).
@@ -59,7 +50,7 @@ object ServeLatency {
     // numbers from before that cache are not comparable.
     graft.queries.VectorQueries.ivfIndexStore(spark, sfDir).count()
     graft.queries.PipelineQueries.vectorStoreServed(spark, sfDir).count()
-    spark.catalog.clearCache()
+    graft.ops.SessionOps.dropCachedBlocks(spark)
     println("[serve] stores published; timing begins (rep 1 = first plan" +
       " compile + execution in THIS forked JVM = cold serve)")
 
@@ -95,7 +86,7 @@ object ServeLatency {
           coldPlanSecs = (t1 - t0) / 1e9
           coldExecSecs = (t2 - t1) / 1e9
         }
-        spark.catalog.clearCache()
+        graft.ops.SessionOps.dropCachedBlocks(spark)
         (t2 - t0) / 1e9
       }
       val cold = times.head
@@ -124,7 +115,7 @@ object ServeLatency {
         f"cached_plan_p50=$cp50%6.3f s " +
         s"store_files_read=${scans.map(_._1).sum} of $onDisk on disk " +
         s"(bytes=${scans.map(_._2).sum})")
-      allNodes(lastPlan).collect {
+      PlanAudit.allNodes(lastPlan).collect {
         case s: FileSourceScanExec
             if s.relation.location.rootPaths.exists(_.toString.contains(storeRoot.split('/')(2))) =>
           println(s"[serve]   scan partitionFilters=${s.partitionFilters.mkString(";").take(200)}")
@@ -140,7 +131,7 @@ object ServeLatency {
         s""""store_bytes_read":${scans.map(_._2).sum}}"""
     }
     sys.env.get("SERVE_JSON_OUT").foreach { out =>
-      val body = s"""{"sf_dir":"$sfDir","note":"cold = first plan-compile+execute in a fresh forked JVM against the published on-disk store, decomposed into construct+plan vs exec; order_in_session 2 = a second DISTINCT query in the same JVM (no session init left to pay); warm percentiles over $warmReps reps in the same session, each rep re-paying construction+planning; cached_plan_* = the production-router posture (query object constructed once, re-executed per request)","rows":[${jsonRows.mkString(",")}]}"""
+      val body = s"""{"sf_dir":"$sfDir","cpus":${graft.ops.SessionOps.cpus},"note":"cold = first plan-compile+execute in a fresh forked JVM against the published on-disk store, decomposed into construct+plan vs exec; order_in_session 2 = a second DISTINCT query in the same JVM (no session init left to pay); warm percentiles over $warmReps reps in the same session, each rep re-paying construction+planning; cached_plan_* = the production-router posture (query object constructed once, re-executed per request)","rows":[${jsonRows.mkString(",")}]}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(out), body.getBytes("UTF-8"))
       println(s"[serve] wrote $out")
     }

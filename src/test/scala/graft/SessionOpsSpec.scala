@@ -29,6 +29,40 @@ class SessionOpsSpec extends AnyFunSuite {
       e.getMessage.contains("yes"), e.getMessage)
   }
 
+  test("SparkSession.builder appears in src/main only inside SessionOps.localSession") {
+    // One factory for every entry point: a tool building its own session
+    // drifts in cores, time zone or collect budget, and its profile then
+    // takes a different size-gated branch than the bench does.
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val Builder = """SparkSession\s*\.\s*[Bb]uilder\b""".r
+    val files = scala.util.Using.resource(Files.walk(root))(_.iterator.asScala.toList)
+    val sites: Seq[(Path, Int)] = files
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val text = Files.readString(f)
+        Builder.findAllMatchIn(text)
+          .map(m => (f, text.take(m.start).count(_ == '\n'))).toSeq
+      }
+    assert(sites.map(_._1) == Seq(root.resolve("graft/ops/SessionOps.scala")),
+      s"builder sites: ${sites.map { case (f, l) => s"$f:${l + 1}" }.mkString(", ")}")
+    val (file, line) = sites.head
+    val enclosing = Files.readAllLines(file).asScala.take(line).reverse
+      .find(_.trim.startsWith("def "))
+    assert(enclosing.exists(_.trim.startsWith("def localSession(")), enclosing)
+  }
+
+  test("a malformed SPARK_GRAFT_CPUS fails loudly, naming variable and value") {
+    assert(SessionOps.parseCpus(Some(" 6 ")) == 6)
+    assert(SessionOps.parseCpus(None) ==
+      math.min(32, Runtime.getRuntime.availableProcessors()))
+    Seq("four", "0", "-2", "").foreach { v =>
+      val e = intercept[IllegalArgumentException](SessionOps.parseCpus(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
+        e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
   test("releaseQuiet frees a localCheckpoint's persisted RDD") {
     val before = persistentIds
     val ck = spark.range(100).toDF("x").localCheckpoint()

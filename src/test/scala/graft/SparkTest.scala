@@ -35,16 +35,9 @@ object SparkTest {
   }
 
   /** Waits until the (async) listener bus has delivered every queued
-    * event. `waitUntilEmpty` is `private[spark]` (public in bytecode),
-    * hence the reflective call; on failure, a one-second sleep. */
+    * event; on failure, a one-second sleep. */
   def drainBus(): Unit =
-    try {
-      val sc = session.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        .invoke(bus, java.lang.Long.valueOf(5000L))
-      ()
-    } catch { case _: Throwable => Thread.sleep(1000) }
+    if (!graft.ops.SessionOps.drainListenerBus(session, 5000L)) Thread.sleep(1000)
 
   private val JobTag = "graft.test.jobTag"
 
