@@ -111,13 +111,10 @@ object Bench {
     // count(), same cache hygiene, same order, computed from parquet
     // every run. jit_timed_ms/gc_timed_ms below measure the residual
     // compile work inside the timed region directly.
-    // SPARK_GRAFT_BENCH_WARM_SF=0 reverts to the r15 warmup (the A/B dial
-    // for exactly this change; default on).
-    if (sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_SF", "1").trim != "0")
-      selected.foreach { case (name, fn) =>
-        warm(Some(name), "bench_sf")(fn(spark, sfDir).count())
-        dropCachedBlocks(spark)
-      }
+    selected.foreach { case (name, fn) =>
+      warm(Some(name), "bench_sf")(fn(spark, sfDir).count())
+      dropCachedBlocks(spark)
+    }
     val warmSecs = (System.nanoTime() - tw) / 1e9
     val jitAtTimedStart = java.lang.management.ManagementFactory
       .getCompilationMXBean.getTotalCompilationTime

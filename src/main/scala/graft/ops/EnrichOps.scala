@@ -51,12 +51,13 @@ object EnrichOps {
     * any drop-in) uses: the published vader_lexicon.txt dropped at
     * `GRAFT_VADER_LEXICON` (env) or `-Dgraft.vader.lexicon` when present,
     * else [[builtinLexicon]]. The full file is ~7,500 entries — viable
-    * because [[valence]] looks tokens up through one constant-folded map
-    * literal, not a per-word CASE chain (this sandbox has no network
-    * egress, so the file itself cannot be vendored verbatim without
-    * fabricating valences; the loader + published-format parser make the
-    * drop a pure data operation, spec-proven on a synthetic file in the
-    * same format). Resolved once per JVM. */
+    * because tokens are looked up through one hash map (the native
+    * [[vaderScore]]) or one constant-folded map literal ([[valenceVia]]),
+    * not a per-word CASE chain (the file itself is not vendored: typing
+    * its valences from memory would fabricate data; the loader +
+    * published-format parser make the drop a pure data operation,
+    * spec-proven on a synthetic file in the same format). Resolved once
+    * per JVM. */
   val lexicon: Seq[(String, Double)] =
     sys.env.get("GRAFT_VADER_LEXICON")
       .orElse(sys.props.get("graft.vader.lexicon")) match {
@@ -89,8 +90,6 @@ object EnrichOps {
     coalesce(element_at(m, t), lit(0.0))
   }
 
-  private def valence(t: Column): Column = valenceVia(lexicon)(t)
-
   private def boosterVal(t: Column): Column =
     boosters.foldRight(lit(0.0): Column) { case ((w, b), els) =>
       when(t === w, lit(b)).otherwise(els)
@@ -103,9 +102,45 @@ object EnrichOps {
     * same order as the oracle), normalized to (-1, 1) by s/√(s²+15)
     * (the reference's scorer, consumer.py:168-169). */
   def sentimentScore(toks: Column): Column = {
-    val s = aggregate(transform(toks, t => valence(t)), lit(0.0), (acc, v) => acc + v)
+    val s = aggregate(transform(toks, t => valenceVia(lexicon)(t)), lit(0.0), (acc, v) => acc + v)
     s / sqrt(s * s + lit(15.0))
   }
+
+  /** The word tables of [[vaderScore]] over `lex`. */
+  def vaderLexicon(lex: Seq[(String, Double)]): graft.expressions.VaderLexicon =
+    new graft.expressions.VaderLexicon(lex, boosters, negations, N_SCALAR)
+
+  private lazy val effectiveVader = vaderLexicon(lexicon)
+
+  /** A4 at reference fidelity: the full VADER mechanism over raw text
+    * (reference runs real VADER, consumer.py:157-169), deterministic and
+    * oracle-checkable:
+    *
+    *  - per-token valence from [[lexicon]];
+    *  - booster increments from up to three preceding tokens, damped
+    *    0.95/0.9 at distance two/three (VADER scalar_inc_dec), added in
+    *    the direction of the valence;
+    *  - negation flip ×(−0.74) when any of the three preceding tokens is
+    *    in [[negations]];
+    *  - '!' emphasis min(count,4)·0.292 and '?' emphasis count·0.18
+    *    (capped 0.96), added in the direction of the sum;
+    *  - normalization s/√(s²+15).
+    *
+    * Simplifications vs full VADER (deliberate): no ALL-CAPS emphasis, no
+    * idiom table, no "least"/contrastive-conjunction special cases — those
+    * need cased text and a phrase dictionary; the testdata corpus is
+    * lowercase single-phrase.
+    *
+    * One native expression ([[graft.expressions.VaderScore]]): a single
+    * plan node the streaming planner re-optimizes per batch for free,
+    * where the HOF form ([[withVaderScoreHof]], kept as the equality
+    * reference) was a tree of lambdas and when-chains. */
+  def vaderScore(text: Column): Column =
+    graft.expressions.VaderScore.column(text, effectiveVader)
+
+  /** `df` with [[vaderScore]] of `text` as column `out`. */
+  def withVaderScore(df: DataFrame, text: Column, out: String): DataFrame =
+    df.withColumn(out, vaderScore(text))
 
   /** Cleaned tokens: VADER strips leading/trailing punctuation before
     * lexicon lookup ("good!" scores as "good"); the emphasis marks are
@@ -113,13 +148,22 @@ object EnrichOps {
   private def cleanedTokens(text: Column): Column =
     transform(TextOps.tokens(text), t => regexp_replace(t, "[!?]", ""))
 
-  /** The indexed VADER fold over pre-computed per-token arrays (valences
-    * `vs`, booster increments `bs`, negation flags `ngs` as 0/1 ints) plus
-    * the raw text for punctuation emphasis. Kept separate from the array
-    * construction so callers can MATERIALIZE the arrays once per row —
-    * inlining them makes Catalyst re-substitute the whole token pipeline
-    * into every `element_at`, an O(n²·|lexicon|) interpreted blowup. */
-  private def vaderCombine(text: Column, vs: Column, bs: Column, ngs: Column): Column = {
+  /** The HOF reference of [[vaderScore]] over the lexicon `lex`, which
+    * TextOpsSpec holds the native kernel bit-equal to. The per-token
+    * arrays (valences, booster increments, negation flags as 0/1 ints)
+    * are separate projected columns: inlined, Catalyst's project-collapse
+    * would re-substitute the token pipeline into every `element_at`, an
+    * O(n²·|lexicon|) interpreted blowup. */
+  def withVaderScoreHof(df: DataFrame, text: Column, out: String,
+                        lex: Seq[(String, Double)] = lexicon): DataFrame = {
+    val staged = df.withColumn("__vader_cts", cleanedTokens(text))
+      .withColumn("__vader_vs", transform(col("__vader_cts"), valenceVia(lex)(_)))
+      .withColumn("__vader_bs", transform(col("__vader_cts"), boosterVal(_)))
+      .withColumn("__vader_ngs",
+        transform(col("__vader_cts"), t => when(isNegation(t), lit(1)).otherwise(lit(0))))
+    val vs = col("__vader_vs")
+    val bs = col("__vader_bs")
+    val ngs = col("__vader_ngs")
     val n = size(vs)
     val weighted = transform(sequence(lit(1), n), i => {
       val v = element_at(vs, i)
@@ -141,52 +185,9 @@ object EnrichOps {
     val amp = nExcl * lit(0.292) +
       when(nQm > 3, lit(0.96)).when(nQm > 1, nQm * lit(0.18)).otherwise(lit(0.0))
     val sAmp = when(s > 0, s + amp).when(s < 0, s - amp).otherwise(s)
-    sAmp / sqrt(sAmp * sAmp + lit(15.0))
-  }
-
-  /** A4 at reference fidelity: the full VADER mechanism over raw text
-    * (reference runs real VADER, consumer.py:157-169), deterministic and
-    * purely expression-based so it stays oracle-checkable:
-    *
-    *  - per-token valence from [[lexicon]];
-    *  - booster increments from up to three preceding tokens, damped
-    *    0.95/0.9 at distance two/three (VADER scalar_inc_dec), added in
-    *    the direction of the valence;
-    *  - negation flip ×(−0.74) when any of the three preceding tokens is
-    *    in [[negations]];
-    *  - '!' emphasis min(count,4)·0.292 and '?' emphasis count·0.18
-    *    (capped 0.96), added in the direction of the sum;
-    *  - normalization s/√(s²+15).
-    *
-    * Simplifications vs full VADER (deliberate): no ALL-CAPS emphasis, no
-    * idiom table, no "least"/contrastive-conjunction special cases — those
-    * need cased text and a phrase dictionary; the testdata corpus is
-    * lowercase single-phrase.
-    *
-    * Column-only form — convenient for specs and small inputs; production
-    * paths use [[withVaderScore]], which stages the per-token arrays as
-    * real columns. Identical values. */
-  def vaderScore(text: Column): Column = {
-    val cts = cleanedTokens(text)
-    vaderCombine(text,
-      transform(cts, valence(_)),
-      transform(cts, boosterVal(_)),
-      transform(cts, t => when(isNegation(t), lit(1)).otherwise(lit(0))))
-  }
-
-  /** [[vaderScore]] with the per-token arrays materialized once per row:
-    * separate projected columns stop Catalyst's project-collapse from
-    * inlining the token pipeline into every array access (it keeps
-    * non-cheap expressions referenced more than once). */
-  def withVaderScore(df: DataFrame, text: Column, out: String): DataFrame =
-    df.withColumn("__vader_cts", cleanedTokens(text))
-      .withColumn("__vader_vs", transform(col("__vader_cts"), valence(_)))
-      .withColumn("__vader_bs", transform(col("__vader_cts"), boosterVal(_)))
-      .withColumn("__vader_ngs",
-        transform(col("__vader_cts"), t => when(isNegation(t), lit(1)).otherwise(lit(0))))
-      .withColumn(out,
-        vaderCombine(text, col("__vader_vs"), col("__vader_bs"), col("__vader_ngs")))
+    staged.withColumn(out, sAmp / sqrt(sAmp * sAmp + lit(15.0)))
       .drop("__vader_cts", "__vader_vs", "__vader_bs", "__vader_ngs")
+  }
 
   /** A5 STUB: deterministic 16-dim pseudo-embedding derived from the text's
     * rolling hash: e[d] = ((fp·(d+1)) mod 1000)/1000 - 0.5. The real

@@ -66,7 +66,13 @@ object FilterOps {
     * others (consumer.py:115-130). The cutoff is relative to the table's
     * max event time (the testdata's "now"), computed distributedly and
     * broadcast — no driver-side collect. Comparison happens in floored
-    * epoch seconds, the cross-engine-stable domain. */
+    * epoch seconds, the cross-engine-stable domain.
+    *
+    * The cutoff is a self-join, so `df` is evaluated TWICE (once for the
+    * max, once for the rows it filters). Pass a scan or a materialized
+    * frame: over a derived plan — above all an opaque micro-batch whose
+    * lineage is a whole streaming chain — both evaluations run it in full
+    * (see `StreamOps.upsertBatch`). */
   def retentionDelete(df: DataFrame, typeCol: Column, typeVal: String,
                       tsCol: Column, retainDays: Int): DataFrame = {
     val cutoff = df.agg(

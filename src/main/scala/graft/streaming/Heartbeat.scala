@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -19,13 +20,33 @@ object Heartbeat {
     Files.write(Paths.get(path), epochSec.toString.getBytes,
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
 
-  /** Attach a listener that stamps `path` on every micro-batch progress. */
+  /** Where [[attach]] keeps the last progress report of a stamp at `path`. */
+  def progressPath(path: String): String = path + ".progress.json"
+
+  /** Replaces `path` with `bytes` atomically: a temp file beside it, then a
+    * rename over it, so a reader sees the old report or the new one,
+    * never a partial one. */
+  private def replace(path: String, bytes: Array[Byte]): Unit = {
+    val target = Paths.get(path).toAbsolutePath
+    val tmp = Files.createTempFile(target.getParent, target.getFileName.toString, ".tmp")
+    try {
+      Files.write(tmp, bytes)
+      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+    ()
+  }
+
+  /** Attach a listener that stamps `path` on every micro-batch progress and
+    * writes that batch's `StreamingQueryProgress` JSON (phase durations,
+    * rows/s, state size, watermark) to [[progressPath]]. */
   def attach(spark: SparkSession, path: String): StreamingQueryListener = {
     val l = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
         write(path, System.currentTimeMillis() / 1000)
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
         write(path, System.currentTimeMillis() / 1000)
+        replace(progressPath(path), e.progress.json.getBytes(StandardCharsets.UTF_8))
+      }
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     spark.streams.addListener(l)

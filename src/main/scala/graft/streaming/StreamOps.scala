@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.ops.DedupOps
+import graft.ops.{DedupOps, FilterOps, SessionOps}
 
 /** Typed message for the keyed-state snapshot operator. */
 case class SnapshotMsg(ticker: String, publish_time: Long, current_price: Double)
@@ -320,16 +320,29 @@ object StreamOps {
     * with the current store, keep the latest row per id (A3), apply the
     * retention filter (P7), write back. At-least-once delivery + this merge
     * = effectively-once state, the reference's upsert semantic
-    * (consumer.py:176-181). */
+    * (consumer.py:176-181).
+    *
+    * Contract: `batch` is evaluated ONCE. Inside `foreachBatch` the batch
+    * is an opaque RDD whose lineage is the whole decode/dedup/enrich
+    * chain, and the retention cutoff reads the merge twice (see
+    * [[FilterOps.retentionDelete]]), so the latest-wins merge is
+    * materialized first ([[SessionOps.truncate]], which honours
+    * the reliable-checkpoint mode) and the cutoff and filter run over its
+    * blocks. The result is materialized too — a `LogicalRDD` at the top,
+    * no lineage back to `store` or `batch` — and the intermediate merge is
+    * released here. The caller owns the result: once a later upsert has
+    * superseded it and no reader needs it, release it with
+    * [[SessionOps.releaseQuiet]]. */
   def upsertBatch(store: DataFrame, batch: DataFrame,
                   retainType: String, retainDays: Int): DataFrame = {
-    val merged = DedupOps.latestWins(
+    val merged = SessionOps.truncate(DedupOps.latestWins(
       store.unionByName(batch, allowMissingColumns = true),
       id = col("id"),
-      order = Seq(col("publish_time").desc))
-    graft.ops.FilterOps.retentionDelete(
+      order = Seq(col("publish_time").desc)))
+    try SessionOps.truncate(FilterOps.retentionDelete(
       merged, col("type"), retainType,
-      col("publish_time").cast("timestamp"), retainDays)
+      col("publish_time").cast("timestamp"), retainDays))
+    finally SessionOps.releaseQuiet(merged)
   }
 
   /** T3 (keyed-state form): the LATEST_* singleton snapshot as explicit

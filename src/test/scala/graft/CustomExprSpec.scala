@@ -300,4 +300,31 @@ class CustomExprSpec extends AnyFunSuite {
     assert(Heartbeat.status(p, 1000L + 120) == "OFFLINE")
     assert(Heartbeat.status(p + ".missing", 0L) == "OFFLINE")
   }
+
+  test("Heartbeat.attach: the last batch's progress JSON lands beside the stamp") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_hb")
+    val stamp = dir.resolve("heartbeat").toString
+    val listener = Heartbeat.attach(spark, stamp)
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
+    val q = in.toDF().writeStream.format("memory").queryName("hb_progress_out").start()
+    try {
+      in.addData(1, 2, 3)
+      q.processAllAvailable()
+      SparkTest.drainBus()
+      val p = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(Heartbeat.progressPath(stamp)))
+      assert(p.get("id").asText == q.id.toString)
+      assert(p.get("batchId").asLong == 0L)
+      assert(p.get("numInputRows").asLong == 3L)
+      assert(p.get("durationMs").has("triggerExecution"))
+      assert(Heartbeat.status(stamp, System.currentTimeMillis() / 1000) == "ONLINE")
+      // the temp file of the atomic replace is renamed away, not left behind
+      val left = dir.toFile.list().toSet
+      assert(left == Set("heartbeat", "heartbeat.progress.json"), s"left: $left")
+    } finally {
+      q.stop()
+      spark.streams.removeListener(listener)
+    }
+  }
 }

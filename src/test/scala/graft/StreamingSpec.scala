@@ -110,6 +110,27 @@ class StreamingSpec extends AnyFunSuite {
     assert(again.orderBy("id").collect().toSeq == rows.toSeq)
   }
 
+  test("upsertBatch evaluates its batch once and returns the store materialized") {
+    val evals = spark.sparkContext.longAccumulator("graft.upsert.batchEvals")
+    val counted = udf { (t: Long) => evals.add(1); t }
+    def rddFrame(ms: Seq[Msg]) = spark.createDataFrame(spark.sparkContext.parallelize(ms, 2))
+    val store = StreamOps.upsertBatch(Seq.empty[Msg].toDF(),
+      rddFrame(Seq(Msg("kept", "X", "news", 1000L, 1.0))), "daily_summary", 30)
+    val msgs = (0 until 40).map(i =>
+      Msg(s"id$i", "X", if (i % 2 == 0) "news" else "daily_summary", 1000L + i, i.toDouble))
+    // An opaque RDD-backed batch, like foreachBatch's; its event time runs
+    // through the counting UDF, which both the merge and the retention
+    // cutoff read.
+    val batch = rddFrame(msgs).withColumn("publish_time", counted(col("publish_time")))
+    val out = StreamOps.upsertBatch(store, batch, "daily_summary", 30)
+    val rows = out.collect()
+    assert(evals.value == msgs.size, s"batch rows evaluated ${evals.value} times for ${msgs.size} rows")
+    assert(rows.length == msgs.size + 1)
+    assert(out.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    graft.ops.SessionOps.releaseQuiet(store)
+    graft.ops.SessionOps.releaseQuiet(out)
+  }
+
   test("T3 keyed-state: flatMapGroupsWithState keeps the latest snapshot per key") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.SnapshotMsg
@@ -335,6 +356,11 @@ class StreamingSpec extends AnyFunSuite {
       msg("news_a", "X", "news", now, 1.0),                       // replay dup
       msg("LATEST_TECH_X", "X", "technical", now - 500, 11.0),    // later wins
       msg("news_b", "Y", "news", now + 100, 2.0)))
+    val later = 3 to 20
+    later.foreach { k =>
+      java.nio.file.Files.write(srcDir.resolve(f"batch$k%02d.json"),
+        java.util.Arrays.asList(msg(s"news_$k", "Z", "news", now + 100 + k, 1.0)))
+    }
 
     val raw = spark.readStream
       .option("maxFilesPerTrigger", "1")
@@ -347,6 +373,11 @@ class StreamingSpec extends AnyFunSuite {
       decoded.withColumn("event_ts", col("publish_time").cast("timestamp")),
       "event_ts", "1 hour")
 
+    // upsertBatch returns the store materialized; each superseded store is
+    // released, so the persisted RDDs stay bounded however many batches run
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.size
+    val persisted = scala.collection.mutable.ArrayBuffer[Int]()
     @volatile var store: org.apache.spark.sql.DataFrame = null
     val mergeBatch = (batch: org.apache.spark.sql.DataFrame, _: Long) => {
       val b = batch.drop("ingest_ts", "event_ts", "kafka_key")
@@ -354,7 +385,9 @@ class StreamingSpec extends AnyFunSuite {
         if (store == null)
           spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), b.schema)
         else store
-      store = StreamOps.upsertBatch(cur, b, "news", 30).localCheckpoint()
+      store = StreamOps.upsertBatch(cur, b, "news", 30)
+      graft.ops.SessionOps.releaseQuiet(cur)
+      persisted.synchronized { persisted += sc.getPersistentRDDs.size }
       ()
     }
     val q = deduped.writeStream.outputMode("append").foreachBatch(mergeBatch).start()
@@ -364,10 +397,18 @@ class StreamingSpec extends AnyFunSuite {
         .select("id", "ticker", "type", "publish_time", "current_price")
         .collect()
       // news_old deleted by retention, news_a deduped, technical latest-wins
-      assert(rows.map(_.getString(0)).toSeq == Seq("LATEST_TECH_X", "news_a", "news_b"))
+      assert(rows.map(_.getString(0)).toSeq ==
+        (Seq("LATEST_TECH_X", "news_a", "news_b") ++ later.map(k => s"news_$k")).sorted)
       val tech = rows.head
       assert(tech.getLong(3) == now - 500 && tech.getDouble(4) == 11.0)
-    } finally q.stop()
+      val counts = persisted.synchronized(persisted.toList)
+      assert(counts.size == 2 + later.size)
+      assert(counts.forall(_ <= persistedBefore + 1),
+        s"persisted RDDs grew over the upserts: before $persistedBefore, after each $counts")
+    } finally {
+      q.stop()
+      graft.ops.SessionOps.releaseQuiet(store)
+    }
   }
 
   test("T5: watermarked daily window emits finalized OHLCV per key-day") {

@@ -68,12 +68,64 @@ class TextOpsSpec extends AnyFunSuite {
     assert(got(6) == norm(1.9 + 1.9 + 3 * 0.18))
     // ordering sanity: negated < neutral 0 < dampened < plain < boosted
     assert(got(1) < 0 && 0 < got(3) && got(3) < got(0) && got(0) < got(2))
-    // the staged (materialized-arrays) form is bit-equal to the inline form
+    // the DataFrame form scores the same
     val staged = EnrichOps.withVaderScore(
       Seq("good", "not good", "very good", "slightly good", "very good!",
         "never was good", "good good???").toDF("text"), $"text", "s")
       .select("s").collect().map(_.getDouble(0))
     assert(staged.toSeq == got.toSeq)
+  }
+
+  test("VaderScore kernel == HOF reference, bit for bit, builtin and file lexicon") {
+    val docs = graft.model.Tables.documents(spark, "/root/testdata/sf0.01")
+      .select($"doc_id".cast("long"), $"text")
+    val edges = Seq[String](null, "", " ", "   ", "!!!!!", "????", "good", " good", "good ",
+      "good  bad", "not good", "a not good", "a b not good", "a b c not good",
+      "very good", "a very good", "very a good", "very a b good", "very a b c good",
+      "not very good", "slightly not bad", "not not good", "never no good bad",
+      "good!!", "bad? bad?", "g?o!od", "very!! good??", "no?? way good? ok?",
+      "café très bien good!", "naïve 好 great 好", "émoji 😀 good 😀 not bad")
+    val edgeDf = edges.zipWithIndex.map { case (t, i) => (-1L - i, t) }.toDF("doc_id", "text")
+    val all = docs.unionByName(edgeDf)
+    val n = all.count()
+    def assertBitEqual(native: org.apache.spark.sql.DataFrame, lex: Seq[(String, Double)]): Unit = {
+      val hof = EnrichOps.withVaderScoreHof(all, $"text", "h", lex).select($"doc_id", $"h")
+      val rows = native.join(hof, "doc_id").collect()
+      assert(rows.length == n)
+      val bad = rows.filterNot { r =>
+        if (r.isNullAt(1) || r.isNullAt(2)) r.isNullAt(1) && r.isNullAt(2)
+        else java.lang.Double.doubleToLongBits(r.getDouble(1)) ==
+          java.lang.Double.doubleToLongBits(r.getDouble(2))
+      }
+      assert(bad.isEmpty, s"${bad.length} mismatches, e.g. ${bad.take(3).mkString("; ")}")
+    }
+    // the public path, over the effective (builtin) lexicon
+    val builtin = EnrichOps.withVaderScore(all, $"text", "n").select($"doc_id", $"n")
+    assert(builtin.filter($"n" =!= 0.0).count() > 0)
+    assertBitEqual(builtin, EnrichOps.lexicon)
+    // a lexicon file in the published format over the corpus's own
+    // vocabulary, with the empty token and non-ASCII words in it
+    val vocab = docs.select(explode(split($"text", " ")).as("t")).distinct()
+      .orderBy("t").limit(400).as[String].collect().toSeq.filter(_.nonEmpty)
+    val extra = Seq("" -> 0.5, "café" -> 1.2, "好" -> -0.7, "😀" -> 2.3, "bien" -> 0.8)
+    val lines = (vocab.map(w => w -> ((w.hashCode % 397) / 100.0)).filterNot(e =>
+      extra.exists(_._1 == e._1)) ++ extra).map { case (w, v) => s"$w\t$v\t0.5\t[1, 2]" }
+    val f = java.io.File.createTempFile("vader_lex", ".txt")
+    val w = new java.io.PrintWriter(f, "UTF-8")
+    try lines.foreach(w.println) finally w.close()
+    val fileLex = EnrichOps.lexiconFromFile(f.getPath)
+    f.delete()
+    assert(fileLex.size == lines.size)
+    assertBitEqual(all.select($"doc_id",
+      graft.expressions.VaderScore.column($"text", EnrichOps.vaderLexicon(fileLex)).as("n")),
+      fileLex)
+    // the registry query plans as one native expression: no lambda left to
+    // re-optimize per streaming batch
+    def lambdas(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.exists(
+      _.expressions.exists(_.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.LambdaFunction])))
+    assert(!lambdas(SparkEntry.queries("sentiment_score")(spark, "/root/testdata/sf0.01")))
+    assert(lambdas(EnrichOps.withVaderScoreHof(docs, $"text", "h")))
   }
 
   test("embedTextBatched: one model call per batch, bit-equal to the expression path") {
