@@ -4,7 +4,9 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ops.SessionOps
 
@@ -17,7 +19,10 @@ import graft.ops.SessionOps
   * independent of SF); each parquet scan's read/total columns (for
   * curating [[graft.tools.PlanAudit.EXPECT_READ_COLS]]); `construct_s`
   * (building the DataFrame, eager loops included), `plan_s` and `exec_s`
-  * (a `count()`); and the top stages by summed task run time.
+  * (a `count()`); the SQL metrics of graft's own operators in that
+  * `count()` (e.g. `RagSearchExec`'s rows scored, driver-merged
+  * candidates and query rows); and the top stages by summed task run
+  * time.
   *
   * A repeated name is a warm rep: the first occurrence absorbs codegen
   * and JIT (often 3-10× the steady state). With `outDir` each plan goes
@@ -38,6 +43,12 @@ object Explain {
     val spark = SessionOps.localSession()
     val stages = new StageProfile
     spark.sparkContext.addSparkListener(stages)
+    val executed = new java.util.concurrent.atomic.AtomicReference[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executed.set(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     val seen = mutable.Set[String]()
     val failed = mutable.ArrayBuffer[String]()
     names.foreach { name =>
@@ -73,6 +84,7 @@ object Explain {
         failed += name
       }
       SessionOps.drainListenerBus(spark, 5000L)
+      Option(executed.getAndSet(null)).foreach(qe => OperatorMetrics.print(qe.executedPlan))
       stages.print()
     }
     spark.stop()
@@ -86,6 +98,17 @@ object Explain {
     val t0 = System.nanoTime()
     val r = f
     (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** SQL metrics of graft's own physical operators, adaptive stages
+    * included. */
+  private object OperatorMetrics extends AdaptiveSparkPlanHelper {
+    def print(plan: SparkPlan): Unit =
+      collect(plan) { case p if p.getClass.getName.startsWith("graft.") => p }.foreach { p =>
+        println(s"-- ${p.nodeName} metrics: " + p.metrics.toSeq.sortBy(_._1).map { case (k, m) =>
+          s"${m.name.getOrElse(k)}=${m.value}"
+        }.mkString(", ") + " --")
+      }
   }
 
   /** Per-stage task totals since the last [[clear]]. */

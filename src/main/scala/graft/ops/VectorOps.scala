@@ -66,9 +66,11 @@ object VectorOps {
     df.crossJoin(broadcast(queryVec))
 
   /** V1: metadata-prefiltered exact k-NN: filter → distance → global top-k.
-    * Plans as TakeOrderedAndProject (per-partition top-k, then merge). */
+    * Plans as TakeOrderedAndProject (per-partition top-k, then merge). A
+    * null distance (a null embedding) ranks last, as `ORDER BY dist` does
+    * in the oracle, never as the nearest neighbour. */
   def knn(df: DataFrame, dist: Column, k: Int, tieBreak: Column): DataFrame =
-    df.withColumn("dist", dist).orderBy(col("dist"), tieBreak).limit(k)
+    df.withColumn("dist", dist).orderBy(col("dist").asc_nulls_last, tieBreak).limit(k)
 
   /** W5: REAL_TIME re-rank score (weights 0.6/0.4, τ=14400 s), quantized at
     * 1e-6 because exp() may differ by 1 ulp across libm implementations. */

@@ -36,6 +36,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         graft.expressions.BigramL1(exprs(0), exprs(1))))
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => RagSearchStrategy)
     e.injectOptimizerRule(_ => ApproxDistinctRewrite)
     e.injectOptimizerRule(_ => NanosRangePushdown)
   }

@@ -3,8 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.expressions.CosineSimilarity.cosineSim
-import graft.ops.{DedupOps, Num, VectorOps}
+import graft.ops.{Num, VectorOps}
 
 /** Search intent, as emitted by the reference's router
   * (/root/reference/src/app/rag_engine.py:96-99): REAL_TIME applies the
@@ -42,19 +41,26 @@ final case class QuerySpec(
     intent: QueryIntent,
     now: Long,
     k: Int = 20,
-    topN: Int = 8)
+    topN: Int = 8) {
+  require(k >= 1, s"QuerySpec.k must be >= 1, got k = $k")
+  require(topN >= 1, s"QuerySpec.topN must be >= 1, got topN = $topN")
+}
 
 /** Plan builder for the RAG read path (SURVEY §3.3): metadata filter →
   * k-NN → retrieval dedup → intent-dependent rescore → top-N, constructed
-  * from a [[QuerySpec]] as ONE declarative plan (reference call chain
+  * from a [[QuerySpec]] as ONE plan (reference call chain
   * rag_engine.py:184-253).
   *
-  * Scale shape: the window/ticker filters reach the parquet scan (plain
-  * conjunctive predicates on scan columns — pushdown-eligible), the single
-  * query vector broadcasts to every partition (no shuffle of the store),
-  * the k-NN plans as TakeOrderedAndProject (per-partition top-k then a
-  * k-row merge on one reducer), and everything after the k-NN operates on
-  * ≤ k rows. One pass over the vector store, however large.
+  * Scale shape: the window/ticker filters stay Filters on the store, so
+  * they reach the parquet scan (partition pruning on the ticker, the ts
+  * window pushed into the row-group filter). Everything after the filter
+  * is one [[RagSearchExec]]: it collects the one query row (no job when
+  * the query frame is a `LocalRelation`), runs one job over the store in
+  * which each partition keeps its top-k, merges the ≤ k·partitions
+  * candidates on the driver, and applies keep-first, rescore and top-N
+  * there over ≤ k rows. No exchange, no Window and no adaptive stages:
+  * a request over a parquet query frame is 2 jobs and shuffles nothing,
+  * however large the store. One pass over the vector store.
   */
 object RagPlans {
 
@@ -79,8 +85,10 @@ object RagPlans {
     }
 
   /** Compile `spec` against a vector store (columns [[StoreColumns]]) and
-    * a one-row query frame holding `q_emb`. Returns the top-N context
-    * rows: (vec_id, ticker, ts, dist, score). */
+    * a query frame holding `q_emb`. Returns the top-N context rows:
+    * (vec_id, ticker, ts, dist, score). A query frame with no row yields no
+    * rows; one with more than one row fails the request with an
+    * `IllegalArgumentException` when it executes. */
   def search(spec: QuerySpec, queryVec: DataFrame)(store: DataFrame): DataFrame = {
     // P4 time window + P5 optional ticker equality (rag_engine.py:201-210):
     // plain conjunctive scan predicates, so Catalyst pushes them into the
@@ -88,21 +96,9 @@ object RagPlans {
     val windowed = store.filter(col("ts").between(spec.start, spec.end))
     val filtered =
       spec.ticker.fold(windowed)(t => windowed.filter(col("ticker") === t))
-    // V1 k-NN (rag_engine.py:212-217): broadcast query vector, map-side
-    // codegen cosine, global top-k via TakeOrderedAndProject.
-    val knn = VectorOps.knn(
-      VectorOps.withQueryVector(filtered, queryVec),
-      lit(1.0) - cosineSim(col("embedding"), col("q_emb")),
-      spec.k, col("vec_id"))
-    // O4 retrieval dedup (rag_engine.py:230-239): the reference hashes
-    // (ticker, timestamp) per result and keeps the first in rank order.
-    val deduped = DedupOps.keepFirst(knn,
-      keys = Seq(col("ticker"), col("ts")),
-      order = Seq(col("dist"), col("vec_id")))
-    // W5 intent rescore + W4 top-N (rag_engine.py:241-253). ≤ k rows here.
-    deduped
-      .withColumn("score", score(spec)(col("dist"), col("ts")))
-      .orderBy(col("score").desc, col("vec_id")).limit(spec.topN)
-      .select("vec_id", "ticker", "ts", "dist", "score")
+    // V1 k-NN (rag_engine.py:212-217), O4 (ticker, ts) keep-first in rank
+    // order (rag_engine.py:230-239), W5 intent rescore + W4 top-N
+    // (rag_engine.py:241-253).
+    RagSearch(spec, filtered, queryVec)
   }
 }

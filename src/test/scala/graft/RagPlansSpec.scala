@@ -95,4 +95,49 @@ class RagPlansSpec extends AnyFunSuite {
     assert(got.size == 2)
     assert(got.map(_._1).head == 1L)
   }
+
+  private def withRow(id: Long, emb: Array[Float], ts: Long): DataFrame =
+    store.union(Seq((id, emb, "AA", ts)).toDF("vec_id", "embedding", "ticker", "ts"))
+
+  test("a null embedding ranks last, never as the nearest neighbour") {
+    // k = 3 over the window's real rows keeps 1, 2, 3; dedup drops 3.
+    val spec = base(QueryIntent.Historical).copy(k = 3)
+    val s = withRow(7L, null, Now - 50L)
+    val got = RagPlans.search(spec, q)(s)
+    assert(got.select("vec_id").as[Long].collect().toSeq == Seq(1L, 2L))
+    assert(got.collect().toSeq == RagReference.search(spec, q)(s).collect().toSeq)
+    // with room for it, the null row comes last with a null dist and score
+    val all = RagPlans.search(base(QueryIntent.Historical), q)(s).collect()
+    assert(all.last.getLong(0) == 7L && all.last.isNullAt(3) && all.last.isNullAt(4))
+  }
+
+  test("a zero vector's dist is exactly 1.0") {
+    val s = withRow(8L, Array(0f, 0f, 0f, 0f), Now - 50L)
+    val got = RagPlans.search(base(QueryIntent.Historical), q)(s)
+      .select("vec_id", "dist", "score").as[(Long, Double, Double)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got(8L) == ((1.0, 0.0)))
+  }
+
+  test("QuerySpec rejects k < 1 and topN < 1, naming the field and value") {
+    val k = intercept[IllegalArgumentException](base(QueryIntent.Historical).copy(k = 0))
+    assert(k.getMessage.contains("k = 0"), k.getMessage)
+    val n = intercept[IllegalArgumentException](base(QueryIntent.Historical).copy(topN = -2))
+    assert(n.getMessage.contains("topN = -2"), n.getMessage)
+  }
+
+  test("a query frame with more than one row fails the request") {
+    val two = Seq(Tuple1(v(1.0, 0.0)), Tuple1(v(0.0, 1.0))).toDF("q_emb")
+    val e = intercept[Exception](
+      RagPlans.search(base(QueryIntent.Historical), two)(store).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[IllegalArgumentException]), e.toString)
+  }
+
+  test("a query frame with no row returns an empty answer") {
+    val none = q.limit(0)
+    val got = RagPlans.search(base(QueryIntent.Historical), none)(store)
+    assert(got.collect().isEmpty)
+    assert(got.count() == 0L)
+  }
 }

@@ -54,4 +54,38 @@ class ServeBudgetSpec extends AnyFunSuite {
     val (_, jobs) = SparkTest.jobsDuring(fn(spark, sf))
     assert(jobs == 0, s"building a warm rag_query_spec started $jobs Spark job(s)")
   }
+
+  // Structural: a request is one RagSearchExec, so it runs no exchange and
+  // no adaptive stage. Over a parquet query frame that is one job for the
+  // query row and one for the k-NN; a query vector already on the driver
+  // (a LocalRelation) leaves the k-NN job alone.
+  test("rag_query_spec: a warm routed request is 2 jobs, no shuffle stage, no AQE") {
+    val fn = SparkEntry.queries("rag_query_spec")
+    fn(spark, sf).collect()
+    val df = fn(spark, sf)
+    val plan = df.queryExecution.executedPlan
+    assert(plan.collectFirst {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a
+    }.isEmpty, s"adaptive plan in a rag request:\n$plan")
+    assert(plan.isInstanceOf[graft.plans.RagSearchExec], s"plan root:\n$plan")
+    val (_, jobs) = SparkTest.jobStartsDuring(df.collect())
+    // every stage of a job but its result stage is a shuffle map stage
+    val shuffleStages = jobs.map(_.stageInfos.size - 1).sum
+    assert(jobs.size == 2 && shuffleStages == 0,
+      s"${jobs.size} job(s), $shuffleStages shuffle stage(s); plan:\n$plan")
+  }
+
+  test("rag_query_spec: a query vector on the driver leaves one job") {
+    import spark.implicits._
+    val fn = SparkEntry.queries("rag_query_spec")
+    fn(spark, sf).collect()
+    val q = Seq(Tuple1(Array.fill(64)(0.125f))).toDF("q_emb")
+    val spec = graft.plans.QuerySpec(Some("T3"), 1700000000L - 1200L * 60L,
+      1700000000L, graft.plans.QueryIntent.Historical, 1700000000L)
+    val df = graft.plans.RagPlans.search(spec, q)(
+      graft.queries.PipelineQueries.vectorStoreServed(spark, sf))
+    val (rows, jobs) = SparkTest.jobsDuring(df.collect())
+    assert(rows.nonEmpty)
+    assert(jobs == 1, s"$jobs job(s) for a request with its vector on the driver")
+  }
 }

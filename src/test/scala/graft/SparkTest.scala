@@ -41,26 +41,34 @@ object SparkTest {
 
   private val JobTag = "graft.test.jobTag"
 
-  /** Runs `f` and counts the Spark jobs it starts. Jobs are matched by a
-    * local property of the calling thread, so a job another thread
-    * starts meanwhile (a streaming query an earlier suite left running)
-    * is not counted. */
+  /** Runs `f` and counts the Spark jobs it starts (see [[jobStartsDuring]]). */
   def jobsDuring[T](f: => T): (T, Int) = {
+    val (r, jobs) = jobStartsDuring(f)
+    (r, jobs.size)
+  }
+
+  /** Runs `f` and returns the start events of the Spark jobs it starts,
+    * which carry each job's stages. Jobs are matched by a local property
+    * of the calling thread, so a job another thread starts meanwhile (a
+    * streaming query an earlier suite left running) is not counted. */
+  def jobStartsDuring[T](f: => T)
+      : (T, Seq[org.apache.spark.scheduler.SparkListenerJobStart]) = {
     val sc = session.sparkContext
     val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.SparkListenerJobStart]()
     val counter = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(JobTag) == tag)
-          jobs.incrementAndGet(): Unit
+          jobs.add(e): Unit
     }
     sc.addSparkListener(counter)
     sc.setLocalProperty(JobTag, tag)
     try {
       val r = f
       drainBus()
-      (r, jobs.get())
+      (r, jobs.toArray(Array.empty[org.apache.spark.scheduler.SparkListenerJobStart]).toSeq)
     } finally {
       sc.setLocalProperty(JobTag, null)
       sc.removeSparkListener(counter)
