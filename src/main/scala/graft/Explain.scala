@@ -18,11 +18,16 @@ import graft.ops.SessionOps
   * ([[graft.tools.BroadcastBound]]: every hinted side must be bounded
   * independent of SF); each parquet scan's read/total columns (for
   * curating [[graft.tools.PlanAudit.EXPECT_READ_COLS]]); `construct_s`
-  * (building the DataFrame, eager loops included), `plan_s` and `exec_s`
-  * (a `count()`); the SQL metrics of graft's own operators in that
-  * `count()` (e.g. `RagSearchExec`'s rows scored, driver-merged
-  * candidates and query rows); and the top stages by summed task run
-  * time.
+  * (building the DataFrame, eager loops included), `plan_s` and `exec_s`;
+  * the SQL metrics of graft's own operators in that execution (e.g.
+  * `RagSearchExec`'s rows scored, driver-merged candidates and query
+  * rows); and the top stages by summed task run time.
+  *
+  * `exec_s` times the action a client runs: a `collect()` when the
+  * optimized plan bounds its rows (a limit, a global aggregate, a RAG
+  * request's top-N), else a `count()`, which would wrap a bounded serve
+  * plan in an aggregate, an exchange and adaptive stages no request
+  * runs. The line names the action it timed.
   *
   * A repeated name is a warm rep: the first occurrence absorbs codegen
   * and JIT (often 3-10× the steady state). With `outDir` each plan goes
@@ -77,8 +82,11 @@ object Explain {
         graft.tools.PlanAudit.scanStats(qe.sparkPlan).foreach { st =>
           println(f"  ${st.table}%-14s read=${st.readCols}%2d of ${st.totalCols}%2d")
         }
-        val (rows, execS) = timed(df.count())
-        println(f"-- construct_s=$constructS%.3f plan_s=$planS%.3f exec_s=$execS%.3f rows=$rows --")
+        val (action, (rows, execS)) =
+          if (qe.optimizedPlan.maxRows.isDefined) "collect" -> timed(df.collect().length.toLong)
+          else "count" -> timed(df.count())
+        println(f"-- construct_s=$constructS%.3f plan_s=$planS%.3f exec_s=$execS%.3f " +
+          s"($action()) rows=$rows --")
       } catch { case NonFatal(e) =>
         println(s"-- ERROR ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)} --")
         failed += name

@@ -2,13 +2,14 @@ package graft.plans
 
 import scala.collection.mutable
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeSet, BindReferences, Descending, Expression, InterpretedOrdering, InterpretedUnsafeProjection, JoinedRow, NullsLast, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.classic.Strategy
-import org.apache.spark.sql.execution.{BinaryExecNode, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.{BinaryExecNode, LocalTableScanExec, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -79,7 +80,15 @@ object RagSearch {
   * interpreted projections and orderings, so a request generates no code
   * beyond its children's. `executeCollect` returns the rows; `doExecute`
   * serves the same rows as a one-partition RDD for `count()`, writes and
-  * use as a subplan. */
+  * use as a subplan.
+  *
+  * Both jobs hand `SparkContext.runJob` an instance of a named class
+  * ([[RagQueryRows]], [[RagTopK]]), never a lambda, `mapPartitions` or
+  * `RDD.collect`. On every job Spark's ClosureCleaner reads and parses,
+  * with ASM, the class that defined each Scala lambda it is given; for
+  * `RDD.collect` and `runJob`'s own lambdas that is `RDD` and
+  * `SparkContext`, two very large class files. An object that is not a
+  * closure keeps only the serializability check. */
 case class RagSearchExec(
     store: SparkPlan, query: SparkPlan, spec: QuerySpec,
     dist: Expression, score: Expression, output: Seq[Attribute])
@@ -102,7 +111,10 @@ case class RagSearchExec(
     sparkContext.parallelize(search().toSeq, 1)
 
   private def search(): Array[InternalRow] = {
-    val qRows = query.executeCollect()
+    val qRows = query match {
+      case local: LocalTableScanExec => local.executeCollect()
+      case _ => sparkContext.runJob(query.execute(), new RagQueryRows).flatten
+    }
     longMetric("numQueryRows").add(qRows.length.toLong)
     val result =
       if (qRows.isEmpty) Array.empty[InternalRow]
@@ -119,30 +131,15 @@ case class RagSearchExec(
 
   /** The global top-k candidates, best first. */
   private def knn(q: InternalRow): Array[InternalRow] = {
-    val k = spec.k
     val ord = new InterpretedOrdering(Seq(
       SortOrder(output(3), Ascending, NullsLast, Seq.empty),
       SortOrder(output.head, Ascending)), candidateAttrs)
     val project = BindReferences.bindReferences(
       candidateAttrs.take(3) :+ dist, store.output ++ query.output)
-    val scored = longMetric("numRowsScored")
-    val perPartition = store.execute().mapPartitions { rows =>
-      val proj = InterpretedUnsafeProjection.createProjection(project)
-      val joined = new JoinedRow
-      // max-heap on the ordering: its head is the worst row kept
-      val heap = new java.util.PriorityQueue[InternalRow](k, ord.reverse)
-      var n = 0L
-      rows.foreach { r =>
-        n += 1
-        val c = proj(joined(r, q))
-        if (heap.size < k) heap.add(c.copy())
-        else if (ord.compare(c, heap.peek) < 0) { heap.poll(); heap.add(c.copy()) }
-      }
-      scored.add(n)
-      Iterator.single(heap.toArray(new Array[InternalRow](0)))
-    }.collect().flatten
+    val perPartition = sparkContext.runJob(store.execute(),
+      new RagTopK(q, project, ord, spec.k, longMetric("numRowsScored"))).flatten
     longMetric("numCandidates").add(perPartition.length.toLong)
-    perPartition.sorted(ord).take(k)
+    perPartition.sorted(ord).take(spec.k)
   }
 
   /** Keep the first row per (ticker, ts) in k-NN order, score, top-N. */
@@ -160,6 +157,39 @@ case class RagSearchExec(
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): RagSearchExec =
     copy(store = newLeft, query = newRight)
+}
+
+/** [[RagSearchExec]]'s query-row task: a copy of every row of one
+  * partition of the query frame. */
+final class RagQueryRows
+  extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] =
+    rows.map(_.copy()).toArray
+}
+
+/** [[RagSearchExec]]'s k-NN task: the partition's best `k` rows under
+  * `ord`, each the (vec_id, ticker, ts, dist) row `project` (bound over
+  * store ++ query columns) makes of a store row joined with `q`. Adds
+  * the rows it scored to `scored`. */
+final class RagTopK(
+    q: InternalRow, project: Seq[Expression], ord: Ordering[InternalRow], k: Int,
+    scored: SQLMetric)
+  extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] = {
+    val proj = InterpretedUnsafeProjection.createProjection(project)
+    val joined = new JoinedRow
+    // max-heap on the ordering: its head is the worst row kept
+    val heap = new java.util.PriorityQueue[InternalRow](k, ord.reverse)
+    var n = 0L
+    rows.foreach { r =>
+      n += 1
+      val c = proj(joined(r, q))
+      if (heap.size < k) heap.add(c.copy())
+      else if (ord.compare(c, heap.peek) < 0) { heap.poll(); heap.add(c.copy()) }
+    }
+    scored.add(n)
+    heap.toArray(new Array[InternalRow](0))
+  }
 }
 
 /** Planner strategy for [[RagSearch]]. */

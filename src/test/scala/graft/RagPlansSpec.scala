@@ -126,18 +126,26 @@ class RagPlansSpec extends AnyFunSuite {
     assert(n.getMessage.contains("topN = -2"), n.getMessage)
   }
 
+  /** The same query frame as a `LocalRelation` (read on the driver) and
+    * as an RDD-backed frame (read by a job). */
+  private def bothKinds(df: DataFrame): Seq[(String, DataFrame)] =
+    Seq("local" -> df, "job-backed" -> spark.createDataFrame(df.rdd, df.schema))
+
   test("a query frame with more than one row fails the request") {
     val two = Seq(Tuple1(v(1.0, 0.0)), Tuple1(v(0.0, 1.0))).toDF("q_emb")
-    val e = intercept[Exception](
-      RagPlans.search(base(QueryIntent.Historical), two)(store).collect())
-    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-    assert(chain.exists(_.isInstanceOf[IllegalArgumentException]), e.toString)
+    for ((kind, frame) <- bothKinds(two)) {
+      val e = intercept[Exception](
+        RagPlans.search(base(QueryIntent.Historical), frame)(store).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(_.isInstanceOf[IllegalArgumentException]), s"$kind: $e")
+    }
   }
 
   test("a query frame with no row returns an empty answer") {
-    val none = q.limit(0)
-    val got = RagPlans.search(base(QueryIntent.Historical), none)(store)
-    assert(got.collect().isEmpty)
-    assert(got.count() == 0L)
+    for ((kind, none) <- bothKinds(q.limit(0))) {
+      val got = RagPlans.search(base(QueryIntent.Historical), none)(store)
+      assert(got.collect().isEmpty, kind)
+      assert(got.count() == 0L, kind)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
-import org.scalacheck.{Gen, Properties, Test}
+import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.plans.{QueryIntent, QuerySpec, RagPlans}
@@ -14,7 +14,9 @@ import graft.plans.{QueryIntent, QuerySpec, RagPlans}
   * vector components and a few (ticker, ts) values force equal dists
   * (vec_id breaks the tie), duplicate (ticker, ts) keys, zero vectors and
   * null embeddings. Windows may be empty, k may exceed the rows and topN
-  * may exceed k; both intents. */
+  * may exceed k; both intents. The query frame is a `LocalRelation`
+  * (read on the driver) in one property and RDD-backed (read by a job)
+  * in the other. */
 object RagSearchPropertySpec extends Properties("graft.rag") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -70,17 +72,28 @@ object RagSearchPropertySpec extends Properties("graft.rag") {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  /** `RagPlans.search` against [[RagReference]] with the query frame `q`. */
+  private def agrees(rows: Seq[Row], spec: QuerySpec, q: DataFrame): Prop = {
+    val store = storeOf(rows)
+    val node = RagPlans.search(spec, q)(store)
+    val ref = RagReference.search(spec, q)(store)
+    val got = node.collect().toSeq
+    val want = ref.collect().toSeq
+    (node.schema == ref.schema) :| s"schema ${node.schema} != ${ref.schema}" &&
+      (got == want) :| s"rows $got != $want for $spec" &&
+      (node.count() == want.size.toLong) :| "count" &&
+      (readBack(node) == readBack(ref)) :| "parquet write"
+  }
+
   property("RagSearch == composed reference: rows, schema, count, parquet write") =
     forAll(storeGen, vecGen, specGen) { (rows, qv, spec) =>
-      val store = storeOf(rows)
-      val q = Seq(Tuple1(qv)).toDF("q_emb")
-      val node = RagPlans.search(spec, q)(store)
-      val ref = RagReference.search(spec, q)(store)
-      val got = node.collect().toSeq
-      val want = ref.collect().toSeq
-      (node.schema == ref.schema) :| s"schema ${node.schema} != ${ref.schema}" &&
-        (got == want) :| s"rows $got != $want for $spec" &&
-        (node.count() == want.size.toLong) :| "count" &&
-        (readBack(node) == readBack(ref)) :| "parquet write"
+      agrees(rows, spec, Seq(Tuple1(qv)).toDF("q_emb"))
+    }
+
+  // An RDD-backed query frame is read by a job of its own, not on the driver.
+  property("RagSearch == composed reference with a job-backed query frame") =
+    forAll(storeGen, vecGen, specGen) { (rows, qv, spec) =>
+      val local = Seq(Tuple1(qv)).toDF("q_emb")
+      agrees(rows, spec, spark.createDataFrame(local.rdd, local.schema))
     }
 }

@@ -75,6 +75,60 @@ class ServeBudgetSpec extends AnyFunSuite {
       s"${jobs.size} job(s), $shuffleStages shuffle stage(s); plan:\n$plan")
   }
 
+  /** Runs `f` and returns what Spark's ClosureCleaner logged, at DEBUG, on
+    * this thread for each function handed to `SparkContext.runJob`: its
+    * verdict on whether the function is a Scala closure. */
+  private def jobFunctionVerdicts[T](f: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val caller = Thread.currentThread()
+    val verdicts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(
+        "job-function-verdicts", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (Thread.currentThread() eq caller) {
+          val inRunJob = caller.getStackTrace.exists(fr =>
+            fr.getClassName == "org.apache.spark.SparkContext" && fr.getMethodName == "runJob")
+          if (inRunJob) verdicts.add(e.getMessage.getFormattedMessage): Unit
+        }
+    }
+    appender.start()
+    val name = "org.apache.spark.util.ClosureCleaner"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val logger = new LoggerConfig(name, Level.DEBUG, false)
+    logger.addAppender(appender, Level.DEBUG, null)
+    ctx.getConfiguration.addLogger(name, logger)
+    ctx.updateLoggers()
+    try {
+      val r = f
+      (r, verdicts.toArray(Array.empty[String]).toSeq)
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  // A Scala lambda handed to a job makes ClosureCleaner read and ASM-parse
+  // the class that defined it on every job: `RDD` and `SparkContext` for
+  // `RDD.collect`'s. RagSearchExec's jobs take instances of named classes,
+  // which ClosureCleaner only checks for serializability.
+  test("rag_query_spec: a warm routed request hands runJob no Scala closure") {
+    val fn = SparkEntry.queries("rag_query_spec")
+    fn(spark, sf).collect()
+    val df = fn(spark, sf)
+    val (rows, verdicts) = jobFunctionVerdicts(df.collect())
+    assert(rows.nonEmpty)
+    val NotAClosure = "Expected a closure; got (.+)".r
+    val classes = verdicts.map {
+      case NotAClosure(cls) => cls
+      case v => fail(s"a job function was cleaned as a closure: $v; all: $verdicts")
+    }
+    assert(classes == Seq("graft.plans.RagQueryRows", "graft.plans.RagTopK"), verdicts)
+  }
+
   test("rag_query_spec: a query vector on the driver leaves one job") {
     import spark.implicits._
     val fn = SparkEntry.queries("rag_query_spec")
