@@ -82,9 +82,7 @@ object Explain {
         graft.tools.PlanAudit.scanStats(qe.sparkPlan).foreach { st =>
           println(f"  ${st.table}%-14s read=${st.readCols}%2d of ${st.totalCols}%2d")
         }
-        val (action, (rows, execS)) =
-          if (qe.optimizedPlan.maxRows.isDefined) "collect" -> timed(df.collect().length.toLong)
-          else "count" -> timed(df.count())
+        val ((action, rows), execS) = timed(SessionOps.runAction(df))
         println(f"-- construct_s=$constructS%.3f plan_s=$planS%.3f exec_s=$execS%.3f " +
           s"($action()) rows=$rows --")
       } catch { case NonFatal(e) =>

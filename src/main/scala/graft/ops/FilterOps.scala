@@ -70,15 +70,24 @@ object FilterOps {
     *
     * The cutoff is a self-join, so `df` is evaluated TWICE (once for the
     * max, once for the rows it filters). Pass a scan or a materialized
-    * frame: over a derived plan — above all an opaque micro-batch whose
-    * lineage is a whole streaming chain — both evaluations run it in full
-    * (see `StreamOps.upsertBatch`). */
+    * frame: over a derived plan both evaluations run it in full. */
   def retentionDelete(df: DataFrame, typeCol: Column, typeVal: String,
                       tsCol: Column, retainDays: Int): DataFrame = {
-    val cutoff = df.agg(
-      (max(tsCol).cast("long") - lit(retainDays * 86400L)).as("cutoff_sec"))
+    val cutoff = df.agg(retentionCutoff(max(tsCol), retainDays).as("cutoff_sec"))
     df.join(broadcast(cutoff))
-      .filter(!(typeCol === typeVal && tsCol.cast("long") < col("cutoff_sec")))
+      .filter(retained(typeCol, typeVal, tsCol, col("cutoff_sec")))
       .drop("cutoff_sec")
   }
+
+  /** Retention's cutoff in floored epoch seconds: `retainDays` before the
+    * max event time `maxTs`; null when there is none. */
+  def retentionCutoff(maxTs: Column, retainDays: Int): Column =
+    maxTs.cast("long") - lit(retainDays * 86400L)
+
+  /** Retention's keep predicate, in SQL three-valued logic: a row of type
+    * `typeVal` older than `cutoffSec` is deleted, and so is any row the
+    * predicate makes null (a null `type` older than the cutoff, or a
+    * `typeVal` row with a null event time or cutoff). */
+  def retained(typeCol: Column, typeVal: String, tsCol: Column, cutoffSec: Column): Column =
+    !(typeCol === typeVal && tsCol.cast("long") < cutoffSec)
 }

@@ -236,6 +236,16 @@ object SessionOps {
     catch { case NonFatal(_) => }
   }
 
+  /** Runs the action a caller of `df` runs and returns its name and the
+    * rows it returned: `collect()` when the optimized plan bounds its rows
+    * (a limit, a global aggregate, a RAG request's top-N), `count()`
+    * otherwise. A `count()` would wrap a row-bounded plan, such as a RAG
+    * request's single operator, in an aggregate and an exchange that no
+    * request runs. Bench, Explain and ServeBudgetSpec time this. */
+  def runAction(df: DataFrame): (String, Long) =
+    if (df.queryExecution.optimizedPlan.maxRows.isDefined) "collect" -> df.collect().length.toLong
+    else "count" -> df.count()
+
   /** Waits up to `millis` until the asynchronous listener bus has
     * delivered every queued event, so a listener's counts are complete;
     * false when the bus did not drain. `waitUntilEmpty` is

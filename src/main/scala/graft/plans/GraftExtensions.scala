@@ -37,6 +37,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.expressions.BigramL1(exprs(0), exprs(1))))
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => RagSearchStrategy)
+    e.injectPlannerStrategy(_ => UpsertMergeStrategy)
     e.injectOptimizerRule(_ => ApproxDistinctRewrite)
     e.injectOptimizerRule(_ => NanosRangePushdown)
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.ops.{DedupOps, FilterOps, SessionOps}
+import graft.ops.SessionOps
 
 /** Typed message for the keyed-state snapshot operator. */
 case class SnapshotMsg(ticker: String, publish_time: Long, current_price: Double)
@@ -316,33 +316,42 @@ object StreamOps {
   def dedupWithWatermark(stream: DataFrame, tsCol: String, delay: String): DataFrame =
     stream.withWatermark(tsCol, delay).dropDuplicates("id", tsCol)
 
-  /** T3+T4+V3: the idempotent foreachBatch merge: union the incoming batch
-    * with the current store, keep the latest row per id (A3), apply the
-    * retention filter (P7), write back. At-least-once delivery + this merge
-    * = effectively-once state, the reference's upsert semantic
-    * (consumer.py:176-181).
+  /** T3+T4+V3: the idempotent foreachBatch merge, the reference's upsert
+    * semantic (consumer.py:176-181) plus its retention delete
+    * (consumer.py:115-130): the latest row per `id` over store ∪ batch,
+    * then `retainType` rows older than `retainDays` before the merged max
+    * `publish_time` are deleted. At-least-once delivery + this merge =
+    * effectively-once state.
     *
-    * Contract: `batch` is evaluated ONCE. Inside `foreachBatch` the batch
-    * is an opaque RDD whose lineage is the whole decode/dedup/enrich
-    * chain, and the retention cutoff reads the merge twice (see
-    * [[FilterOps.retentionDelete]]), so the latest-wins merge is
-    * materialized first ([[SessionOps.truncate]], which honours
-    * the reliable-checkpoint mode) and the cutoff and filter run over its
-    * blocks. The result is materialized too — a `LogicalRDD` at the top,
-    * no lineage back to `store` or `batch` — and the intermediate merge is
-    * released here. The caller owns the result: once a later upsert has
-    * superseded it and no reader needs it, release it with
+    * One [[graft.plans.UpsertMerge]] node, two jobs: one over the batch's
+    * and the store's partitions that returns the batch's rows and each
+    * partition's max event time, and the narrow merge of each store
+    * partition with the batch rows that hash to it, materialized by
+    * [[SessionOps.truncate]] (which honours the reliable-checkpoint mode).
+    * `batch` is evaluated ONCE (inside `foreachBatch` it is an opaque RDD
+    * whose lineage is the whole decode/dedup/enrich chain). The driver
+    * holds the batch's latest row per id, so the trigger's size bounds a
+    * batch.
+    *
+    * The result is hash-partitioned by `id` into
+    * `spark.sql.shuffle.partitions` partitions and keeps that through a
+    * later `localCheckpoint()`, so the store is shuffled only when it is
+    * not (the first batch, in practice). The store must hold at most one
+    * row per id, as every result of this function does.
+    *
+    * Ties: `publish_time` DESC NULLS LAST, then every orderable column
+    * ASC NULLS FIRST ([[graft.plans.UpsertMerge.latestFirst]]); a store
+    * row that ties its batch row stays. So any split of the same messages
+    * into batches gives the same store while retention deletes nothing.
+    *
+    * The result is materialized — a `LogicalRDD` at the top, no lineage
+    * back to `store` or `batch`. The caller owns it: once a later upsert
+    * has superseded it and no reader needs it, release it with
     * [[SessionOps.releaseQuiet]]. */
   def upsertBatch(store: DataFrame, batch: DataFrame,
                   retainType: String, retainDays: Int): DataFrame = {
-    val merged = SessionOps.truncate(DedupOps.latestWins(
-      store.unionByName(batch, allowMissingColumns = true),
-      id = col("id"),
-      order = Seq(col("publish_time").desc)))
-    try SessionOps.truncate(FilterOps.retentionDelete(
-      merged, col("type"), retainType,
-      col("publish_time").cast("timestamp"), retainDays))
-    finally SessionOps.releaseQuiet(merged)
+    val merge = graft.plans.UpsertMerge(store, batch, retainType, retainDays)
+    org.apache.spark.sql.graft.ColumnBridge.keepPartitioning(merge, SessionOps.truncate(merge))
   }
 
   /** T3 (keyed-state form): the LATEST_* singleton snapshot as explicit

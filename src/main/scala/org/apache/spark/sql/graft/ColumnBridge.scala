@@ -37,6 +37,34 @@ object ColumnBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** `checkpointed`, the `localCheckpoint()`/`checkpoint()` of `df`,
+    * declaring the partitioning of `df`'s final plan. Spark records the
+    * executed plan's `outputPartitioning`, and an adaptive plan reports
+    * none (`AdaptiveSparkPlanExec` is a leaf of unknown partitioning), so
+    * a checkpoint of an adaptive plan forgets a partitioning its rows
+    * have. This declares a hash partitioning of the final plan; any other
+    * pair is returned as it is. */
+  def keepPartitioning(df: org.apache.spark.sql.DataFrame,
+                       checkpointed: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    (df.queryExecution.executedPlan, checkpointed.queryExecution.analyzed) match {
+      case (a: AdaptiveSparkPlanExec, lr: LogicalRDD)
+          if lr.outputPartitioning.isInstanceOf[UnknownPartitioning] =>
+        a.executedPlan.outputPartitioning match {
+          case p: HashPartitioning if p.numPartitions == lr.rdd.getNumPartitions &&
+              p.references.subsetOf(lr.outputSet) =>
+            val spark = checkpointed.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+            ofRows(spark, LogicalRDD(lr.output, lr.rdd, p, lr.outputOrdering, lr.isStreaming,
+              lr.stream)(spark, Some(lr.computeStats()), None))
+          case _ => checkpointed
+        }
+      case _ => checkpointed
+    }
+  }
+
   /** DataFrame from a logical plan (Dataset.ofRows is private[sql]). */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)

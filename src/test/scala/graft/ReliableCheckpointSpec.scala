@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,7 +8,8 @@ import graft.ops.SessionOps
 
 /** The conf-switched reliable-checkpoint mode (SessionOps.truncate):
   * `spark.graft.checkpoint.reliable=true` routes every iterative-loop
-  * lineage truncation (CC loop, the BPE trainer) through a
+  * lineage truncation (CC loop, the BPE trainer, the streaming upsert)
+  * through a
   * directory-backed `Dataset.checkpoint()` — the executor-loss-safe
   * plan for a real cluster, where localCheckpoint's executor-resident
   * blocks die with the executor and kill the job. Asserted, not
@@ -120,5 +122,28 @@ class ReliableCheckpointSpec extends AnyFunSuite {
     assert(reliable == local, "BPE merges diverged between checkpoint modes")
     assert(local.nonEmpty && local.head._2 == "a" && local.head._3 == "b")
     assert(ckptFiles(dir) > 0, s"no reliable checkpoint files under $dir")
+  }
+
+  test("streaming upsert: reliable mode bit-equal, files on disk, still id-partitioned") {
+    import spark.implicits._
+    val store = Seq(Msg("a", "X", "news", 1000L, 1.0), Msg("old", "X", "daily_summary", 0L, 1.0),
+      Msg("b", "X", "news", 2000L, 2.0)).toDF()
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Msg("a", "X", "news", 3000L, 3.0), Msg("c", "Y", "daily_summary", 4000L, 4.0)), 2))
+    def upsert(): (Seq[Row], Int) = {
+      val out = graft.streaming.StreamOps.upsertBatch(store, batch, "daily_summary", 0)
+      try (out.collect().toSeq.sortBy(_.getString(0)), out.rdd.getNumPartitions)
+      finally SessionOps.releaseQuiet(out)
+    }
+    val local = upsert()
+    val dir = java.nio.file.Files.createTempDirectory("graft-rck-upsert").toString
+    val (reliable, files) = withReliable(dir) {
+      val out = graft.streaming.StreamOps.upsertBatch(store, batch, "daily_summary", 0)
+      ((out.collect().toSeq.sortBy(_.getString(0)), out.rdd.getNumPartitions), ckptFiles(dir))
+    }
+    assert(reliable == local, "upsert diverged between checkpoint modes")
+    assert(local._1.map(_.getString(0)) == Seq("a", "b", "c") && local._1.head.getLong(3) == 3000L)
+    assert(local._2 == spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    assert(files > 0, s"no reliable checkpoint files under $dir")
   }
 }

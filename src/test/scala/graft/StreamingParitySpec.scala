@@ -26,16 +26,18 @@ import graft.ops.{DedupOps, FilterOps}
   * global cutoff. No tolerance, bit-equal JSON comparison.
   *
   * Deliberately NOT in this sweep: the COMPOSITE `StreamOps.upsertBatch`
-  * (latest-wins + retention fused per batch). Its interleaved deletions
-  * are true state transitions, not a pure fold: once retention deletes
-  * an id's then-latest row (another id's newer arrival having raised
-  * the cutoff past it), a later-arriving OLDER row of the same id wins
-  * latest-wins against an empty store — where the one-shot batch would
-  * have discarded it against the (also-deleted) newer row. That
-  * divergence is the SEMANTIC of an upsert store under retention, so
-  * its contract is replay-idempotence and latest-wins/TTL law coverage
-  * (StreamingSpec's T3/V3/T4 test), not batch-fold equality — while its
-  * two constituent laws ARE fold-exact and sweep-verified here.
+  * (latest-wins + retention fused per batch, one `UpsertMerge` node). Its
+  * interleaved deletions are true state transitions, not a pure fold:
+  * once retention deletes an id's then-latest row (another id's newer
+  * arrival having raised the cutoff past it), a later-arriving OLDER row
+  * of the same id wins latest-wins against an empty store — where the
+  * one-shot batch would have discarded it against the (also-deleted)
+  * newer row. That divergence is the SEMANTIC of an upsert store under
+  * retention, so its contract is row-for-row equality with the composed
+  * window + retention reference per batch, split-independence while
+  * retention deletes nothing (UpsertPropertySpec), and replay-idempotence
+  * (StreamingSpec's T3/V3/T4 test) — while its two constituent laws ARE
+  * fold-exact and sweep-verified here.
   */
 class StreamingParitySpec extends AnyFunSuite {
   lazy val spark = SparkTest.session
