@@ -20,8 +20,9 @@ import graft.ops.SessionOps
   * curating [[graft.tools.PlanAudit.EXPECT_READ_COLS]]); `construct_s`
   * (building the DataFrame, eager loops included), `plan_s` and `exec_s`;
   * the SQL metrics of graft's own operators in that execution (e.g.
-  * `RagSearchExec`'s rows scored, driver-merged candidates and query
-  * rows); and the top stages by summed task run time.
+  * `RagSearchExec`'s in-window rows scored, driver-merged candidates,
+  * query rows and files its prepared scan reads); and the top stages by
+  * summed task run time.
   *
   * `exec_s` times the action a client runs: a `collect()` when the
   * optimized plan bounds its rows (a limit, a global aggregate, a RAG

@@ -260,22 +260,47 @@ object SessionOps {
     } catch { case NonFatal(_) => false }
 
   /** One concurrent map per session, for state a session reuses across
-    * queries (resolved scans, store relations, fitted bases). Keyed
-    * WEAKLY by session: a map goes with its session once nothing else
-    * holds the session — a cached `DataFrame` value does hold it, so
-    * maps of frames live as long as the process. */
+    * queries (resolved scans, store relations, fitted bases, prepared RAG
+    * store scans). The maps hang off the session itself ([[SessionMaps]]),
+    * so nothing outside the session reaches them: a value may reference
+    * its session, as a cached `DataFrame` or a scan RDD does, and the
+    * session still goes with its maps and their values once nothing else
+    * holds it. */
   final class PerSession[K, V] {
-    private val maps = new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[K, V]]()
     def apply(spark: SparkSession): scala.collection.concurrent.TrieMap[K, V] =
-      maps.synchronized {
-        var m = maps.get(spark)
-        if (m == null) {
-          m = scala.collection.concurrent.TrieMap.empty
-          maps.put(spark, m)
-        }
-        m
+      SessionMaps.of(spark).maps
+        .computeIfAbsent(this, _ => scala.collection.concurrent.TrieMap.empty[Any, Any])
+        .asInstanceOf[scala.collection.concurrent.TrieMap[K, V]]
+  }
+
+  /** The [[PerSession]] maps of `owner`. A session's planner strategy list
+    * (`experimental.extraStrategies`) is the one registry on a session
+    * that takes an arbitrary object, so the holder is a strategy that
+    * plans nothing. `cloneSession` (a streaming query's session) copies
+    * that list; `owner` tells a clone that a holder it finds is its
+    * parent's. */
+  private final class SessionMaps(val owner: SparkSession)
+      extends org.apache.spark.sql.classic.Strategy {
+    val maps = new java.util.concurrent.ConcurrentHashMap[
+      PerSession[_, _], scala.collection.concurrent.TrieMap[Any, Any]]()
+    def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = Nil
+  }
+
+  private object SessionMaps {
+    def of(spark: SparkSession): SessionMaps = {
+      def own = spark.experimental.extraStrategies.collectFirst {
+        case m: SessionMaps if m.owner eq spark => m
       }
+      own.getOrElse(synchronized {
+        own.getOrElse {
+          val m = new SessionMaps(spark)
+          spark.experimental.extraStrategies =
+            spark.experimental.extraStrategies.filterNot(_.isInstanceOf[SessionMaps]) :+ m
+          m
+        }
+      })
+    }
   }
 
   /** [[spreadIfNarrow]] with an explicit target — for the sites whose

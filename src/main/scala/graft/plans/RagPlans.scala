@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-
-import graft.ops.{Num, VectorOps}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Add, Cast, Divide, Exp, Expression, Floor, Greatest, Literal, Multiply, Subtract, UnaryMinus}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.DoubleType
 
 /** Search intent, as emitted by the reference's router
   * (/root/reference/src/app/rag_engine.py:96-99): REAL_TIME applies the
@@ -51,38 +51,51 @@ final case class QuerySpec(
   * from a [[QuerySpec]] as ONE plan (reference call chain
   * rag_engine.py:184-253).
   *
-  * Scale shape: the window/ticker filters stay Filters on the store, so
-  * they reach the parquet scan (partition pruning on the ticker, the ts
-  * window pushed into the row-group filter). Everything after the filter
-  * is one [[RagSearchExec]]: it collects the one query row (no job when
-  * the query frame is a `LocalRelation`), runs one job over the store in
-  * which each partition keeps its top-k, merges the ≤ k·partitions
-  * candidates on the driver, and applies keep-first, rescore and top-N
-  * there over ≤ k rows. No exchange, no Window and no adaptive stages:
-  * a request over a parquet query frame is 2 jobs and shuffles nothing,
-  * however large the store. One pass over the vector store.
+  * Scale shape: the ticker clause stays a Filter on the store, so it
+  * reaches the parquet scan as partition pruning. Everything else is one
+  * [[RagSearchExec]], and the spec's window, `now`, intent, k and top-N
+  * are parameters of that node, not literals in the store's plan. So
+  * every request on one store and route runs the same store plan, which
+  * the node executes once per session and store version (its prepared
+  * scan, see [[PreparedScans]]). It collects the one query row (no job
+  * when the query frame is a `LocalRelation`), runs one job over the
+  * prepared scan in which each partition tests the window and keeps its
+  * top-k, merges the ≤ k·partitions candidates on the driver, and applies
+  * keep-first, rescore and top-N there over ≤ k rows. No exchange, no
+  * Window and no adaptive stages: a request over a parquet query frame is
+  * 2 jobs and shuffles nothing, however large the store. One pass over
+  * the vector store's route.
   */
 object RagPlans {
 
   /** Required store columns: `vec_id` (unique long), `embedding`
-    * (array&lt;float&gt;), `ticker` (string), `ts` (epoch seconds) — the
-    * engine layout of the reference's Chroma metadata
+    * (array&lt;float&gt;), `ticker` (string), `ts` (epoch seconds, long) —
+    * the engine layout of the reference's Chroma metadata
     * {ticker, timestamp} (rag_engine.py:230-236). */
   val StoreColumns: Seq[String] = Seq("vec_id", "embedding", "ticker", "ts")
 
-  /** Intent-dependent score (rag_engine.py:147-163): REAL_TIME is the
-    * 0.6·sim + 0.4·exp(−age/14400) decay blend with age clamped at 0 for
+  /** Intent-dependent score (rag_engine.py:147-163) over resolved `dist`
+    * (double) and `ts` (long) columns: REAL_TIME is the
+    * 0.6·sim + 0.4·exp(−age/14400) decay blend of
+    * [[graft.ops.VectorOps.timeDecayScore]], with age clamped at 0 for
     * future-stamped rows (rag_engine.py:158-159); HISTORICAL is pure
-    * similarity. Both quantized at 1e-6 ([[Num.r6]]) so the score is
-    * bit-comparable across engines. */
-  def score(spec: QuerySpec)(dist: Column, ts: Column): Column =
+    * similarity. Both are quantized at 1e-6 as [[graft.ops.Num.r6]] does,
+    * so the score is bit-comparable across engines. It is built as the
+    * resolved expression the analyzer makes of those column formulas, so
+    * a request analyzes nothing for it; RagSearchPropertySpec holds the
+    * two equal. */
+  def score(spec: QuerySpec, dist: Expression, ts: Expression): Expression = {
+    def r6(x: Expression): Expression =
+      Divide(Cast(Floor(Add(Multiply(x, Literal(1e6)), Literal(0.5))), DoubleType), Literal(1e6))
+    val sim = Subtract(Literal(1.0), dist)
     spec.intent match {
       case QueryIntent.RealTime =>
-        VectorOps.timeDecayScore(
-          dist, greatest(lit(spec.now) - ts, lit(0L)).cast("double"))
-      case QueryIntent.Historical =>
-        Num.r6(lit(1.0) - dist)
+        val age = Cast(Greatest(Seq(Subtract(Literal(spec.now), ts), Literal(0L))), DoubleType)
+        r6(Add(Multiply(Literal(0.6), sim),
+          Multiply(Literal(0.4), Exp(Divide(UnaryMinus(age), Literal(14400.0))))))
+      case QueryIntent.Historical => r6(sim)
     }
+  }
 
   /** Compile `spec` against a vector store (columns [[StoreColumns]]) and
     * a query frame holding `q_emb`. Returns the top-N context rows:
@@ -90,15 +103,13 @@ object RagPlans {
     * rows; one with more than one row fails the request with an
     * `IllegalArgumentException` when it executes. */
   def search(spec: QuerySpec, queryVec: DataFrame)(store: DataFrame): DataFrame = {
-    // P4 time window + P5 optional ticker equality (rag_engine.py:201-210):
-    // plain conjunctive scan predicates, so Catalyst pushes them into the
-    // source — the k-NN never sees out-of-window rows.
-    val windowed = store.filter(col("ts").between(spec.start, spec.end))
-    val filtered =
-      spec.ticker.fold(windowed)(t => windowed.filter(col("ticker") === t))
+    // P5 optional ticker equality (rag_engine.py:207-210): a plain scan
+    // predicate, so Catalyst prunes the store's ticker partitions. The P4
+    // time window (rag_engine.py:201-206) is the node's own parameter.
+    val routed = spec.ticker.fold(store)(t => store.filter(col("ticker") === t))
     // V1 k-NN (rag_engine.py:212-217), O4 (ticker, ts) keep-first in rank
     // order (rag_engine.py:230-239), W5 intent rescore + W4 top-N
     // (rag_engine.py:241-253).
-    RagSearch(spec, filtered, queryVec)
+    RagSearch(spec, routed, queryVec)
   }
 }

@@ -45,11 +45,12 @@ object PipelineQueries extends QueryPack {
   /** [[vectorStore]] persisted as a TICKER-PARTITIONED parquet store
     * ([[graft.ops.DerivedStore]] staging, like the IVF index): the serve
     * layout for the RAG point-lookup shape. The inline frame derives
-    * ticker/ts as expressions, so a spec's ticker/window predicates can
-    * never reach the parquet reader; the materialized layout turns the
-    * ticker equality into DIRECTORY-level partition pruning and pushes
-    * the ts window into the row-group filter — the difference between
-    * scanning one ticker's files and the whole store at 100 TB.
+    * ticker as an expression, so a spec's ticker predicate can never
+    * reach the parquet reader; the materialized layout turns the ticker
+    * equality into DIRECTORY-level partition pruning — the difference
+    * between scanning one ticker's files and the whole store at 100 TB.
+    * The ts window is a parameter of the request's `RagSearchExec`, which
+    * tests it per row over the route's prepared scan.
     * `rag_search_pipeline` stays on the inline frame (the honest
     * build-side price); `rag_query_spec` — the ticker-routed lookup —
     * serves from the store. */

@@ -508,22 +508,22 @@ object VectorQueries extends QueryPack {
     * exact per-dim means, centered values, covariance cells, and the
     * e_0 start vector — shared by both PCA oracles. */
   private lazy val PCA_BASE_CTES: String =
-    s"""ex AS (
+    s"""ex AS MATERIALIZED (
        |  SELECT vec_id, generate_subscripts(embedding, 1) AS j,
        |         CAST(unnest(embedding) AS DOUBLE) AS x
        |  FROM embeddings
-       |), mu AS (
+       |), mu AS MATERIALIZED (
        |  SELECT j, ${graft.ops.Num.DSUM6_SQL(graft.ops.Num.R6_SQL("x"))} / count(*) AS mu
        |  FROM ex GROUP BY j
-       |), cent AS (
+       |), cent AS MATERIALIZED (
        |  SELECT vec_id, j, x - mu AS cx FROM ex JOIN mu USING (j)
-       |), cov AS (
+       |), cov AS MATERIALIZED (
        |  SELECT a.j AS i, b.j AS j,
        |         ${graft.ops.Num.DSUM6_SQL(graft.ops.Num.R6_SQL("a.cx * b.cx"))}
        |           / ((SELECT count(*) FROM embeddings) - 1) AS c
        |  FROM cent a JOIN cent b USING (vec_id)
        |  GROUP BY a.j, b.j
-       |), v0 AS (
+       |), v0 AS MATERIALIZED (
        |  SELECT j, CASE WHEN j = 1 THEN 1.0 ELSE 0.0 END AS v
        |  FROM (SELECT DISTINCT j FROM ex)
        |)""".stripMargin
@@ -533,12 +533,12 @@ object VectorQueries extends QueryPack {
     * ascending-i ordered norm fold — exactly the driver while-loops, so
     * every add runs in the same order in both engines. */
   private def pcaRound(covT: String, vin: String, w: String, vout: String): String =
-    s"""$w AS (
+    s"""$w AS MATERIALIZED (
        |  SELECT cv.i, list_reduce(list(cv.c * $vin.v ORDER BY cv.j), (a, b) -> a + b) AS w
        |  FROM $covT cv JOIN $vin ON cv.j = $vin.j GROUP BY cv.i
-       |), ${vout}n AS (
+       |), ${vout}n AS MATERIALIZED (
        |  SELECT sqrt(list_reduce(list(w * w ORDER BY i), (a, b) -> a + b)) AS nrm FROM $w
-       |), $vout AS (
+       |), $vout AS MATERIALIZED (
        |  SELECT i AS j, w / nrm AS v FROM $w, ${vout}n
        |)""".stripMargin
 
@@ -1624,16 +1624,16 @@ object VectorQueries extends QueryPack {
       // then 3 more rounds from e_1 and a dual projection.
       s"""WITH $PCA_BASE_CTES,
          |${pcaRound("cov", "v0", "w1", "v1")}, ${pcaRound("cov", "v1", "w2", "v2")}, ${pcaRound("cov", "v2", "w3", "v3")},
-         |w4 AS (
+         |w4 AS MATERIALIZED (
          |  SELECT cv.i, list_reduce(list(cv.c * v3.v ORDER BY cv.j), (a, b) -> a + b) AS w
          |  FROM cov cv JOIN v3 ON cv.j = v3.j GROUP BY cv.i
-         |), lam AS (
+         |), lam AS MATERIALIZED (
          |  SELECT list_reduce(list(v3.v * w4.w ORDER BY v3.j), (a, b) -> a + b) AS l
          |  FROM v3 JOIN w4 ON v3.j = w4.i
-         |), cov2 AS (
+         |), cov2 AS MATERIALIZED (
          |  SELECT cv.i, cv.j, cv.c - lam.l * a.v * b.v AS c
          |  FROM cov cv JOIN v3 a ON cv.i = a.j JOIN v3 b ON cv.j = b.j, lam
-         |), u0 AS (
+         |), u0 AS MATERIALIZED (
          |  SELECT j, CASE WHEN j = 2 THEN 1.0 ELSE 0.0 END AS v
          |  FROM (SELECT DISTINCT j FROM ex)
          |), ${pcaRound("cov2", "u0", "x1", "u1")}, ${pcaRound("cov2", "u1", "x2", "u2")}, ${pcaRound("cov2", "u2", "x3", "u3")}

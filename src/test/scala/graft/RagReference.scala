@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.CosineSimilarity.cosineSim
-import graft.ops.{DedupOps, VectorOps}
-import graft.plans.{QuerySpec, RagPlans}
+import graft.ops.{DedupOps, Num, VectorOps}
+import graft.plans.{QueryIntent, QuerySpec}
 
 /** The RAG request composed from DataFrame operators: the reference that
   * [[graft.plans.RagSearch]] must equal row for row. Window/ticker filter,
@@ -27,8 +27,18 @@ object RagReference {
       keys = Seq(col("ticker"), col("ts")),
       order = Seq(col("dist").asc_nulls_last, col("vec_id")))
     deduped
-      .withColumn("score", RagPlans.score(spec)(col("dist"), col("ts")))
+      .withColumn("score", score(spec)(col("dist"), col("ts")))
       .orderBy(col("score").desc, col("vec_id")).limit(spec.topN)
       .select("vec_id", "ticker", "ts", "dist", "score")
   }
+
+  /** The intent score (rag_engine.py:147-163) composed from the column
+    * formulas: the decay blend with age clamped at 0, or pure similarity,
+    * both r6-quantized. */
+  def score(spec: QuerySpec)(dist: Column, ts: Column): Column =
+    spec.intent match {
+      case QueryIntent.RealTime =>
+        VectorOps.timeDecayScore(dist, greatest(lit(spec.now) - ts, lit(0L)).cast("double"))
+      case QueryIntent.Historical => Num.r6(lit(1.0) - dist)
+    }
 }

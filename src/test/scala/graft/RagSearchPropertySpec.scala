@@ -16,7 +16,7 @@ import graft.plans.{QueryIntent, QuerySpec, RagPlans}
   * null embeddings. Windows may be empty, k may exceed the rows and topN
   * may exceed k; both intents. The query frame is a `LocalRelation`
   * (read on the driver) in one property and RDD-backed (read by a job)
-  * in the other. */
+  * in the other; a third sends several specs against one store. */
 object RagSearchPropertySpec extends Properties("graft.rag") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -95,5 +95,19 @@ object RagSearchPropertySpec extends Properties("graft.rag") {
     forAll(storeGen, vecGen, specGen) { (rows, qv, spec) =>
       val local = Seq(Tuple1(qv)).toDF("q_emb")
       agrees(rows, spec, spark.createDataFrame(local.rdd, local.schema))
+    }
+
+  // Requests back to back against one store share its prepared scans: a
+  // repeated route reuses the first request's scan whatever its window,
+  // intent, `now`, k and topN.
+  property("RagSearch == composed reference for several specs against one store") =
+    forAll(storeGen, vecGen, Gen.listOfN(4, specGen)) { (rows, qv, specs) =>
+      val store = storeOf(rows)
+      val q = Seq(Tuple1(qv)).toDF("q_emb")
+      specs.map { spec =>
+        val got = RagPlans.search(spec, q)(store).collect().toSeq
+        val want = RagReference.search(spec, q)(store).collect().toSeq
+        (got == want) :| s"rows $got != $want for $spec"
+      }.reduce(_ && _)
     }
 }

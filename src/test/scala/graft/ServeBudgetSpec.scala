@@ -76,6 +76,52 @@ class ServeBudgetSpec extends AnyFunSuite {
       s"${jobs.size} job(s), $shuffleStages shuffle stage(s); plan:\n$plan")
   }
 
+  /** Rows the request's own store scans read: only a scan the request
+    * executes counts into its own plan's metrics. */
+  private def storeRowsRead(df: org.apache.spark.sql.DataFrame): Long =
+    df.queryExecution.executedPlan.asInstanceOf[graft.plans.RagSearchExec].store.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numOutputRows").value
+    }.sum
+
+  // Structural: the store child of a warm request is the route's prepared
+  // scan, so the request's own scan reads no row.
+  test("rag_query_spec: a second warm routed request does not execute the store child") {
+    val fn = SparkEntry.queries("rag_query_spec")
+    fn(spark, sf).collect()
+    val df = fn(spark, sf)
+    assert(df.collect().nonEmpty)
+    assert(storeRowsRead(df) == 0L, "a warm request executed its store child")
+  }
+
+  // Real traffic moves the window and `now` on every request. They are
+  // parameters of the request's node, so a warm request compiles nothing
+  // and reuses the route's prepared scan.
+  test("moving literals: no Janino compilation and no store execution after the first request") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    import graft.plans.{QueryIntent, QuerySpec, RagPlans}
+    val store = graft.queries.PipelineQueries.vectorStoreServed(spark, sf)
+    val q = Seq(Tuple1(Array.tabulate(64)(d => (d % 5).toFloat - 2f))).toDF("q_emb")
+    val now0 = 1700000000L
+    val specs = (0 until 20).map { i =>
+      QuerySpec(Some("T3"), now0 - (300L + 37L * i) * 60L, now0 - i * 60L,
+        if (i % 2 == 0) QueryIntent.RealTime else QueryIntent.Historical, now0 + i * 10L)
+    }
+    RagPlans.search(specs.head, q)(store).collect()
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val answers = specs.tail.map { s =>
+      val df = RagPlans.search(s, q)(store)
+      val rows = df.collect().toSeq
+      assert(storeRowsRead(df) == 0L, s"$s executed the store child")
+      rows
+    }
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    assert(compiled == 0, s"$compiled Janino compilation(s) over 19 warm requests")
+    specs.tail.zip(answers).foreach { case (s, got) =>
+      assert(got == RagReference.search(s, q)(store).collect().toSeq, s"answer for $s")
+    }
+  }
+
   /** Runs `f` and returns what Spark's ClosureCleaner logged, at DEBUG, on
     * this thread for each function handed to `SparkContext.runJob`: its
     * verdict on whether the function is a Scala closure. */

@@ -191,4 +191,35 @@ class SessionOpsSpec extends AnyFunSuite {
     assert(state.count() == 10L)
     SessionOps.releaseQuiet(state)
   }
+
+  /** Fills the per-session maps from a new session (`Tables.scanCache`,
+    * the `DerivedStore` relation cache and the prepared RAG scans) over a
+    * data set in `dir`, and returns only a weak reference to it. */
+  private def usedSession(dir: String): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
+    val s = spark.newSession()
+    import s.implicits._
+    Seq((0L, Array(1f, 0f), 3), (1L, Array(0f, 1f), 4)).toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    val q = graft.model.Tables.embeddings(s, dir)
+      .filter($"vec_id" === 0).selectExpr("embedding AS q_emb")
+    val store = graft.queries.PipelineQueries.vectorStoreServed(s, dir)
+    val spec = graft.plans.QuerySpec(None, 0L, Long.MaxValue,
+      graft.plans.QueryIntent.Historical, 1700000000L)
+    assert(graft.plans.RagPlans.search(spec, q)(store).collect().nonEmpty)
+    new java.lang.ref.WeakReference(s)
+  }
+
+  test("a dropped session is collected with its per-session maps") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_session_maps").toFile
+    // the RAG store this data set publishes
+    val store = new java.io.File("/tmp/graft_rag_store", dir.getName)
+    try {
+      val session = usedSession(dir.getPath)
+      assert((1 to 50).exists { _ => System.gc(); Thread.sleep(100); session.get == null },
+        "a session the caller dropped is still reachable")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+      org.apache.commons.io.FileUtils.deleteDirectory(store)
+    }
+  }
 }
