@@ -34,24 +34,6 @@ object Bench {
     // reps is the stable-floor estimator the ScalingProbe already uses,
     // and is the basis for BENCH_NOTES cross-round comparisons.
     val reps = envOr("SPARK_GRAFT_BENCH_REPS", "1")(_.toIntOption.filter(_ > 0))
-    // Opt-in suite-order override (default: registry order, the driver
-    // contract) — the position-vs-query A/B for the r8 late-suite
-    // inflation: if per-query times follow POSITION when the order is
-    // reversed/shuffled, the inflation is a run-scoped environment effect
-    // (JIT churn, heap aging, box contention), not any query's plan.
-    //   SPARK_GRAFT_BENCH_ORDER = registry | reverse | shuffle[:<seed>]
-    // Only the exact forms are accepted: an A/B run against a silently
-    // different permutation would corrupt the position-vs-query
-    // diagnosis this feature exists for.
-    val ShuffleSeed = """shuffle:(-?\d+)""".r
-    val (orderMode, ordered) = envOr("SPARK_GRAFT_BENCH_ORDER", "registry") {
-      case "registry" | "" => Some(("registry", selected))
-      case "reverse" => Some(("reverse", selected.reverse))
-      case "shuffle" => Some(("shuffle:0", new scala.util.Random(0L).shuffle(selected)))
-      case ShuffleSeed(seed) => seed.toLongOption.map(n =>
-        (s"shuffle:$seed", new scala.util.Random(n).shuffle(selected)))
-      case _ => None
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.ops.SessionOps.cpus
     val spark = graft.ops.SessionOps.localSession()
@@ -125,7 +107,7 @@ object Bench {
     // appear as a legitimate ~4 ms instant-analysis-error entry (the r7
     // failure mode: 3 broken queries "ran" at 0.004 s).
     val errored = scala.collection.mutable.ArrayBuffer[String]()
-    val results = ordered.map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       var best = Double.MaxValue
       var ok = true
       for (_ <- 1 to reps if ok) {
@@ -165,7 +147,7 @@ object Bench {
     // the run" — both are positional. Cumulative GC time (all collectors)
     // makes the two distinguishable from one run's detail line.
     val gcMs = gcTotalMs()
-    val detail = s"""{"metric":"total_detail","value":$total,"unit":"sec","warmup_sec":$warmSecs,"order":"$orderMode","reps":$reps,"code_cache_peak_mb":$codePeakMb,"jit_total_ms":$jitMs,"jit_timed_ms":${jitMs - jitAtTimedStart},"gc_total_ms":$gcMs,"gc_timed_ms":${gcMs - gcAtTimedStart},"queries":$qs,"n_errors":${errored.size},"errors":$errs,"warmup_errors":${warmupErrors.mkString("[", ",", "]")},"sf":"$sfDir","cpus":$cpus}"""
+    val detail = s"""{"metric":"total_detail","value":$total,"unit":"sec","warmup_sec":$warmSecs,"order":"registry","reps":$reps,"code_cache_peak_mb":$codePeakMb,"jit_total_ms":$jitMs,"jit_timed_ms":${jitMs - jitAtTimedStart},"gc_total_ms":$gcMs,"gc_timed_ms":${gcMs - gcAtTimedStart},"queries":$qs,"n_errors":${errored.size},"errors":$errs,"warmup_errors":${warmupErrors.mkString("[", ",", "]")},"sf":"$sfDir","cpus":$cpus}"""
     // Full per-query artifact on disk: the driver keeps only a ~4 KB tail
     // of stdout, which hid 139 of 193 per-query times in r8 — the file
     // (repo cwd, committed with the round) carries the whole registry in

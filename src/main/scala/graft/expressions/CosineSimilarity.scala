@@ -12,10 +12,11 @@ import org.apache.spark.sql.types._
   * The higher-order-function formulation (VectorOps.cosine: zip_with +
   * aggregate) is semantically identical but interpreted — Spark does not
   * codegen lambda functions, so every row pays closure dispatch and an
-  * intermediate array allocation. This expression emits a single fused
-  * loop accumulating dot/normA/normB in one pass and participates in
-  * whole-stage codegen, which is the hot path for brute-force k-NN and
-  * all-pairs near-dup scans.
+  * intermediate array allocation. This expression runs one JVM kernel,
+  * [[CosineSimilarity.cosine]], accumulating dot/normA/normB in one pass:
+  * the interpreted path calls it from `nullSafeEval`, and whole-stage
+  * codegen emits one call to it. It is the hot path for brute-force k-NN
+  * and all-pairs near-dup scans.
   *
   * Numerics: elements are widened to double and accumulated left-to-right,
   * the exact fold order of the HOF version and of DuckDB's list_reduce, so
@@ -34,54 +35,38 @@ import org.apache.spark.sql.types._
   * prefix behavior off it.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with FloatArrayInputs {
 
   override def dataType: DataType = DoubleType
-  // A null ELEMENT also nulls the result (the HOF fold propagates NULL
-  // through zip_with/aggregate), so nullability must account for
-  // element-level containsNull, not just the arrays.
-  override def nullable: Boolean = left.nullable || right.nullable ||
-    SquaredDistance.elemNullable(left) || SquaredDistance.elemNullable(right)
+  override protected def fnName: String = "cosine_similarity"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"cosine_similarity expects array<float|double> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    orNullElement(CosineSimilarity.cosine(a.asInstanceOf[ArrayData], floatElems(0),
+      b.asInstanceOf[ArrayData], floatElems(1), checkNulls = true))
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => kernelCode(ctx, ev,
+      s"graft.expressions.CosineSimilarity.cosine($a, ${floatElems(0)}, $b, ${floatElems(1)}, $elemNullable)"))
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    val n = math.min(xa.numElements(), xb.numElements())
-    val leftFloat = elemType(left) == FloatType
-    val rightFloat = elemType(right) == FloatType
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** Cosine of `a` and `b` over their common prefix; null when
+    * `checkNulls` and an element of that prefix is null. */
+  def cosine(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean,
+      checkNulls: Boolean): java.lang.Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    if (checkNulls && (FloatArrays.hasNull(a, n) || FloatArrays.hasNull(b, n))) return null
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
     var i = 0
     while (i < n) {
-      // null element -> null result, matching the HOF fold's propagation;
-      // schema-violating nulls (containsNull=false) fail loudly — gated on
-      // elemNullable, the same condition that emits the codegen guard, so
-      // interpreted and codegen paths agree (see SquaredDistance)
-      if (xa.isNullAt(i) || xb.isNullAt(i)) {
-        if (SquaredDistance.elemNullable(left) || SquaredDistance.elemNullable(right))
-          return null
-        throw new NullPointerException(
-          "cosine_sim: null element in containsNull=false input")
-      }
-      val x = if (leftFloat) xa.getFloat(i).toDouble else xa.getDouble(i)
-      val y = if (rightFloat) xb.getFloat(i).toDouble else xb.getDouble(i)
+      val x = FloatArrays.at(a, i, aFloat)
+      val y = FloatArrays.at(b, i, bFloat)
       dot += x * y
       na += x * x
       nb += y * y
@@ -91,46 +76,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (d == 0.0) 0.0 else dot / d
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val la = if (elemType(left) == FloatType) "(double) %s.getFloat(%s)" else "%s.getDouble(%s)"
-    val lb = if (elemType(right) == FloatType) "(double) %s.getFloat(%s)" else "%s.getDouble(%s)"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val d = ctx.freshName("d")
-      // see SquaredDistance: the guard is emitted only when the schema
-      // says elements can be null, keeping the common containsNull=false
-      // hot loop branch-free
-      val guard =
-        if (SquaredDistance.elemNullable(left) || SquaredDistance.elemNullable(right))
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
-        else ""
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $guard
-         |  double $x = ${la.format(a, i)};
-         |  double $y = ${lb.format(b, i)};
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |double $d = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |${ev.value} = ($d == 0.0) ? 0.0 : $dot / $d;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
   /** Column-API entry point: `cosine_sim(a, b)`. */
   def cosineSim(a: Column, b: Column): Column =
     ColumnBridge.column(

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types._
   * Replaces `size(array_intersect(a,b)) / (|a| + |b| - inter)`: the
   * composed form materializes the intersection array and runs outside a
   * fused loop, while this expression computes the intersection COUNT in
-  * one pass and emits the ratio directly. Integer counts, so the result
-  * is bit-identical to the oracle's len(list_filter(...)) formula by
-  * construction.
+  * one pass ([[JaccardSimilarity.similarity]]) and returns the ratio
+  * directly. Integer counts, so the result is bit-identical to the
+  * oracle's len(list_filter(...)) formula by construction.
   *
   * With `assumeSorted = true` the inputs must be ascending-sorted sets
   * (`array_sort` at the source, once per document) and the count is a
@@ -27,134 +27,24 @@ import org.apache.spark.sql.types._
   */
 case class JaccardSimilarity(left: Expression, right: Expression,
     assumeSorted: Boolean = false)
-    extends BinaryExpression {
+    extends BinaryExpression with LongArrayInputs {
 
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = left.nullable || right.nullable
+  override protected def fnName: String = "jaccard_sim"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"jaccard_sim expects array<bigint> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
-  /** Intersection count via a probe set over the smaller array. */
-  @inline private def interCount(xa: ArrayData, xb: ArrayData): Int = {
-    val (small, big) = if (xa.numElements() <= xb.numElements()) (xa, xb) else (xb, xa)
-    val set = new java.util.HashSet[Long](small.numElements() * 2)
-    var i = 0
-    while (i < small.numElements()) { set.add(small.getLong(i)); i += 1 }
-    var inter = 0
-    var j = 0
-    while (j < big.numElements()) {
-      if (set.contains(big.getLong(j))) inter += 1
-      j += 1
-    }
-    inter
-  }
-
-  /** Intersection count of two ascending-sorted sets: one merge scan,
-    * no allocation, no boxing. */
-  @inline private def interCountSorted(xa: ArrayData, xb: ArrayData): Int = {
-    val n = xa.numElements()
-    val m = xb.numElements()
-    var ia = 0
-    var ib = 0
-    var inter = 0
-    while (ia < n && ib < m) {
-      val x = xa.getLong(ia)
-      val y = xb.getLong(ib)
-      if (x == y) { inter += 1; ia += 1; ib += 1 }
-      else if (x < y) ia += 1
-      else ib += 1
-    }
-    inter
-  }
-
-  /** The sorted-input contract is the caller's (see [[prettyName]], which
-    * surfaces it in every plan as `jaccard_sim_sorted`); unsorted input
-    * silently undercounts. With `-Dgraft.jaccard.checkSorted=true` the
-    * interpreted path verifies the contract and fails loudly — cheap
-    * enough for specs/debug runs, off in production codegen. */
+  /** The sorted-input contract is the caller's; this name surfaces it in
+    * every plan as `jaccard_sim_sorted`. Unsorted input silently
+    * undercounts. */
   override def prettyName: String =
     if (assumeSorted) "jaccard_sim_sorted" else "jaccard_sim"
 
-  private def assertSorted(x: ArrayData, side: String): Unit = {
-    var i = 1
-    while (i < x.numElements()) {
-      if (x.getLong(i - 1) >= x.getLong(i))
-        throw new IllegalArgumentException(
-          s"jaccard_sim_sorted: $side input not strictly ascending at index $i " +
-            s"(${x.getLong(i - 1)} >= ${x.getLong(i)}); array_sort(array_distinct(...)) the source")
-      i += 1
-    }
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    if (assumeSorted && JaccardSimilarity.checkSorted) {
-      assertSorted(xa, "left"); assertSorted(xb, "right")
-    }
-    val union = xa.numElements() + xb.numElements()
-    if (union == 0) 0.0
-    else {
-      val inter = if (assumeSorted) interCountSorted(xa, xb) else interCount(xa, xb)
-      inter.toDouble / (union - inter)
-    }
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    JaccardSimilarity.similarity(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      assumeSorted)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val inter = ctx.freshName("inter")
-      val union = ctx.freshName("union")
-      val body =
-        if (assumeSorted) {
-          val ia = ctx.freshName("ia")
-          val ib = ctx.freshName("ib")
-          val x = ctx.freshName("x")
-          val y = ctx.freshName("y")
-          s"""
-             |  int $ia = 0; int $ib = 0;
-             |  while ($ia < $a.numElements() && $ib < $b.numElements()) {
-             |    long $x = $a.getLong($ia); long $y = $b.getLong($ib);
-             |    if ($x == $y) { $inter++; $ia++; $ib++; }
-             |    else if ($x < $y) { $ia++; } else { $ib++; }
-             |  }
-           """.stripMargin
-        } else {
-          val small = ctx.freshName("small")
-          val big = ctx.freshName("big")
-          val set = ctx.freshName("set")
-          val i = ctx.freshName("i")
-          val j = ctx.freshName("j")
-          val ad = classOf[ArrayData].getName
-          s"""
-             |  $ad $small = ($a.numElements() <= $b.numElements()) ? $a : $b;
-             |  $ad $big = ($a.numElements() <= $b.numElements()) ? $b : $a;
-             |  java.util.HashSet<Long> $set = new java.util.HashSet<Long>($small.numElements() * 2);
-             |  for (int $i = 0; $i < $small.numElements(); $i++) $set.add($small.getLong($i));
-             |  for (int $j = 0; $j < $big.numElements(); $j++) {
-             |    if ($set.contains($big.getLong($j))) $inter++;
-             |  }
-           """.stripMargin
-        }
-      s"""
-         |int $union = $a.numElements() + $b.numElements();
-         |if ($union == 0) { ${ev.value} = 0.0; } else {
-         |  int $inter = 0;
-         |$body
-         |  ${ev.value} = (double) $inter / ($union - $inter);
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.expressions.JaccardSimilarity.similarity($a, $b, $assumeSorted)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -187,77 +77,18 @@ case class JaccardSimilarity(left: Expression, right: Expression,
   * non-empty pair, while `jaccard_sim_sorted(a, b) >= NaN` holds for
   * none. */
 case class JaccardGeqSorted(left: Expression, right: Expression, t: Double)
-    extends BinaryExpression {
+    extends BinaryExpression with LongArrayInputs {
   require(t >= 0.0 && t <= 1.0,
     s"jaccard_geq_sorted threshold must be a finite value in [0, 1], got $t")
 
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"jaccard_geq_sorted expects array<bigint> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
   override def prettyName: String = "jaccard_geq_sorted"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    val n = xa.numElements()
-    val m = xb.numElements()
-    val union = n + m
-    if (union == 0) return (0.0 >= t)
-    val needed = JaccardGeqSorted.neededInter(union, t)
-    if (needed > math.min(n, m)) return false
-    var ia = 0; var ib = 0; var inter = 0
-    while (ia < n && ib < m) {
-      if (inter + math.min(n - ia, m - ib) < needed) return false
-      val x = xa.getLong(ia); val y = xb.getLong(ib)
-      if (x == y) { inter += 1; ia += 1; ib += 1 }
-      else if (x < y) ia += 1
-      else ib += 1
-    }
-    inter >= needed
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    JaccardGeqSorted.holds(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], t)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val union = ctx.freshName("union"); val needed = ctx.freshName("needed")
-      val ia = ctx.freshName("ia"); val ib = ctx.freshName("ib")
-      val inter = ctx.freshName("inter"); val rem = ctx.freshName("rem")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val aborted = ctx.freshName("aborted")
-      val helper = JaccardGeqSorted.getClass.getName.stripSuffix("$")
-      s"""
-         |int $n = $a.numElements(); int $m = $b.numElements();
-         |int $union = $n + $m;
-         |if ($union == 0) { ${ev.value} = (0.0 >= $t); } else {
-         |  int $needed = $helper.neededInter($union, $t);
-         |  if ($needed > Math.min($n, $m)) { ${ev.value} = false; } else {
-         |    int $ia = 0; int $ib = 0; int $inter = 0;
-         |    boolean $aborted = false;
-         |    while ($ia < $n && $ib < $m) {
-         |      int $rem = ($n - $ia < $m - $ib) ? ($n - $ia) : ($m - $ib);
-         |      if ($inter + $rem < $needed) { $aborted = true; break; }
-         |      long $x = $a.getLong($ia); long $y = $b.getLong($ib);
-         |      if ($x == $y) { $inter++; $ia++; $ib++; }
-         |      else if ($x < $y) { $ia++; } else { $ib++; }
-         |    }
-         |    ${ev.value} = !$aborted && $inter >= $needed;
-         |  }
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.JaccardGeqSorted.holds($a, $b, $t)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -265,10 +96,17 @@ case class JaccardGeqSorted(left: Expression, right: Expression, t: Double)
 }
 
 object JaccardGeqSorted {
+  /** `jaccard_sim_sorted(a, b) >= t` by the early-exit merge scan; an
+    * empty union has Jaccard 0.0. */
+  def holds(a: ArrayData, b: ArrayData, t: Double): Boolean = {
+    val union = a.numElements() + b.numElements()
+    if (union == 0) 0.0 >= t
+    else InterCountSorted.atLeast(a, b, neededInter(union, t))
+  }
+
   /** Smallest integer k with `(double) k / (union - k) >= t` — computed
     * with the exact IEEE comparison the value expression uses, adjusted
-    * from the algebraic estimate by at most a few steps. Public because
-    * the generated code calls it. */
+    * from the algebraic estimate by at most a few steps. */
   def neededInter(union: Int, t: Double): Int = {
     var k = math.ceil(t * union / (1.0 + t)).toInt
     if (k < 0) k = 0
@@ -288,61 +126,21 @@ object JaccardGeqSorted {
 
 /** Intersection COUNT of two ascending-sorted long-array sets — the
   * merge-scan replacement for `size(array_intersect(a, b))` on inputs
-  * that are already sorted distinct: one fused loop per pair, no hash
-  * set, no output array, no boxing. Same value by construction (both
-  * forms count the common elements of two sets). */
+  * that are already sorted distinct: one merge scan per pair
+  * ([[InterCountSorted.count]]), no hash set, no output array, no
+  * boxing. Same value by construction (both forms count the common
+  * elements of two sets). */
 case class InterCountSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with LongArrayInputs {
 
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"inter_count_sorted expects array<bigint> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
   override def prettyName: String = "inter_count_sorted"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    val n = xa.numElements(); val m = xb.numElements()
-    var ia = 0; var ib = 0; var inter = 0
-    while (ia < n && ib < m) {
-      val x = xa.getLong(ia); val y = xb.getLong(ib)
-      if (x == y) { inter += 1; ia += 1; ib += 1 }
-      else if (x < y) ia += 1
-      else ib += 1
-    }
-    inter
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    InterCountSorted.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val ia = ctx.freshName("ia"); val ib = ctx.freshName("ib")
-      val inter = ctx.freshName("inter")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-         |int $n = $a.numElements(); int $m = $b.numElements();
-         |int $ia = 0; int $ib = 0; int $inter = 0;
-         |while ($ia < $n && $ib < $m) {
-         |  long $x = $a.getLong($ia); long $y = $b.getLong($ib);
-         |  if ($x == $y) { $inter++; $ia++; $ib++; }
-         |  else if ($x < $y) { $ia++; } else { $ib++; }
-         |}
-         |${ev.value} = $inter;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.InterCountSorted.count($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -350,6 +148,46 @@ case class InterCountSorted(left: Expression, right: Expression)
 }
 
 object InterCountSorted {
+  /** Intersection count of two ascending-sorted sets: one merge scan,
+    * no allocation, no boxing. */
+  def count(a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    val m = b.numElements()
+    var ia = 0
+    var ib = 0
+    var inter = 0
+    while (ia < n && ib < m) {
+      val x = a.getLong(ia)
+      val y = b.getLong(ib)
+      if (x == y) { inter += 1; ia += 1; ib += 1 }
+      else if (x < y) ia += 1
+      else ib += 1
+    }
+    inter
+  }
+
+  /** `count(a, b) >= needed`, aborting the merge scan once
+    * `inter + min(remaining_a, remaining_b)` cannot reach `needed`: the
+    * bound assumes every remaining element of the shorter remaining side
+    * matches, so no abort is false. */
+  def atLeast(a: ArrayData, b: ArrayData, needed: Int): Boolean = {
+    val n = a.numElements()
+    val m = b.numElements()
+    if (needed > math.min(n, m)) return false
+    var ia = 0
+    var ib = 0
+    var inter = 0
+    while (ia < n && ib < m) {
+      if (inter + math.min(n - ia, m - ib) < needed) return false
+      val x = a.getLong(ia)
+      val y = b.getLong(ib)
+      if (x == y) { inter += 1; ia += 1; ib += 1 }
+      else if (x < y) ia += 1
+      else ib += 1
+    }
+    inter >= needed
+  }
+
   /** Column-API entry point over ascending-sorted array<bigint> sets. */
   def interCountSorted(a: Column, b: Column): Column =
     ColumnBridge.column(
@@ -365,70 +203,17 @@ object InterCountSorted {
   * early. No false aborts: the bound assumes every remaining element of
   * the shorter remaining side matches. */
 case class ContainGeqSorted(left: Expression, right: Expression, p: Int, q: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with LongArrayInputs {
   require(p >= 0 && q > 0, "containment threshold p/q needs p >= 0, q > 0")
 
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = left.nullable || right.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"contain_geq_sorted expects array<bigint> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
   override def prettyName: String = "contain_geq_sorted"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    val n = xa.numElements(); val m = xb.numElements()
-    // i*q >= n*p  ⟺  i >= ceil(n*p/q) — exact in longs
-    val needed = ((n.toLong * p + q - 1) / q).toInt
-    if (needed > math.min(n, m)) return false
-    var ia = 0; var ib = 0; var inter = 0
-    while (ia < n && ib < m) {
-      if (inter + math.min(n - ia, m - ib) < needed) return false
-      val x = xa.getLong(ia); val y = xb.getLong(ib)
-      if (x == y) { inter += 1; ia += 1; ib += 1 }
-      else if (x < y) ia += 1
-      else ib += 1
-    }
-    inter >= needed
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    ContainGeqSorted.holds(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], p, q)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val needed = ctx.freshName("needed")
-      val ia = ctx.freshName("ia"); val ib = ctx.freshName("ib")
-      val inter = ctx.freshName("inter"); val rem = ctx.freshName("rem")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val aborted = ctx.freshName("aborted")
-      s"""
-         |int $n = $a.numElements(); int $m = $b.numElements();
-         |int $needed = (int) (((long) $n * $p + $q - 1) / $q);
-         |if ($needed > Math.min($n, $m)) { ${ev.value} = false; } else {
-         |  int $ia = 0; int $ib = 0; int $inter = 0;
-         |  boolean $aborted = false;
-         |  while ($ia < $n && $ib < $m) {
-         |    int $rem = ($n - $ia < $m - $ib) ? ($n - $ia) : ($m - $ib);
-         |    if ($inter + $rem < $needed) { $aborted = true; break; }
-         |    long $x = $a.getLong($ia); long $y = $b.getLong($ib);
-         |    if ($x == $y) { $inter++; $ia++; $ib++; }
-         |    else if ($x < $y) { $ia++; } else { $ib++; }
-         |  }
-         |  ${ev.value} = !$aborted && $inter >= $needed;
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.ContainGeqSorted.holds($a, $b, $p, $q)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -436,6 +221,11 @@ case class ContainGeqSorted(left: Expression, right: Expression, p: Int, q: Int)
 }
 
 object ContainGeqSorted {
+  /** `inter_count_sorted(a, b)·q >= |a|·p`; `i·q >= n·p` ⟺
+    * `i >= ceil(n·p/q)`, exact in longs. */
+  def holds(a: ArrayData, b: ArrayData, p: Int, q: Int): Boolean =
+    InterCountSorted.atLeast(a, b, ((a.numElements().toLong * p + q - 1) / q).toInt)
+
   /** Column-API entry point: `inter_count_sorted(a,b)·q >= |a|·p` with
     * the early-exit merge scan. */
   def containGeqSorted(a: Column, b: Column, p: Int, q: Int): Column =
@@ -444,9 +234,31 @@ object ContainGeqSorted {
 }
 
 object JaccardSimilarity {
-  /** Debug flag: verify the sorted-input contract on the interpreted path. */
-  private[expressions] val checkSorted: Boolean =
-    java.lang.Boolean.getBoolean("graft.jaccard.checkSorted")
+  /** |a ∩ b| / |a ∪ b| of two sets, 0.0 when both are empty: the
+    * intersection by a merge scan when `sorted` (both ascending), else by
+    * a probe set over the smaller array. */
+  def similarity(a: ArrayData, b: ArrayData, sorted: Boolean): Double = {
+    val union = a.numElements() + b.numElements()
+    if (union == 0) 0.0
+    else {
+      val inter = if (sorted) InterCountSorted.count(a, b) else probeCount(a, b)
+      inter.toDouble / (union - inter)
+    }
+  }
+
+  private def probeCount(a: ArrayData, b: ArrayData): Int = {
+    val (small, big) = if (a.numElements() <= b.numElements()) (a, b) else (b, a)
+    val set = new java.util.HashSet[Long](small.numElements() * 2)
+    var i = 0
+    while (i < small.numElements()) { set.add(small.getLong(i)); i += 1 }
+    var inter = 0
+    var j = 0
+    while (j < big.numElements()) {
+      if (set.contains(big.getLong(j))) inter += 1
+      j += 1
+    }
+    inter
+  }
 
   /** Column-API entry point: `jaccard_sim(a, b)` over array<bigint> sets. */
   def jaccardSim(a: Column, b: Column): Column =

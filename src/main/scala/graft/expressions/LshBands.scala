@@ -1,11 +1,13 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
+
+import graft.ops.VectorOps
 
 /** Native Catalyst banded random-hyperplane LSH signature: for each of
   * `bands` bands, an `rows`-bit bucket id where bit i is the sign of the
@@ -18,10 +20,12 @@ import org.apache.spark.sql.types._
   * summed CASE bits — `VectorOps.lshBandBucket`) is semantically
   * identical but interpreted: at adaptive plane counts (bands·rows grows
   * with log n, ~56 planes at the third scaling decade) that is dozens of
-  * closure-dispatched 64-element folds per row. This expression fuses
-  * the whole signature into one codegen'd loop nest — weights computed
-  * inline from the integer formula, no per-row allocation beyond the
-  * result array — and participates in whole-stage codegen.
+  * closure-dispatched 64-element folds per row. This expression runs the
+  * whole signature as one JVM kernel, [[LshBands.signature]], called
+  * from `nullSafeEval` and from whole-stage codegen alike: weights come
+  * from the integer formula, and a row allocates only its result array.
+  * Each plane's dot is [[LshBands.planeDot]], which [[LshPlaneDots]]
+  * shares.
   *
   * Numerics: elements widen to double and each plane's dot accumulates
   * left-to-right from 0.0, the exact fold order of the HOF version and
@@ -38,7 +42,7 @@ import org.apache.spark.sql.types._
   */
 case class LshBands(child: Expression, bands: Int, rows: Int, dims: Int,
     bandOffset: Int = 0, thresholds: Seq[Double] = Nil)
-    extends UnaryExpression {
+    extends UnaryExpression with FloatArrayInputs {
   // `thresholds` (r15 centered projections): per-plane sign-test
   // thresholds indexed by LOCAL plane t·rows + i (the caller passes the
   // slice for its bandOffset). Empty = sign-at-zero, the pre-r15
@@ -54,114 +58,19 @@ case class LshBands(child: Expression, bands: Int, rows: Int, dims: Int,
     s"need bands*rows (${bands * rows}) thresholds, got ${thresholds.size}")
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean =
-    child.nullable || SquaredDistance.elemNullable(child)
+  override protected def fnName: String = "lsh_bands"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lsh_bands expects array<float|double> input, got ${other.catalogString}")
-    }
+  @transient private lazy val thresholdArray: Array[Double] = thresholds.toArray
 
-  private def elemFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    // length mismatch -> all-zero signature (the HOF/oracle null
-    // propagation; see class doc)
-    if (xs.numElements() != dims) return new GenericArrayData(new Array[Int](bands))
-    val lim = dims
-    val out = new Array[Int](bands)
-    var t = 0
-    while (t < bands) {
-      var bucket = 0
-      var i = 0
-      while (i < rows) {
-        val p = (bandOffset + t) * rows + i
-        var dp = 0.0
-        var d = 0
-        while (d < lim) {
-          if (xs.isNullAt(d)) {
-            if (SquaredDistance.elemNullable(child)) return null
-            throw new NullPointerException(
-              "lsh_bands: null element in containsNull=false input")
-          }
-          val x = if (elemFloat) xs.getFloat(d).toDouble else xs.getDouble(d)
-          dp += x * graft.ops.VectorOps.adaptivePlaneWeight(p, d).toDouble
-          d += 1
-        }
-        val thr = if (thresholds.isEmpty) 0.0 else thresholds(t * rows + i)
-        if (dp > thr) bucket |= (1 << i)
-        i += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(a: Any): Any =
+    orNullElement(LshBands.signature(a.asInstanceOf[ArrayData], floatElems(0), bands, rows,
+      dims, bandOffset, thresholdArray, checkNulls = true))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (elemFloat) "(double) %s.getFloat(%s)" else "%s.getDouble(%s)"
-    nullSafeCodeGen(ctx, ev, a => {
-      val lim = ctx.freshName("lim")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val p = ctx.freshName("p")
-      val dp = ctx.freshName("dp")
-      val bucket = ctx.freshName("bucket")
-      // centered projections: the per-plane threshold array rides along
-      // as a referenced object (≤ bands·rows ≈ 900 doubles); the empty
-      // case keeps the literal 0.0 compare so frozen sign-at-zero
-      // consumers generate the identical code they always did
-      val thrTest =
-        if (thresholds.isEmpty) s"if ($dp > 0.0)"
-        else {
-          val thrRef = ctx.addReferenceObj("lshThr", thresholds.toArray, "double[]")
-          s"if ($dp > $thrRef[$t * $rows + $i])"
-        }
-      // same emit-only-when-nullable guard discipline as SquaredDistance /
-      // CosineSimilarity: containsNull=false inputs keep the loop
-      // branch-free. The label breaks all three loops on a null element.
-      val guard =
-        if (SquaredDistance.elemNullable(child))
-          s"if ($a.isNullAt($d)) { ${ev.isNull} = true; break bandsLoop$out; }"
-        else ""
-      s"""
-         |int $lim = $dims;
-         |int[] $out = new int[$bands];
-         |// length mismatch -> all-zero signature (HOF/oracle null
-         |// propagation; see class doc)
-         |if ($a.numElements() == $dims) {
-         |bandsLoop$out:
-         |for (int $t = 0; $t < $bands; $t++) {
-         |  int $bucket = 0;
-         |  for (int $i = 0; $i < $rows; $i++) {
-         |    int $p = ($bandOffset + $t) * $rows + $i;
-         |    double $dp = 0.0;
-         |    for (int $d = 0; $d < $lim; $d++) {
-         |      $guard
-         |      long k$dp = (long) $p * 104729L + (long) $d;
-         |      $dp += ${get.format(a, d)} * (double)
-         |        ((((k$dp * k$dp + k$dp * 2654435761L) % 2038074743L)
-         |          / 131072L) % 17L - 8L);
-         |    }
-         |    $thrTest $bucket |= (1 << $i);
-         |  }
-         |  $out[$t] = $bucket;
-         |}
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         |}
-       """.stripMargin
-    })
+    val thr = ctx.addReferenceObj("lshThr", thresholdArray, "double[]")
+    nullSafeCodeGen(ctx, ev, a => kernelCode(ctx, ev,
+      s"graft.expressions.LshBands.signature($a, ${floatElems(0)}, $bands, $rows, $dims, " +
+        s"$bandOffset, $thr, $elemNullable)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -169,6 +78,48 @@ case class LshBands(child: Expression, bands: Int, rows: Int, dims: Int,
 }
 
 object LshBands {
+  /** The `bands` bucket ids of `xs` for ABSOLUTE bands
+    * [bandOffset, bandOffset + bands): bit i of bucket t is
+    * `planeDot(plane (bandOffset + t)·rows + i) > thresholds(t·rows + i)`
+    * (> 0.0 when `thresholds` is empty). An array whose length is not
+    * `dims` gets the all-zero signature (the HOF/oracle null propagation;
+    * see the class doc); null when `checkNulls` and an element is null. */
+  def signature(xs: ArrayData, isFloat: Boolean, bands: Int, rows: Int, dims: Int,
+      bandOffset: Int, thresholds: Array[Double], checkNulls: Boolean): ArrayData = {
+    val out = new Array[Int](bands)
+    if (xs.numElements() == dims) {
+      if (checkNulls && FloatArrays.hasNull(xs, dims)) return null
+      var t = 0
+      while (t < bands) {
+        var bucket = 0
+        var i = 0
+        while (i < rows) {
+          val dp = planeDot(xs, isFloat, (bandOffset + t) * rows + i, dims)
+          val thr = if (thresholds.isEmpty) 0.0 else thresholds(t * rows + i)
+          if (dp > thr) bucket |= (1 << i)
+          i += 1
+        }
+        out(t) = bucket
+        t += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** The dot of the first `dims` elements of `xs` (widened to double)
+    * with integer hyperplane `p` ([[VectorOps.adaptivePlaneWeight]]),
+    * accumulated left-to-right from 0.0: the fold order of the HOF
+    * formulation and of the oracle's ordered `list_reduce`. */
+  def planeDot(xs: ArrayData, isFloat: Boolean, p: Int, dims: Int): Double = {
+    var dp = 0.0
+    var d = 0
+    while (d < dims) {
+      dp += FloatArrays.at(xs, d, isFloat) * VectorOps.adaptivePlaneWeight(p, d).toDouble
+      d += 1
+    }
+    dp
+  }
+
   /** Column-API entry point: array of `bands` bucket ids for `emb`.
     * `bandOffset` shifts the hyperplane family to ABSOLUTE bands
     * [offset, offset + bands) — plane p = (offset + t)·rows + i — so a

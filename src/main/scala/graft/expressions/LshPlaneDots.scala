@@ -1,21 +1,19 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Raw per-plane dot products of the adaptive hyperplane family — the
   * THRESHOLD-DERIVATION twin of [[LshBands]] (r15 centered projections):
   * for plane p = (bandOffset + t)·rows + i, element t·rows + i of the
-  * output is the dot of the embedding with the integer hyperplane
-  * `VectorOps.adaptivePlaneWeight(p, ·)`, accumulated left-to-right from
-  * 0.0 in ascending d — the exact fold order of [[LshBands]]'s sign
-  * test and of the DuckDB oracle's ordered `list_reduce`, so the
-  * per-plane MEDIANS both engines derive from these values are
-  * bit-identical.
+  * output is [[LshBands.planeDot]] — the very dot [[LshBands]]'s sign
+  * test runs, in the fold order of the DuckDB oracle's ordered
+  * `list_reduce` — so the per-plane MEDIANS both engines derive from
+  * these values are bit-identical.
   *
   * Null semantics mirror the oracle's `dots` CTE: a length-mismatched
   * array (or a null element) returns NULL — the row contributes to NO
@@ -25,58 +23,40 @@ import org.apache.spark.sql.types._
   * Interpreted on purpose (CodegenFallback): this expression runs only
   * over the deterministic threshold SAMPLE
   * (`VectorQueries.lshSampleMod`, ≤ ~32k rows at any corpus size), so
-  * the fused-codegen treatment [[LshBands]] needs for the full-corpus
-  * signature pass would buy nothing here.
+  * generating a call to [[LshPlaneDots.dots]] would buy nothing here.
   */
 case class LshPlaneDots(child: Expression, bands: Int, rows: Int, dims: Int,
     bandOffset: Int = 0)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with FloatArrayInputs with CodegenFallback {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"lsh_plane_dots expects array<float|double> input, got ${other.catalogString}")
-    }
+  override protected def fnName: String = "lsh_plane_dots"
 
-  private def elemFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    if (xs.numElements() != dims) return null
-    val out = new Array[Double](bands * rows)
-    var t = 0
-    while (t < bands) {
-      var i = 0
-      while (i < rows) {
-        val p = (bandOffset + t) * rows + i
-        var dp = 0.0
-        var d = 0
-        while (d < dims) {
-          if (xs.isNullAt(d)) return null
-          val x = if (elemFloat) xs.getFloat(d).toDouble else xs.getDouble(d)
-          dp += x * graft.ops.VectorOps.adaptivePlaneWeight(p, d).toDouble
-          d += 1
-        }
-        out(t * rows + i) = dp
-        i += 1
-      }
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(a: Any): Any =
+    LshPlaneDots.dots(a.asInstanceOf[ArrayData], floatElems(0), bands, rows, dims, bandOffset)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object LshPlaneDots {
+  /** The per-plane dots of `xs` for ABSOLUTE bands
+    * [bandOffset, bandOffset + bands), flat t·rows + i; null when the
+    * length is not `dims` or an element is null. */
+  def dots(xs: ArrayData, isFloat: Boolean, bands: Int, rows: Int, dims: Int,
+      bandOffset: Int): ArrayData = {
+    if (xs.numElements() != dims || FloatArrays.hasNull(xs, dims)) return null
+    val out = new Array[Double](bands * rows)
+    var j = 0
+    while (j < out.length) {
+      out(j) = LshBands.planeDot(xs, isFloat, bandOffset * rows + j, dims)
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
   /** Column-API entry point: the `bands`·`rows` per-plane dots for
     * ABSOLUTE bands [bandOffset, bandOffset + bands), flat t·rows + i. */
   def planeDots(emb: Column, bands: Int, rows: Int, dims: Int,

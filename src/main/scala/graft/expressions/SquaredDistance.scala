@@ -15,9 +15,10 @@ import org.apache.spark.sql.types._
   * |codebook| × subspaces evaluations — pay closure dispatch, lambda
   * variable binding and Double boxing per ELEMENT. Profiled on the inline
   * IVF+PQ build (stage profile, sf0.1) those two stages were 35+ CPU-
-  * seconds for ~3M pair evaluations of 16-float subvectors; this fused
-  * single-pass loop participates in whole-stage codegen like
-  * [[CosineSimilarity]].
+  * seconds for ~3M pair evaluations of 16-float subvectors. This
+  * expression runs one single-pass JVM kernel,
+  * [[SquaredDistance.squaredDistance]], called from `nullSafeEval` and
+  * from whole-stage codegen alike, like [[CosineSimilarity]].
   *
   * Numerics: elements widen to double and the (x−y)² terms accumulate
   * left-to-right in index order — the exact fold of the HOF version and
@@ -29,94 +30,18 @@ import org.apache.spark.sql.types._
   * CustomExprSpec for the pinned contract + prefix behavior.
   */
 case class SquaredDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with FloatArrayInputs {
 
   override def dataType: DataType = DoubleType
-  // A null ELEMENT also nulls the result (the HOF fold this expression
-  // replaces propagates NULL through zip_with/aggregate), so nullability
-  // must account for element-level containsNull, not just the arrays.
-  override def nullable: Boolean = left.nullable || right.nullable ||
-    SquaredDistance.elemNullable(left) || SquaredDistance.elemNullable(right)
+  override protected def fnName: String = "squared_distance"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"squared_distance expects array<float|double> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    orNullElement(SquaredDistance.squaredDistance(a.asInstanceOf[ArrayData], floatElems(0),
+      b.asInstanceOf[ArrayData], floatElems(1), checkNulls = true))
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val xa = a.asInstanceOf[ArrayData]
-    val xb = b.asInstanceOf[ArrayData]
-    val n = math.min(xa.numElements(), xb.numElements())
-    val leftFloat = elemType(left) == FloatType
-    val rightFloat = elemType(right) == FloatType
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      // null element -> null result, matching the HOF fold's propagation;
-      // a null in a declared-non-nullable array is a schema violation and
-      // fails loudly (returning null from a non-nullable expression would
-      // unbox to a silent 0.0 downstream). Gated on elemNullable — the
-      // SAME condition that emits the codegen guard — not on `nullable`,
-      // which is also true when merely the array COLUMNS are nullable
-      // (containsNull=false): there the codegen path has no guard, so the
-      // interpreted path must throw, not return null, to stay consistent.
-      if (xa.isNullAt(i) || xb.isNullAt(i)) {
-        if (SquaredDistance.elemNullable(left) || SquaredDistance.elemNullable(right))
-          return null
-        throw new NullPointerException(
-          "squared_distance: null element in containsNull=false input")
-      }
-      val x = if (leftFloat) xa.getFloat(i).toDouble else xa.getDouble(i)
-      val y = if (rightFloat) xb.getFloat(i).toDouble else xb.getDouble(i)
-      val d = x - y
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val la = if (elemType(left) == FloatType) "(double) %s.getFloat(%s)" else "%s.getDouble(%s)"
-    val lb = if (elemType(right) == FloatType) "(double) %s.getFloat(%s)" else "%s.getDouble(%s)"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      // The per-element guard is emitted ONLY when the schema says
-      // elements can be null: this expression exists for multi-million-
-      // pair fused loops, and containsNull=false inputs (the embeddings
-      // store) keep the original zero-branch inner loop — trusting the
-      // schema like Spark's own codegen'd array readers do. ev.isNull is
-      // a real variable whenever the guard is emitted (nullable covers
-      // containsNull).
-      val guard =
-        if (SquaredDistance.elemNullable(left) || SquaredDistance.elemNullable(right))
-          s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
-        else ""
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $guard
-         |  double $d = ${la.format(a, i)} - ${lb.format(b, i)};
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => kernelCode(ctx, ev,
+      s"graft.expressions.SquaredDistance.squaredDistance($a, ${floatElems(0)}, $b, ${floatElems(1)}, $elemNullable)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -124,13 +49,24 @@ case class SquaredDistance(left: Expression, right: Expression)
 }
 
 object SquaredDistance {
+  /** Σ (a_i − b_i)² over the common prefix of `a` and `b`; null when
+    * `checkNulls` and an element of that prefix is null. */
+  def squaredDistance(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean,
+      checkNulls: Boolean): java.lang.Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    if (checkNulls && (FloatArrays.hasNull(a, n) || FloatArrays.hasNull(b, n))) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val d = FloatArrays.at(a, i, aFloat) - FloatArrays.at(b, i, bFloat)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
+
   /** Column-API entry point: `squared_distance(a, b)`. */
   def squaredDist(a: Column, b: Column): Column =
     ColumnBridge.column(
       SquaredDistance(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  private[expressions] def elemNullable(e: Expression): Boolean = e.dataType match {
-    case ArrayType(_, containsNull) => containsNull
-    case _ => false
-  }
 }

@@ -217,14 +217,6 @@ private[expressions] trait StringInput { self: UnaryExpression =>
   }
 }
 
-private[expressions] trait LongArrayInput { self: UnaryExpression =>
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"${getClass.getSimpleName} expects array<bigint> input, got ${dt.catalogString}")
-  }
-}
-
 case class PolyHash(child: Expression) extends UnaryExpression with StringInput {
   override def dataType: DataType = LongType
   override protected def nullSafeEval(s: Any): Any =
@@ -337,8 +329,9 @@ case class RepetitionStats(child: Expression) extends UnaryExpression with Strin
     copy(child = newChild)
 }
 
-case class SimHash16(child: Expression) extends UnaryExpression with LongArrayInput {
+case class SimHash16(child: Expression) extends UnaryExpression with LongArrayInputs {
   override def dataType: DataType = LongType
+  override protected def fnName: String = "SimHash16"
   override protected def nullSafeEval(h: Any): Any =
     TextHash.simHash16(h.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

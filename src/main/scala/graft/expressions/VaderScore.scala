@@ -9,9 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The word tables of one VADER scorer and its scoring loop.
   *
-  * [[score]] computes the same fold as the HOF reference
-  * `EnrichOps.withVaderScoreHof` over the same `split(text, " ")` tokens,
-  * in one loop per document: each token has its '!'/'?' characters
+  * [[score]] computes the same fold as the HOF reference (`VaderReference`
+  * in the test sources) over the same `split(text, " ")` tokens, in one
+  * loop per document: each token has its '!'/'?' characters
   * removed, takes its lexicon valence, is pushed away from zero by the
   * booster increments of the three tokens before it (damped 1, 0.95, 0.9),
   * and is scaled by `nScalar` when any of those three tokens is a

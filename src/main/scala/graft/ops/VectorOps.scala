@@ -15,10 +15,15 @@ import org.apache.spark.sql.graft.ColumnBridge
   *  - top-8 by rescored score        src/app/rag_engine.py:252-253
   *  - idempotent vector upsert       src/processing/consumer.py:176-181
   *
-  * All vector math is higher-order array functions (`zip_with` +
-  * `aggregate`) — codegen-friendly, no UDFs, and the serial left-fold makes
-  * the result bit-identical to DuckDB's `list_reduce`, which is what lets
-  * cosine scores be oracle-checked exactly.
+  * Similarity call sites run the native kernels in `graft.expressions`
+  * ([[graft.expressions.CosineSimilarity]],
+  * [[graft.expressions.SquaredDistance]], [[graft.expressions.LshBands]]).
+  * The higher-order-function forms here ([[dot]], [[cosine]],
+  * [[lshBandBucket]]: `zip_with` + `aggregate`) remain as the
+  * `cosine_similarity` baseline query and the LSH reference the kernels
+  * are held bit-equal to. Every form folds left to right, which makes
+  * the result bit-identical to DuckDB's `list_reduce`, so cosine scores
+  * are oracle-checked exactly.
   *
   * Scale notes: brute-force k-NN broadcasts the (small) query side and
   * computes distances map-side — one pass over the big table, no shuffle
@@ -36,16 +41,6 @@ object VectorOps {
     aggregate(
       zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
       lit(0.0), (acc, v) => acc + v)
-
-  /** Dot product over arrays that are ALREADY double — higher-order
-    * functions are interpreted (not codegen'd), so on all-pairs workloads
-    * pre-cast each vector once with [[castDouble]] instead of paying two
-    * per-pair transforms inside [[dot]]. */
-  def dotRaw(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  /** One-time element cast for reuse across many pair computations. */
-  def castDouble(a: Column): Column = asDouble(a)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -204,7 +199,7 @@ object VectorOps {
     * weight vectors (an affine or low-bit form measurably collides —
     * 44 duplicate planes per 8000). 8000/8000 planes distinct, weights
     * centered in [-8, 8]; still pure integer arithmetic (Long-safe:
-    * k ≤ 8.1e8 ⇒ k² + k·C < 2.8e18 < 2⁶³), so Spark, the codegen'd
+    * k ≤ 8.1e8 ⇒ k² + k·C < 2.8e18 < 2⁶³), so Spark, the native
     * [[graft.expressions.LshBands]], and the DuckDB oracle agree
     * bit-for-bit. AdaptiveLshSpec pins distinctness and centering. */
   def adaptivePlaneWeight(p: Int, d: Int): Int = {
@@ -217,7 +212,7 @@ object VectorOps {
     * [[adaptivePlaneWeight]], so bands draw genuinely distinct
     * hyperplane sets (the OR-amplification that recovers recall when
     * `rows` grows with the corpus). This is the interpreted reference
-    * formulation; the fused codegen twin [[graft.expressions.LshBands]]
+    * formulation; the native kernel [[graft.expressions.LshBands]]
     * (spec-proven bit-equal) is what the adaptive call sites run — one
     * plane here is a closure-dispatched 64-element fold, and adaptive
     * signatures need bands·rows of them per row. */

@@ -89,7 +89,7 @@ class TextOpsSpec extends AnyFunSuite {
     val all = docs.unionByName(edgeDf)
     val n = all.count()
     def assertBitEqual(native: org.apache.spark.sql.DataFrame, lex: Seq[(String, Double)]): Unit = {
-      val hof = EnrichOps.withVaderScoreHof(all, $"text", "h", lex).select($"doc_id", $"h")
+      val hof = VaderReference.withVaderScoreHof(all, $"text", "h", lex).select($"doc_id", $"h")
       val rows = native.join(hof, "doc_id").collect()
       assert(rows.length == n)
       val bad = rows.filterNot { r =>
@@ -125,7 +125,7 @@ class TextOpsSpec extends AnyFunSuite {
       _.expressions.exists(_.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.LambdaFunction])))
     assert(!lambdas(SparkEntry.queries("sentiment_score")(spark, "/root/testdata/sf0.01")))
-    assert(lambdas(EnrichOps.withVaderScoreHof(docs, $"text", "h")))
+    assert(lambdas(VaderReference.withVaderScoreHof(docs, $"text", "h")))
   }
 
   test("embedTextBatched: one model call per batch, bit-equal to the expression path") {
