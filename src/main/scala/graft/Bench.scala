@@ -173,7 +173,7 @@ object Bench {
     * naming the variable and the value — checked before the session
     * starts, so a typo fails the run instead of a multi-minute warmup
     * later. */
-  private def envOr[T](name: String, default: String)(parse: String => Option[T]): T = {
+  private[graft] def envOr[T](name: String, default: String)(parse: String => Option[T]): T = {
     val raw = sys.env.getOrElse(name, default)
     parse(raw.trim).getOrElse(
       throw new IllegalArgumentException(s"malformed $name='$raw'"))

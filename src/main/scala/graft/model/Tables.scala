@@ -116,10 +116,10 @@ object Tables {
       case LongType =>
         // The canonical column becomes DERIVED, so plain time-range
         // predicates on it no longer reach the parquet reader.
-        // NanosRangePushdown (installed here, idempotent) augments such
-        // filters with the equivalent raw-long bounds so row-group pruning
-        // survives the normalization — see ADVICE r8 / the rule's scaladoc.
-        graft.plans.NanosRangePushdown.install(df.sparkSession)
+        // NanosRangePushdown (installed with graft, see [[load]]) augments
+        // such filters with the equivalent raw-long bounds so row-group
+        // pruning survives the normalization — see ADVICE r8 / the rule's
+        // scaladoc.
         epochUnit(df, c) match {
           case "ns" => df.withColumn(c, expr(s"timestamp_micros($c div 1000)"))
           case "us" => df.withColumn(c, expr(s"timestamp_micros($c)"))
@@ -159,8 +159,13 @@ object Tables {
     }
   }
 
+  /** The table `name` under `dir`, its time columns normalized, on a
+    * session with graft installed ([[graft.plans.GraftExtensions.install]],
+    * once per session and table: the install runs inside the cached
+    * build). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     cached(spark, dir, name) {
+      graft.plans.GraftExtensions.install(spark)
       // Read-time schema portability, set before analysis so inference sees
       // them: nanos-encoded timestamps arrive as raw longs (no Spark ns
       // type), and µs-no-UTC-flag timestamps arrive directly as LTZ

@@ -49,18 +49,17 @@ object EnrichOps {
   /** The EFFECTIVE lexicon every sentiment operator (and the oracle-SQL
     * generator — both read this val, so cross-engine parity holds for
     * any drop-in) uses: the published vader_lexicon.txt dropped at
-    * `GRAFT_VADER_LEXICON` (env) or `-Dgraft.vader.lexicon` when present,
-    * else [[builtinLexicon]]. The full file is ~7,500 entries — viable
-    * because tokens are looked up through one hash map (the native
-    * [[vaderScore]]) or one constant-folded map literal ([[valenceVia]]),
+    * `GRAFT_VADER_LEXICON` (env) when set, else [[builtinLexicon]]. The
+    * full file is ~7,500 entries — viable because tokens are looked up
+    * through one hash map (the native [[vaderScore]]) or one
+    * constant-folded map literal ([[valenceVia]]),
     * not a per-word CASE chain (the file itself is not vendored: typing
     * its valences from memory would fabricate data; the loader +
     * published-format parser make the drop a pure data operation,
     * spec-proven on a synthetic file in the same format). Resolved once
     * per JVM. */
   val lexicon: Seq[(String, Double)] =
-    sys.env.get("GRAFT_VADER_LEXICON")
-      .orElse(sys.props.get("graft.vader.lexicon")) match {
+    sys.env.get("GRAFT_VADER_LEXICON") match {
       case Some(p) => lexiconFromFile(p)
       case None => builtinLexicon
     }

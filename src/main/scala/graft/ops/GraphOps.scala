@@ -152,11 +152,11 @@ object GraphOps {
       withLoopParallelism(sess, edgeCount) { nLoop =>
         // The edge table is loop-invariant and joined on `src` every
         // round: hash-partition it on `src` ONCE before checkpointing.
-        // localCheckpoint preserves outputPartitioning, so each round's
-        // join plans a single Exchange (the label side) instead of
-        // reshuffling the edges — at 100 TB the edge table is the
-        // near-dup pair set, the largest input of the loop, and this
-        // converts O(rounds) edge shuffles into one.
+        // SessionOps.truncate keeps that partitioning, so no round's
+        // join plans an Exchange over the edges (at most one, over the
+        // label side) — at 100 TB the edge table is the near-dup pair
+        // set, the largest input of the loop, and this converts
+        // O(rounds) edge shuffles into one.
         val e = SessionOps.truncate(sym.repartition(nLoop, col("src")))
         // e supersedes the un-partitioned copy: release raw's blocks, or
         // the loop carries TWO materialized copies of its largest input.
@@ -263,6 +263,8 @@ object GraphOps {
       return sess.createDataFrame(degs).toDF("doc_id", "deg")
     }
     withLoopParallelism(sess, edgeCount) { nLoop =>
+      // Hash-partitioned on `src` once; SessionOps.truncate keeps that,
+      // so the first round's degree aggregate plans no Exchange.
       val unpart = sym
       sym = SessionOps.truncate(sym.repartition(nLoop, col("src")))
       release(unpart)

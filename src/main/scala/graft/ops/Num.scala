@@ -36,7 +36,6 @@ object Num {
   private def rN(c: Column, scale: Double): Column = floor(c * scale + lit(0.5)) / scale
   def r1(c: Column): Column = rN(c, 1e1)
   def r2(c: Column): Column = rN(c, 1e2)
-  def r4(c: Column): Column = rN(c, 1e4)
   def r6(c: Column): Column = rN(c, 1e6)
 
   /** Order-insensitive exact sum of a ≤2-decimal double column, emitted as

@@ -25,8 +25,9 @@ object SessionOps {
 
   /** The one session every entry point (Bench, Verify, Explain, the dev
     * tools) runs on, so a profile or plan dump takes the same size-gated
-    * branches the bench does. Deployment settings such as
-    * `spark.driver.maxResultSize` come from the JVM (`-Dspark.*`). */
+    * branches the bench does, with graft installed
+    * ([[graft.plans.GraftExtensions.install]]). Deployment settings such
+    * as `spark.driver.maxResultSize` come from the JVM (`-Dspark.*`). */
   def localSession(): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -48,6 +49,7 @@ object SessionOps {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.plans.GraftExtensions.install(s)
     s
   }
 
@@ -135,7 +137,12 @@ object SessionOps {
     * typo'd dial must fail the run, not silently take the default
     * branch. */
   def graftConf[T](s: SparkSession, key: String, default: T)(parse: String => T): T =
-    s.conf.getOption(key).fold(default) { v =>
+    parseConf(key, s.conf.getOption(key), default)(parse)
+
+  /** [[graftConf]] over a value already read. */
+  private[graft] def parseConf[T](key: String, value: Option[String], default: T)(
+      parse: String => T): T =
+    value.fold(default) { v =>
       try parse(v)
       catch { case NonFatal(e) =>
         throw new IllegalArgumentException(s"malformed conf $key='$v'", e) }
@@ -173,7 +180,16 @@ object SessionOps {
     * at the live working set), and round structure are identical;
     * ReliableCheckpointSpec runs a CC fixpoint and a BPE round through
     * the reliable path and asserts bit-equal results plus actual
-    * checkpoint files on disk. */
+    * checkpoint files on disk.
+    *
+    * Both modes keep the hash partitioning `df`'s rows have
+    * (`ColumnBridge.keepPartitioning`): Spark records the executed plan's
+    * partitioning, and an adaptive plan reports none. So a frame
+    * hash-partitioned on its key before the checkpoint — the upsert's
+    * store on `id`, the CC and k-core edge tables on `src` — is read by a
+    * later join or aggregate on that key with no exchange. Only a hash
+    * partitioning the rows already have, at the same partition count, is
+    * declared, so this can remove an exchange but never add one. */
   def truncate(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     val reliable = graftConf(s, RELIABLE_KEY, false)(_.toBoolean)
@@ -185,17 +201,19 @@ object SessionOps {
     // unrolls into byte buffers (UnsafeRows serialize compactly, ~no
     // object overhead) and degrades to disk gracefully; for the KB–MB
     // loop frames (CC, BPE) the ser/deser delta is noise.
-    if (!reliable) df.localCheckpoint(
-      eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else {
-      if (s.sparkContext.getCheckpointDir.isEmpty) {
-        val dir = s.conf.getOption(RELIABLE_DIR_KEY).getOrElse(
-          new java.io.File(
-            System.getProperty("java.io.tmpdir"), "graft-ckpt").toString)
-        s.sparkContext.setCheckpointDir(dir)
+    val checkpointed =
+      if (!reliable) df.localCheckpoint(
+        eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      else {
+        if (s.sparkContext.getCheckpointDir.isEmpty) {
+          val dir = s.conf.getOption(RELIABLE_DIR_KEY).getOrElse(
+            new java.io.File(
+              System.getProperty("java.io.tmpdir"), "graft-ckpt").toString)
+          s.sparkContext.setCheckpointDir(dir)
+        }
+        df.checkpoint()
       }
-      df.checkpoint()
-    }
+    org.apache.spark.sql.graft.ColumnBridge.keepPartitioning(df, checkpointed)
   }
 
   /** Spark logs "RDD N was locally checkpointed, its lineage has been
@@ -247,17 +265,16 @@ object SessionOps {
     else "count" -> df.count()
 
   /** Waits up to `millis` until the asynchronous listener bus has
-    * delivered every queued event, so a listener's counts are complete;
-    * false when the bus did not drain. `waitUntilEmpty` is
-    * `private[spark]` (public in bytecode), hence the reflective call. */
-  def drainListenerBus(spark: SparkSession, millis: Long): Boolean =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        .invoke(bus, java.lang.Long.valueOf(millis))
-      true
-    } catch { case NonFatal(_) => false }
+    * delivered every event posted so far, so a listener's counts are
+    * complete. A bus that does not drain in time fails the caller with a
+    * `TimeoutException` naming the wait: a reader must never go on with
+    * counts that may be incomplete. */
+  def drainListenerBus(spark: SparkSession, millis: Long): Unit =
+    try org.apache.spark.sql.graft.ColumnBridge.drainListenerBus(spark.sparkContext, millis)
+    catch { case e: java.util.concurrent.TimeoutException =>
+      throw new java.util.concurrent.TimeoutException(
+        s"listener bus not drained within $millis ms: ${e.getMessage}")
+    }
 
   /** One concurrent map per session, for state a session reuses across
     * queries (resolved scans, store relations, fitted bases, prepared RAG
@@ -363,13 +380,7 @@ object SessionOps {
     * budget or Spark's 8 GB hard limit. One pass over the n-row payload
     * table is noise next to the pair join it gates; callers skip it when
     * the estimate is far from the boundary (LshJoin.measuredBytes). */
-  def payloadBytes(df: DataFrame): Long = {
-    import org.apache.spark.sql.functions._
-    val perRow = df.schema.fields.map { f =>
-      colBytes(f).getOrElse(lit(8L))
-    }.reduceLeft(_ + _) + lit(32L)
-    df.agg(coalesce(sum(perRow), lit(0L))).head().getLong(0)
-  }
+  def payloadBytes(df: DataFrame): Long = payloadBytesRows(df)._1
 
   /** [[payloadBytes]] plus the frame's row count, in the SAME single
     * narrow aggregate — for callers that need the average per-row

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -22,23 +21,24 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * The rewrite drops the DISTINCT flag because HLL++ is insensitive to
   * duplicates by construction.
   *
-  * Registered through BOTH extension paths: `injectOptimizerRule` in
-  * [[GraftExtensions]] for sessions built with the extension, and
-  * [[ApproxDistinctRewrite.install]] (`experimental.extraOptimizations`)
-  * for sessions the harness already constructed. Multi-distinct
-  * aggregates are only caught on the injectOptimizerRule path (the
-  * experimental batch runs after Catalyst's distinct-expand rewrite);
-  * single-distinct — the common shape — rewrites on either path. */
+  * Installed on every graft session by [[GraftExtensions.install]], so the
+  * flag works in Bench, Verify and Explain sessions alike. The rule runs in
+  * the optimizer's user-provided batch, after Catalyst has expanded
+  * multi-distinct aggregates: single-distinct — the common shape —
+  * rewrites, and a multi-distinct aggregate stays exact. With the flag
+  * off the plan is returned as it is. A malformed value of either key
+  * throws IllegalArgumentException naming the key and the value. */
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {
   val ENABLED_KEY = "spark.graft.approxDistinct.enabled"
   val RSD_KEY = "spark.graft.approxDistinct.rsd"
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    // Parse defensively: a malformed setting must surface as "flag off",
-    // not as an optimizer exception failing every query in the session.
-    if (!conf.getConfString(ENABLED_KEY, "false").equalsIgnoreCase("true")) return plan
-    val rsd = conf.getConfString(RSD_KEY, "0.05").toDoubleOption
-      .filter(r => r > 0.0 && r < 1.0).getOrElse(0.05)
+    if (!setting(ENABLED_KEY, false)(_.toBoolean)) return plan
+    val rsd = setting(RSD_KEY, 0.05) { v =>
+      val r = v.toDouble
+      require(r > 0.0 && r < 1.0, "rsd must lie in (0, 1)")
+      r
+    }
     plan.transformUp {
       case agg: Aggregate =>
         agg.transformExpressionsUp {
@@ -49,10 +49,8 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** Idempotent registration on an already-built session. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(ApproxDistinctRewrite)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
-    }
+  /** `key` in the conf the rule runs under, read as
+    * [[graft.ops.SessionOps.graftConf]] reads it. */
+  private def setting[T](key: String, default: T)(parse: String => T): T =
+    graft.ops.SessionOps.parseConf(key, Option(conf.getConfString(key, null)), default)(parse)
 }

@@ -194,8 +194,8 @@ sealed trait AsOfDirection
 case object AsOfBackward extends AsOfDirection
 case object AsOfForward extends AsOfDirection
 
-/** User-facing constructor: builds the logical node from two DataFrames and
-  * installs the strategy on the session (idempotent). */
+/** User-facing constructor: builds the logical node from two DataFrames,
+  * with graft installed on the session ([[GraftExtensions.install]]). */
 object AsOfJoin {
   def apply(left: DataFrame, right: DataFrame,
             leftKey: String, rightKey: String,
@@ -204,9 +204,7 @@ object AsOfJoin {
             direction: AsOfDirection = AsOfBackward,
             rightTieBreak: Option[String] = None): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    GraftExtensions.install(spark)
     val lPlan = org.apache.spark.sql.graft.ColumnBridge.logicalPlan(left)
     val rPlan = org.apache.spark.sql.graft.ColumnBridge.logicalPlan(right)
     def resolve(p: LogicalPlan, n: String): Expression =

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -36,10 +35,9 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * the risk for that rare encoding; those filters stay correct, just
   * unpruned.
   *
-  * Registered like [[ApproxDistinctRewrite]]: `injectOptimizerRule` for
-  * extension-built sessions and [[NanosRangePushdown.install]] for
-  * already-built ones (Tables.load installs it whenever it sees a raw
-  * numeric encoding). Runs in the user-provided batch — AFTER operator
+  * Installed on a session with graft's other planner pieces
+  * ([[GraftExtensions.install]]); a filter with no decoded raw-long
+  * comparison is left as it is. Runs in the user-provided batch — AFTER operator
   * optimization has pushed the filter through the normalize Project and
   * constant-folded the literals, so the match shapes below are exactly
   * what arrives. Idempotent under the batch's fixed point: an already-
@@ -134,11 +132,4 @@ object NanosRangePushdown extends Rule[LogicalPlan] with PredicateHelper {
       if (extras.isEmpty) f
       else Filter(extras.foldLeft(cond)(And(_, _)), child)
   }
-
-  /** Idempotent registration on an already-built session. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(NanosRangePushdown)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ NanosRangePushdown
-    }
 }

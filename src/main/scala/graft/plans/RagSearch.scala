@@ -52,15 +52,13 @@ case class RagSearch(
 
 object RagSearch {
   /** Builds the node over `store` (columns [[RagPlans.StoreColumns]], the
-    * ticker filter applied) and a `q_emb` query frame, and installs the
-    * planner strategy on the session (idempotent, like [[AsOfJoin]]).
+    * ticker filter applied) and a `q_emb` query frame, with graft
+    * installed on the session ([[GraftExtensions.install]]).
     * `dist` and `score` are built over the children's attributes
     * directly. Pure plan construction: it starts no job. */
   def apply(spec: QuerySpec, store: DataFrame, queryVec: DataFrame): DataFrame = {
     val spark = store.sparkSession
-    if (!spark.experimental.extraStrategies.contains(RagSearchStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RagSearchStrategy
+    GraftExtensions.install(spark)
     val s = ColumnBridge.logicalPlan(store.select(RagPlans.StoreColumns.map(col): _*))
     val q = ColumnBridge.logicalPlan(queryVec.select("q_emb"))
     val Seq(vecId, embedding, ticker, ts) = s.output

@@ -74,13 +74,11 @@ object UpsertMerge {
     }
 
   /** The upsert of `batch` into `store` as one [[UpsertMerge]] node, with
-    * the planner strategy installed on the session (idempotent, like
-    * [[RagSearch]]). Pure plan construction: it starts no job. */
+    * graft installed on the session ([[GraftExtensions.install]]). Pure
+    * plan construction: it starts no job. */
   def apply(store: DataFrame, batch: DataFrame, retainType: String, retainDays: Int): DataFrame = {
     val spark = store.sparkSession
-    if (!spark.experimental.extraStrategies.contains(UpsertMergeStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ UpsertMergeStrategy
+    GraftExtensions.install(spark)
     val union = store.unionByName(batch, allowMissingColumns = true)
     val (s, b, output) = ColumnBridge.logicalPlan(union) match {
       case u @ Union(Seq(s, b), _, _) => (s, b, u.output)

@@ -13,16 +13,6 @@ case class SnapshotMsg(ticker: String, publish_time: Long, current_price: Double
 /** Kept document emitted by the streaming near-dup dedup. */
 case class DocKeep(doc_id: Long, text: String)
 
-/** Input row of [[StreamOps.fuzzyDedupStream]] after signature keying. */
-case class FuzzyDocIn(k: String, doc_id: Long, text: String, n_chars: Long)
-
-/** Per-bucket state of [[StreamOps.fuzzyDedupStream]]: the claimants'
-  * ids, texts and lengths (texts are needed for the edit-distance
-  * verify; parallel Seqs keep the encoder a plain product of
-  * primitive arrays). Bounded by [[StreamOps.FUZZY_CLAIMANT_CAP]] per
-  * bucket × distinct buckets — corpus diversity, never stream length. */
-case class FuzzyClaimants(ids: Seq[Long], texts: Seq[String], lens: Seq[Long])
-
 /** Input row of [[StreamOps.fuzzyDedupStreamRotating]]: the coarse group
   * key, the doc, its regime at arrival time, and its first-band minhash
   * vector up to the rotation ceiling. */
@@ -327,17 +317,19 @@ object StreamOps {
     * and the store's partitions that returns the batch's rows and each
     * partition's max event time, and the narrow merge of each store
     * partition with the batch rows that hash to it, materialized by
-    * [[SessionOps.truncate]] (which honours the reliable-checkpoint mode).
+    * [[SessionOps.truncate]] (which honours the reliable-checkpoint mode
+    * and keeps the merge's hash partitioning).
     * `batch` is evaluated ONCE (inside `foreachBatch` it is an opaque RDD
     * whose lineage is the whole decode/dedup/enrich chain). The driver
     * holds the batch's latest row per id, so the trigger's size bounds a
     * batch.
     *
     * The result is hash-partitioned by `id` into
-    * `spark.sql.shuffle.partitions` partitions and keeps that through a
-    * later `localCheckpoint()`, so the store is shuffled only when it is
-    * not (the first batch, in practice). The store must hold at most one
-    * row per id, as every result of this function does.
+    * `spark.sql.shuffle.partitions` partitions and declares it, as every
+    * [[SessionOps.truncate]] does, and a later `localCheckpoint()` keeps
+    * it, so the store is shuffled only when it is not (the first batch,
+    * in practice). The store must hold at most one row per id, as every
+    * result of this function does.
     *
     * Ties: `publish_time` DESC NULLS LAST, then every orderable column
     * ASC NULLS FIRST ([[graft.plans.UpsertMerge.latestFirst]]); a store
@@ -349,10 +341,8 @@ object StreamOps {
     * has superseded it and no reader needs it, release it with
     * [[SessionOps.releaseQuiet]]. */
   def upsertBatch(store: DataFrame, batch: DataFrame,
-                  retainType: String, retainDays: Int): DataFrame = {
-    val merge = graft.plans.UpsertMerge(store, batch, retainType, retainDays)
-    org.apache.spark.sql.graft.ColumnBridge.keepPartitioning(merge, SessionOps.truncate(merge))
-  }
+                  retainType: String, retainDays: Int): DataFrame =
+    SessionOps.truncate(graft.plans.UpsertMerge(store, batch, retainType, retainDays))
 
   /** T3 (keyed-state form): the LATEST_* singleton snapshot as explicit
     * streaming state — one state row per key holding the latest-by-event-
@@ -430,9 +420,9 @@ object StreamOps {
       .toDF()
   }
 
-  /** Per-bucket claimant cap of [[fuzzyDedupStream]]: past this many
-    * verified-distinct docs in one signature bucket, new mates are
-    * admitted UNVERIFIED — recall degrades (a dup of the 9th claimant
+  /** Per-fine-bucket claimant cap of the streaming fuzzy dedup: past
+    * this many verified-distinct docs in one signature bucket, new mates
+    * are admitted UNVERIFIED — recall degrades (a dup of the 9th claimant
     * slips through), correctness never does (no false drop), and state
     * per bucket stays O(cap) texts instead of growing with a
     * pathological bucket's population. */
@@ -446,87 +436,48 @@ object StreamOps {
     * (the batch query's quadratic hash family, rows 0..r−1, over the
     * same polyHash gram codes — stream and batch bucket identically by
     * construction) claims a (lang, signature) bucket. Later bucket-mates
-    * run the batch query's exact verify against the claimants — the
-    * 5·min ≥ 4·max length prune, then capped levenshtein ≤ ⌊max/5⌋ via
-    * the SAME `UTF8String.levenshteinDistance` kernel Spark's 3-arg
-    * `levenshtein` calls (the bigram-L1 prune is skipped: it is a
-    * lossless pre-filter, so the kept/dropped outcome is identical) —
-    * and DROP as dups on a hit, or JOIN the claimant set on a miss
-    * (MinHash buckets legitimately hold several distinct docs).
+    * run the batch query's exact verify against the claimants
+    * ([[fuzzyIsDup]]) and DROP as dups on a hit, or JOIN the claimant
+    * set on a miss (MinHash buckets legitimately hold several distinct
+    * docs).
     *
     * Single band like the minhash twin: the stream is the lower-recall
     * single-probe posture (batch recovers recall with L OR-amplified
     * bands), which keeps the operator one stateful stage — so every
     * stream DROP corresponds to a batch `dedup_fuzzy_minhash` pair with
     * an earlier-arriving doc (StreamingSpec pins this subset-parity).
-    * State per bucket: ≤ [[FUZZY_CLAIMANT_CAP]] claimant texts. Within
-    * a batch, docs process in doc_id order, so replays are
-    * deterministic; delivery of kept docs is exactly-once under
-    * checkpointed recovery (StreamingRecoverySpec). `r` is the
+    * State per bucket: ≤ [[FUZZY_CLAIMANT_CAP]] claimant texts, each
+    * with its `r` minhashes. Within a batch, docs process in doc_id
+    * order, so replays are deterministic; delivery of kept docs is
+    * exactly-once under checkpointed recovery (StreamingRecoverySpec).
+    * `r` is the
     * signature's rows-per-band — the batch query derives it from the
     * measured corpus count (VectorQueries.adaptiveRows); a stream has
-    * no corpus count, so the caller pins the regime. */
-  def fuzzyDedupStream(docs: DataFrame, r: Int = 2): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val grams = array_sort(array_distinct(transform(
-      expr("transform(sequence(1, greatest(length(text) - 3, 1))," +
-        " i -> substring(text, i, 4))"),
-      g => graft.ops.TextOps.polyHash(g))))
-    val mh = (0 until r).map(p => graft.ops.TextOps.minHash(col("chs"),
-      graft.queries.TextQueries.fuzzyA(p), graft.queries.TextQueries.fuzzyB(p)))
-    val keyed = docs
-      .withColumn("chs", grams)
-      .select(
-        concat_ws("|", col("lang"), concat_ws("_", lit(0) +: mh: _*)).as("k"),
-        col("doc_id").cast("long").as("doc_id"), col("text"),
-        length(col("text")).cast("long").as("n_chars"))
-    implicit val inEnc = org.apache.spark.sql.Encoders.product[FuzzyDocIn]
-    implicit val outEnc = org.apache.spark.sql.Encoders.product[DocKeep]
-    implicit val stEnc = org.apache.spark.sql.Encoders.product[FuzzyClaimants]
-    keyed.as[FuzzyDocIn]
-      .groupByKey(_.k)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[FuzzyDocIn],
-         state: GroupState[FuzzyClaimants]) => {
-          val (kept, st) = fuzzyFold(
-            state.getOption.getOrElse(FuzzyClaimants(Nil, Nil, Nil)),
-            rows.toSeq)
-          state.update(st)
-          kept.iterator
-        })
-      .toDF()
-  }
+    * no corpus count, so the caller pins the regime.
+    *
+    * This is [[fuzzyDedupStreamRotating]] keyed at `r` with every row's
+    * regime pinned to `r`: the group key is the (lang, signature)
+    * bucket, every claimant in a group shares its first `r` minhashes
+    * and so is a mate of every row, and the per-bucket
+    * [[FUZZY_CLAIMANT_CAP]] is the cap that binds (it is below
+    * [[FUZZY_GROUP_CLAIMANT_CAP]]). */
+  def fuzzyDedupStream(docs: DataFrame, r: Int = 2): DataFrame =
+    fuzzyDedupStreamRotating(docs.withColumn("regime", lit(r)), rKey = r, rMax = r)
 
-  /** One bucket-batch of [[fuzzyDedupStream]]'s state machine, factored
-    * pure so the spec pins the claimant-cap and ordering semantics
-    * without crafting MinHash collisions: docs fold in doc_id order;
-    * each non-dup is kept and (below [[FUZZY_CLAIMANT_CAP]]) becomes a
-    * claimant. */
-  private[graft] def fuzzyFold(
-      st0: FuzzyClaimants, docs: Seq[FuzzyDocIn])
-      : (Seq[DocKeep], FuzzyClaimants) = {
-    var st = st0
-    val kept = Seq.newBuilder[DocKeep]
-    docs.sortBy(_.doc_id).foreach { d =>
-      if (!fuzzyIsDup(st, d.text, d.n_chars)) {
-        kept += DocKeep(d.doc_id, d.text)
-        if (st.ids.size < FUZZY_CLAIMANT_CAP)
-          st = FuzzyClaimants(
-            st.ids :+ d.doc_id, st.texts :+ d.text, st.lens :+ d.n_chars)
-      }
-    }
-    (kept.result(), st)
-  }
-
-  /** The verify of [[fuzzyDedupStream]], factored pure so the spec can
-    * pin the claimant-cap and threshold arithmetic without crafting
-    * MinHash collisions: true iff any claimant passes the batch query's
-    * length prune AND its capped levenshtein gate. */
+  /** The verify of the streaming fuzzy dedup, factored pure so the spec
+    * can pin the claimant-cap and threshold arithmetic without crafting
+    * MinHash collisions: true iff any claimant (`texts` with their
+    * lengths `lens`) passes the batch query's length prune
+    * (5·min ≥ 4·max) AND its levenshtein ≤ ⌊max/5⌋ gate, computed by the
+    * SAME capped `UTF8String.levenshteinDistance` kernel Spark's 3-arg
+    * `levenshtein` calls. The batch query's bigram-L1 prune is skipped:
+    * it is a lossless pre-filter, so the kept/dropped outcome is
+    * identical. */
   private[graft] def fuzzyIsDup(
-      st: FuzzyClaimants, text: String, nChars: Long): Boolean = {
+      texts: Seq[String], lens: Seq[Long], text: String, nChars: Long): Boolean = {
     val u = org.apache.spark.unsafe.types.UTF8String.fromString(text)
-    st.texts.indices.exists { i =>
-      val la = st.lens(i); val lb = nChars
+    texts.indices.exists { i =>
+      val la = lens(i); val lb = nChars
       val mx = math.max(la, lb); val mn = math.min(la, lb)
       mn * 5 >= mx * 4 && {
         // ⌊max/5⌋ cap = the batch CAST(greatest(la,lb)/5 AS INT); the
@@ -534,7 +485,7 @@ object StreamOps {
         // dist ≤ max/5 gate exactly (dist is integral).
         val lim = (mx / 5.0).toInt
         val d = org.apache.spark.unsafe.types.UTF8String
-          .fromString(st.texts(i)).levenshteinDistance(u, lim)
+          .fromString(texts(i)).levenshteinDistance(u, lim)
         d >= 0
       }
     }
@@ -550,11 +501,11 @@ object StreamOps {
     * stays O(cap) texts. */
   val FUZZY_GROUP_CLAIMANT_CAP = 64
 
-  /** [[fuzzyDedupStream]] with MID-STREAM REGIME ROTATION (r13 verdict
-    * item 7): the fixed-r twin pins its banding at plan time because a
-    * stream has no corpus count, so a long-running ingest could never
-    * adopt the batch-measured regime as the corpus grows. This variant
-    * can, with zero re-keying:
+  /** The streaming fuzzy dedup's one state machine, with MID-STREAM
+    * REGIME ROTATION (r13 verdict item 7): [[fuzzyDedupStream]] pins its
+    * banding at plan time because a stream has no corpus count, so a
+    * long-running ingest on it could never adopt the batch-measured
+    * regime as the corpus grows. This operator can, with zero re-keying:
     *
     *  - state is keyed by the COARSEST regime `rKey` (the signature
     *    prefix of minhashes 0..rKey−1) — and since a band signature at
@@ -640,9 +591,7 @@ object StreamOps {
       val mates = st.sigs.indices.filter { i =>
         st.sigs(i).take(g) == d.mh.take(g)
       }
-      val isDup = fuzzyIsDup(FuzzyClaimants(
-        mates.map(st.ids), mates.map(st.texts), mates.map(st.lens)),
-        d.text, d.n_chars)
+      val isDup = fuzzyIsDup(mates.map(st.texts), mates.map(st.lens), d.text, d.n_chars)
       if (!isDup) {
         kept += DocKeep(d.doc_id, d.text)
         if (mates.size < FUZZY_CLAIMANT_CAP &&

@@ -517,7 +517,8 @@ object BroadcastBound {
     * listener bus is asynchronous, so labels are best-effort (set the
     * label before constructing each query; a violation reported under a
     * neighboring label still fails the gate) and callers must allow the
-    * bus to drain (see [[drainWait]]) before reading [[hits]]. */
+    * bus to drain ([[graft.ops.SessionOps.drainListenerBus]]) before
+    * reading [[hits]]. */
   final class ExecutionAuditListener
       extends org.apache.spark.sql.util.QueryExecutionListener {
     private val labelRef = new java.util.concurrent.atomic.AtomicReference[String]("?")
@@ -533,35 +534,5 @@ object BroadcastBound {
     override def onFailure(funcName: String,
         qe: org.apache.spark.sql.execution.QueryExecution,
         error: Exception): Unit = ()
-  }
-
-  /** Deterministic bus drain: QueryExecutionListener events ride the
-    * listener bus's shared queue, so `LiveListenerBus.waitUntilEmpty`
-    * is the real handshake — once it returns, every queued onSuccess
-    * callback has run and [[ExecutionAuditListener.hits]] is complete
-    * ([[graft.ops.SessionOps.drainListenerBus]]). If the wait fails
-    * (timeout on a pathologically backlogged bus, no active
-    * session), fall back to the previous wall-clock heuristic — sleep
-    * in slices until the hit count has been stable for 3 consecutive
-    * polls AND a minimum wall floor has passed (the floor matters
-    * because a backlogged bus can deliver its first event hundreds of
-    * ms after the last execution). */
-  def drainWait(l: ExecutionAuditListener, millis: Long = 3000L): Unit = {
-    val drained = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .exists(graft.ops.SessionOps.drainListenerBus(_, millis))
-    if (!drained) {
-      val start = System.currentTimeMillis()
-      val floor = math.min(1000L, millis)
-      var last = -1
-      var stable = 0
-      val deadline = start + millis
-      while ((stable < 3 || System.currentTimeMillis() - start < floor) &&
-          System.currentTimeMillis() < deadline) {
-        Thread.sleep(100)
-        val n = l.hits.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
   }
 }

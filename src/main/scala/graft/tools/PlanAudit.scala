@@ -342,18 +342,19 @@ object PlanAudit {
     val hintOffenses = scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
     val rows = selected
       .flatMap { case (name, fn) =>
-        try {
-          // Fence waived labels against async misattribution: drain the
-          // bus BEFORE a waived query's label goes live (so an earlier
-          // query's straggler can't land on the waiver) and AFTER its
-          // construction (so its own stragglers don't leak onto the next
-          // label). Only ~4 queries carry waivers, so the cost is small;
-          // a stray hit can then only ever land on a ZERO-budget label,
-          // where it always fails the gate.
-          if (maxWaivedHints(name) > 0) BroadcastBound.drainWait(listener, 1500)
-          listener.setLabel(name)
+        // Fence waived labels against async misattribution: drain the
+        // bus BEFORE a waived query's label goes live (so an earlier
+        // query's straggler can't land on the waiver) and AFTER its
+        // construction (so its own stragglers don't leak onto the next
+        // label). Only ~4 queries carry waivers, so the cost is small;
+        // a stray hit can then only ever land on a ZERO-budget label,
+        // where it always fails the gate. A drain that times out fails
+        // the audit (outside the per-query error catch).
+        val fenced = maxWaivedHints(name) > 0
+        if (fenced) graft.ops.SessionOps.drainListenerBus(spark, 1500)
+        listener.setLabel(name)
+        val row = try {
           val qe = fn(spark, sfDir).queryExecution
-          if (maxWaivedHints(name) > 0) BroadcastBound.drainWait(listener, 1500)
           // Bounded-hint rule: every broadcast hint in the ANALYZED plan
           // must sit on a subtree provably bounded independent of SF —
           // the verdict is deferred until sub-execution (checkpoint
@@ -400,6 +401,8 @@ object PlanAudit {
             println(f"$name%-28s AUDIT ERROR: ${e.getMessage.take(80)}")
             None
         }
+        if (fenced) graft.ops.SessionOps.drainListenerBus(spark, 1500)
+        row
       }
     // Fold the sub-execution (checkpoint-segment) hint findings into the
     // SAME per-query budget as the top-level findings — a separate
@@ -407,7 +410,7 @@ object PlanAudit {
     // letting a checkpoint-hidden unbounded hint ride an unused waiver.
     // The prewarmed store builds never re-fire here, so sub-exec counts
     // are the checkpoint segments' own hints.
-    BroadcastBound.drainWait(listener)
+    graft.ops.SessionOps.drainListenerBus(spark, 3000)
     spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     val subExec = listener.hits.asScala.toSeq.groupBy(_._1)

@@ -166,7 +166,7 @@ object ScalingProbe {
     // SCALING_REPS=1 for the expensive decades (min-of-reps estimator
     // degrades to a single sample; the r12 fuzzymh sf10 probe already
     // recorded n:1 this way).
-    val reps = sys.env.get("SCALING_REPS").map(_.toInt).getOrElse(2)
+    val reps = graft.Bench.envOr("SCALING_REPS", "2")(_.toIntOption.filter(_ > 0))
     // Big-decade probes hit the size-gated payload broadcasts, whose
     // gate clamps to 60% of spark.driver.maxResultSize
     // (SessionOps.broadcastBudget): run them with

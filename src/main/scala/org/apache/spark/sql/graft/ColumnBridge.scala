@@ -25,12 +25,16 @@ object ColumnBridge {
     case _ => (c, false)
   }
 
-  /** Temp-function registration on a live session (sessionState is
-    * private[sql]). */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
+  /** The session's function registry (sessionState is private[sql]). */
+  def functionRegistry(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
+    spark.sessionState.functionRegistry
+
+  /** Waits until the listener bus has delivered every event posted so
+    * far (`listenerBus` is private[spark]); throws `TimeoutException` when
+    * it does not drain within `millis`. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, millis: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(millis)
 
   /** Analyzed logical plan of a DataFrame (queryExecution is private[sql]). */
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
@@ -43,7 +47,8 @@ object ColumnBridge {
     * none (`AdaptiveSparkPlanExec` is a leaf of unknown partitioning), so
     * a checkpoint of an adaptive plan forgets a partitioning its rows
     * have. This declares a hash partitioning of the final plan; any other
-    * pair is returned as it is. */
+    * pair is returned as it is. `graft.ops.SessionOps.truncate` applies it
+    * to every checkpoint it makes. */
   def keepPartitioning(df: org.apache.spark.sql.DataFrame,
                        checkpointed: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

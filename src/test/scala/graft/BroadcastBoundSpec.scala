@@ -204,7 +204,7 @@ class BroadcastBoundSpec extends AnyFunSuite {
         .localCheckpoint()
       assert(offenses(hidden).isEmpty,
         "top-level plan must be blind to the checkpointed hint (the premise)")
-      BroadcastBound.drainWait(l, 10000L)
+      graft.ops.SessionOps.drainListenerBus(spark, 10000L)
       import scala.jdk.CollectionConverters._
       assert(l.hits.asScala.exists(_._2.contains("UNBOUNDED")),
         "the listener must see the hint inside the checkpoint's own execution")
@@ -282,7 +282,7 @@ class BroadcastBoundSpec extends AnyFunSuite {
         // straggler can only land on a zero-budget label, where it
         // always fails).
         if (tools.PlanAudit.maxWaivedHints(name) > 0)
-          BroadcastBound.drainWait(listener, 1500)
+          graft.ops.SessionOps.drainListenerBus(spark, 1500L)
         listener.setLabel(name)
         topOff(name) =
           try {
@@ -295,9 +295,9 @@ class BroadcastBoundSpec extends AnyFunSuite {
             Nil
           }
         if (tools.PlanAudit.maxWaivedHints(name) > 0)
-          BroadcastBound.drainWait(listener, 1500)
+          graft.ops.SessionOps.drainListenerBus(spark, 1500L)
       }
-      BroadcastBound.drainWait(listener)
+      graft.ops.SessionOps.drainListenerBus(spark, 3000L)
       import scala.jdk.CollectionConverters._
       // One budget across BOTH surfaces (top-level + checkpoint
       // segments) — a separate sub-exec comparison would double every

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.ApproxDistinctRewrite
+import graft.plans.{ApproxDistinctRewrite, GraftExtensions}
 
 /** The session-flagged exact→approx distinct rewrite: off by default,
   * swaps count(DISTINCT) for HLL++ when enabled, estimates within the
@@ -28,13 +28,13 @@ class PlanRewriteSpec extends AnyFunSuite {
     }.flatten
 
   test("flag off: plan keeps the exact distinct aggregate") {
-    ApproxDistinctRewrite.install(spark)
+    GraftExtensions.install(spark)
     spark.conf.set(ApproxDistinctRewrite.ENABLED_KEY, "false")
     assert(hllAggs(distinctUsers).isEmpty)
   }
 
   test("flag on: count(DISTINCT) becomes HLL++, estimate within rsd") {
-    ApproxDistinctRewrite.install(spark)
+    GraftExtensions.install(spark)
     spark.conf.set(ApproxDistinctRewrite.ENABLED_KEY, "true")
     try {
       val approx = distinctUsers
@@ -57,5 +57,29 @@ class PlanRewriteSpec extends AnyFunSuite {
         "SELECT event_type, count(DISTINCT user_id) AS d FROM ev_rewrite GROUP BY event_type")
       assert(hllAggs(viaSql).nonEmpty)
     } finally spark.conf.set(ApproxDistinctRewrite.ENABLED_KEY, "false")
+  }
+
+  test("a malformed approx-distinct setting fails loudly, naming key and value") {
+    import ApproxDistinctRewrite.{ENABLED_KEY, RSD_KEY}
+    Seq(ENABLED_KEY -> "yes", RSD_KEY -> "1.5", RSD_KEY -> "tight").foreach { case (key, v) =>
+      spark.conf.set(ENABLED_KEY, "true")
+      spark.conf.set(key, v)
+      val e =
+        try intercept[IllegalArgumentException](distinctUsers.queryExecution.optimizedPlan)
+        finally { spark.conf.unset(RSD_KEY); spark.conf.set(ENABLED_KEY, "false") }
+      assert(e.getMessage.contains(key) && e.getMessage.contains(v), e.getMessage)
+    }
+  }
+
+  test("a newSession() gets graft from Tables.load: SQL functions and the approx-distinct rewrite") {
+    val s = spark.newSession()
+    graft.model.Tables.events(s, "/root/testdata/sf0.01").createOrReplaceTempView("ev_fresh")
+    val c = s.sql("SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
+      .collect().head.getDouble(0)
+    assert(c == 1.0)
+    s.conf.set(ApproxDistinctRewrite.ENABLED_KEY, "true")
+    val viaSql = s.sql(
+      "SELECT event_type, count(DISTINCT user_id) AS d FROM ev_fresh GROUP BY event_type")
+    assert(hllAggs(viaSql).nonEmpty, viaSql.queryExecution.optimizedPlan.treeString)
   }
 }

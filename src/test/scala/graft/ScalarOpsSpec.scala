@@ -83,8 +83,8 @@ class ScalarOpsSpec extends AnyFunSuite {
     assert(kept == Set("2024-01-01 00:00:00", "2023-01-01 00:00:00", "2024-01-16 00:00:00"))
   }
 
-  test("cosine_sim is callable from SQL after registration (GraftFunctions)") {
-    graft.plans.GraftFunctions.register(spark)
+  test("cosine_sim is callable from SQL after install (GraftExtensions)") {
+    graft.plans.GraftExtensions.install(spark)
     val got = spark.sql(
       "SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
       .collect().head.getDouble(0)

@@ -52,6 +52,50 @@ class SessionOpsSpec extends AnyFunSuite {
     assert(enclosing.exists(_.trim.startsWith("def localSession(")), enclosing)
   }
 
+  /** The sites in `text` that attach planner pieces to a session or fix
+    * up a checkpoint's layout outside their one path, as `path:line`:
+    * an assignment of `extraStrategies`/`extraOptimizations` or a
+    * function registration outside `GraftExtensions` and SessionOps'
+    * `SessionMaps` holder, and a `keepPartitioning` call outside
+    * `SessionOps.truncate`. A site's owner is the nearest member of the
+    * file's top-level object above it. */
+  private def secondPaths(path: String, text: String): Seq[String] = {
+    val Attach = """\b(?:extraStrategies|extraOptimizations)\s*=(?!=)|\b(?:registerFunction|createOrReplaceTempFunction)\s*\(""".r
+    val Layout = """(?<!def )\bkeepPartitioning\s*\(""".r
+    val Member = """^  (?:(?:private|final|override|lazy)(?:\[\w+\])? )*(?:def|val|object|class) (\w+)""".r.unanchored
+    val lines = text.split("\n", -1).toIndexedSeq
+    def owner(line: Int): String =
+      lines.take(line + 1).reverseIterator.collectFirst { case Member(n) => n }.getOrElse("")
+    def sites(re: scala.util.matching.Regex, allowed: Int => Boolean): Seq[String] =
+      re.findAllMatchIn(text).map(m => text.take(m.start).count(_ == '\n'))
+        .filterNot(allowed).map(l => s"$path:${l + 1}").toSeq
+    val isSessionOps = path.endsWith("graft/ops/SessionOps.scala")
+    sites(Attach, l => path.endsWith("graft/plans/GraftExtensions.scala") ||
+      isSessionOps && owner(l) == "SessionMaps") ++
+      sites(Layout, l => isSessionOps && owner(l) == "truncate")
+  }
+
+  test("graft attaches to a session and keeps a checkpoint's layout on one path each") {
+    // A second install path drifts: a piece added to one list is missing
+    // from sessions built the other way (an optimizer rule installed by
+    // one spec only was a no-op everywhere else).
+    val sample = Seq(
+      "object X {",
+      "  def f(s: SparkSession): Unit = {",
+      "    s.experimental.extraStrategies = s.experimental.extraStrategies :+ S",
+      "    reg.createOrReplaceTempFunction(\"f\", b, \"scala_udf\")",
+      "    ColumnBridge.keepPartitioning(df, ck)",
+      "  }",
+      "}").mkString("\n")
+    assert(secondPaths("X.scala", sample) == Seq("X.scala:3", "X.scala:4", "X.scala:5"))
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val files = scala.util.Using.resource(Files.walk(Paths.get("src/main")))(_.iterator.asScala.toList)
+      .filter(_.toString.endsWith(".scala"))
+    val found = files.flatMap(f => secondPaths(f.toString, Files.readString(f)))
+    assert(found.isEmpty, s"second paths: ${found.mkString(", ")}")
+  }
+
   test("a malformed SPARK_GRAFT_CPUS fails loudly, naming variable and value") {
     assert(SessionOps.parseCpus(Some(" 6 ")) == 6)
     assert(SessionOps.parseCpus(None) ==

@@ -35,9 +35,8 @@ object SparkTest {
   }
 
   /** Waits until the (async) listener bus has delivered every queued
-    * event; on failure, a one-second sleep. */
-  def drainBus(): Unit =
-    if (!graft.ops.SessionOps.drainListenerBus(session, 5000L)) Thread.sleep(1000)
+    * event; a bus that does not drain fails the test. */
+  def drainBus(): Unit = graft.ops.SessionOps.drainListenerBus(session, 5000L)
 
   private val JobTag = "graft.test.jobTag"
 
@@ -90,6 +89,7 @@ object SparkTest {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s.sparkContext.addSparkListener(RetryAudit)
+    graft.plans.GraftExtensions.install(s)
     s
   }
 }

@@ -377,17 +377,20 @@ class StreamingSpec extends AnyFunSuite {
     // released, so the persisted RDDs stay bounded however many batches run
     val sc = spark.sparkContext
     val persistedBefore = sc.getPersistentRDDs.size
-    val persisted = scala.collection.mutable.ArrayBuffer[Int]()
+    // per foreachBatch call: whether its batch held rows, and the
+    // persisted RDDs after its upsert
+    val persisted = scala.collection.mutable.ArrayBuffer[(Boolean, Int)]()
     @volatile var store: org.apache.spark.sql.DataFrame = null
     val mergeBatch = (batch: org.apache.spark.sql.DataFrame, _: Long) => {
       val b = batch.drop("ingest_ts", "event_ts", "kafka_key")
+      val heldRows = !b.isEmpty
       val cur =
         if (store == null)
           spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), b.schema)
         else store
       store = StreamOps.upsertBatch(cur, b, "news", 30)
       graft.ops.SessionOps.releaseQuiet(cur)
-      persisted.synchronized { persisted += sc.getPersistentRDDs.size }
+      persisted.synchronized { persisted += (heldRows -> sc.getPersistentRDDs.size) }
       ()
     }
     val q = deduped.writeStream.outputMode("append").foreachBatch(mergeBatch).start()
@@ -401,8 +404,12 @@ class StreamingSpec extends AnyFunSuite {
         (Seq("LATEST_TECH_X", "news_a", "news_b") ++ later.map(k => s"news_$k")).sorted)
       val tech = rows.head
       assert(tech.getLong(3) == now - 500 && tech.getDouble(4) == 11.0)
-      val counts = persisted.synchronized(persisted.toList)
-      assert(counts.size == 2 + later.size)
+      // One call per input file holds rows. A watermark-advancing
+      // no-data micro-batch may also call foreachBatch, before or after
+      // processAllAvailable() returns; such a call holds none.
+      val calls = persisted.synchronized(persisted.toList)
+      assert(calls.count(_._1) == 2 + later.size, s"calls (held rows, persisted): $calls")
+      val counts = calls.map(_._2)
       assert(counts.forall(_ <= persistedBefore + 1),
         s"persisted RDDs grew over the upserts: before $persistedBefore, after each $counts")
     } finally {
@@ -674,23 +681,27 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming fuzzy dedup: claimant cap bounds state, past-cap mates admit unverified") {
-    import graft.streaming.{FuzzyClaimants, FuzzyDocIn}
+    import graft.streaming.{FuzzyRotClaimants, FuzzyRotDocIn}
+    // The rows fuzzyDedupStream(r = 2) folds: every row of a bucket
+    // carries the bucket's signature and the pinned regime 2.
+    def doc(id: Long, text: String, nChars: Long) =
+      FuzzyRotDocIn("k", id, text, nChars, 2, Seq(7L, 11L))
     // 10 same-bucket docs that all FAIL the length prune pairwise
     // (lengths 100, 200, 400, ... — each > 5/4 of the previous), so every
     // one is verified-distinct: all kept, but only the first
     // FUZZY_CLAIMANT_CAP become claimants.
     val docs = (0 until 10).map { i =>
-      FuzzyDocIn("k", i.toLong, "x" * (100 << i), (100L << i))
+      doc(i.toLong, "x" * (100 << i), (100L << i))
     }
-    val (kept, st) = StreamOps.fuzzyFold(FuzzyClaimants(Nil, Nil, Nil), docs)
+    val (kept, st) = StreamOps.fuzzyRotFold(FuzzyRotClaimants(Nil, Nil, Nil, Nil), docs)
     assert(kept.map(_.doc_id) == (0L until 10L))
     assert(st.ids.size == StreamOps.FUZZY_CLAIMANT_CAP,
       s"state must cap at ${StreamOps.FUZZY_CLAIMANT_CAP}, got ${st.ids.size}")
     // a dup of a CLAIMANT still drops; a dup of a past-cap doc admits
     // (the documented recall floor, never a false drop)
-    val (kept2, _) = StreamOps.fuzzyFold(st,
-      Seq(FuzzyDocIn("k", 100L, "x" * 100, 100L),          // dup of claimant 0
-        FuzzyDocIn("k", 101L, "x" * (100 << 9), 100L << 9))) // dup of past-cap doc 9
+    val (kept2, _) = StreamOps.fuzzyRotFold(st,
+      Seq(doc(100L, "x" * 100, 100L),                // dup of claimant 0
+        doc(101L, "x" * (100 << 9), 100L << 9)))     // dup of past-cap doc 9
     assert(kept2.map(_.doc_id) == Seq(101L),
       s"claimant dup must drop, past-cap dup must admit; got ${kept2.map(_.doc_id)}")
   }
